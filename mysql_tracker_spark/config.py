@@ -68,7 +68,8 @@ class JobConfig:
     # bloom-indexed columns (per-file bloom bitmaps stamped at write,
     # Delta bloom-index analogue): exact-value point reads on these
     # columns prune files via table.read_where_in even where min/max
-    # bounds cannot (high-cardinality values scattered across files)
+    # bounds cannot (high-cardinality values scattered across files);
+    # merge-on-read deltas carry no bitmaps until compaction
     bloom_cols: list[str] = field(default_factory=list)
     # declarative data-quality gates (quality.py::from_spec dicts):
     # `expectations` run per batch on the UPSERT rows before the

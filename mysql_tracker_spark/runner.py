@@ -33,8 +33,9 @@ import os
 import time
 import uuid
 from dataclasses import dataclass, field
+from typing import NamedTuple
 
-from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F, types as T
 
 from .lakestore import LakeTable
 from .operators.dedup import lww_latest
@@ -162,6 +163,51 @@ def _resolve_transform(spec):
     if not callable(fn):
         raise ValueError(f"transform {spec!r} resolved to a non-callable")
     return fn
+
+
+def config_kwargs(cfg) -> dict:
+    """:class:`CdcApplyJob` keywords for a
+    :class:`~mysql_tracker_spark.config.JobConfig`: everything except
+    the input and table paths, which every job front-end takes
+    positionally."""
+    from .quality import from_specs
+
+    policy_map = {"fail": "fail", "reset_earliest": "earliest", None: None}
+    if cfg.on_invalid_position not in policy_map:
+        # a typo must not silently DISABLE the validation the
+        # operator explicitly configured (errno-1236 analogue)
+        raise ValueError(
+            "on_invalid_position must be 'fail' or 'reset_earliest', "
+            f"got {cfg.on_invalid_position!r}"
+        )
+    return dict(
+        schema_name=cfg.schema_name,
+        table_name=cfg.table_name,
+        n_buckets=cfg.n_buckets,
+        files_per_batch=cfg.files_per_batch,
+        source_format=cfg.source_format,
+        start_file=cfg.start_file,
+        start_pos=cfg.start_pos,
+        reset_policy=policy_map[cfg.on_invalid_position],
+        on_destructive_ddl=cfg.on_destructive_ddl,
+        filter_regex=cfg.filter_regex,
+        allowlist=cfg.allowlist or None,
+        n_salts=cfg.n_salts,
+        quarantine_dir=cfg.quarantine_dir,
+        expectations=from_specs(cfg.expectations),
+        table_expectations=from_specs(cfg.table_expectations),
+        write_mode=cfg.write_mode,
+        mor_compact_threshold=cfg.mor_compact_threshold,
+        auto_split_rows_per_bucket=cfg.auto_split_rows_per_bucket,
+        auto_split_migrate_per_batch=cfg.auto_split_migrate_per_batch,
+        compact_sort_by=cfg.compact_sort_by,
+        compact_files_per_bucket=cfg.compact_files_per_bucket,
+        transform=_resolve_transform(cfg.transform),
+        bloom_cols=cfg.bloom_cols or None,
+        gtid_list=cfg.gtid_list,
+        gtid_set=cfg.gtid_set,
+        incident_policy=cfg.incident_policy,
+    )
 
 
 class IncidentError(RuntimeError):
@@ -298,16 +344,12 @@ class CdcApplyJob:
         # anti-joins the fenced xids out of the decoded DML
         self.gtid_list = gtid_list or None  # "" = no fence (empty
         self.gtid_set = gtid_set or None    # PREVIOUS_GTIDS preamble)
-        # validate + pre-parse the MySQL set ONCE at job build with the
-        # shared parser — the Column predicate and the driver-side
-        # carry decision then cannot disagree, and a malformed set
-        # fails here instead of mid-batch
+        # validate the MySQL set at job build with the shared parser, so
+        # a malformed set fails here instead of mid-batch
         if self.gtid_set is not None:
             from .operators.parse import parse_gtid_set
 
-            self._gtid_set_parsed = parse_gtid_set(self.gtid_set)
-        else:
-            self._gtid_set_parsed = None
+            parse_gtid_set(self.gtid_set)
         # C5 incident policy: an INCIDENT_EVENT (LogEvent.java:161-163,
         # "possibly lost events") past the fence either fails the batch
         # (default — an operator must decide, like reset_policy) or is
@@ -317,15 +359,15 @@ class CdcApplyJob:
                 f"incident_policy must be 'fail' or 'record', got {incident_policy!r}"
             )
         self.incident_policy = incident_policy
-        # auto skew escalation state (wire path; see AUTO_SALT_RATIO)
+        # auto skew escalation state (see AUTO_SALT_RATIO)
         self._escalated = False
-        # pipelined micro-batches (wire path): the run loop prefetches
+        # pipelined micro-batches (wire source): the run loop prefetches
         # the NEXT batch's JVM manifest pass concurrently with the
         # current batch's delta+merge (~12% of batch wall measured);
-        # consumed in _apply_wire, revalidated against the advanced
-        # watermark in _apply_wire_df
+        # revalidated against the advanced watermark by
+        # _WireSource.manifest when apply_batch consumes it
         self.pipeline_prefetch = pipeline_prefetch
-        # batch_id -> (Future[Row], (wm_file, wm_pos)); <=2 entries
+        # batch_id -> (Future[_Manifest], (wm_file, wm_pos)); <=2 entries
         self._prefetch: dict = {}
         # C2 bootstrap fallback (reference order: checkpoint first, then
         # config-supplied position — HandlerMagpieKafka.java:363-406)
@@ -393,7 +435,9 @@ class CdcApplyJob:
         self.compact_files_per_bucket = compact_files_per_bucket
         # bloom-indexed columns (lakestore per-file bloom bitmaps,
         # stamped at every write; read via table.read_where_in) —
-        # point-read pruning on high-cardinality non-key columns
+        # point-read pruning on high-cardinality non-key columns. Under
+        # write_mode="mor" the adopted deltas carry no bitmaps until
+        # compaction rewrites them (never skipped meanwhile)
         self.bloom_cols = list(bloom_cols) if bloom_cols else None
         # autonomous layout growth: once mean live rows/bucket exceeds
         # this threshold, split_buckets doubles the count (metadata-
@@ -428,57 +472,17 @@ class CdcApplyJob:
                 f"allowlist {self.allowlist!r} excludes the target table {target}"
             )
         self.table: LakeTable | None = None
-        self._input_names: list[str] | None = None
 
     @classmethod
-    def from_config(cls, spark: SparkSession, cfg) -> "CdcApplyJob":
+    def from_config(cls, spark: SparkSession, cfg, **overrides) -> "CdcApplyJob":
         """Build a job from a :class:`~mysql_tracker_spark.config.JobConfig`
-        (the reference's per-job JSON, O3)."""
-        from .quality import from_specs as _specs
-
-        policy_map = {"fail": "fail", "reset_earliest": "earliest", None: None}
-        if cfg.on_invalid_position not in policy_map:
-            # a typo must not silently DISABLE the validation the
-            # operator explicitly configured (errno-1236 analogue)
-            raise ValueError(
-                "on_invalid_position must be 'fail' or 'reset_earliest', "
-                f"got {cfg.on_invalid_position!r}"
-            )
-        policy = policy_map[cfg.on_invalid_position]
+        (the reference's per-job JSON, O3). ``overrides`` are constructor
+        keywords that win over the config's — options a JSON config
+        cannot carry (parsed expectations, ``branch``,
+        ``expire_keep_last``)."""
         return cls(
-            spark,
-            cfg.input_dir,
-            cfg.table_path,
-            schema_name=cfg.schema_name,
-            table_name=cfg.table_name,
-            n_buckets=cfg.n_buckets,
-            files_per_batch=cfg.files_per_batch,
-            source_format=cfg.source_format,
-            start_file=cfg.start_file,
-            start_pos=cfg.start_pos,
-            reset_policy=policy,
-            on_destructive_ddl=cfg.on_destructive_ddl,
-            filter_regex=cfg.filter_regex,
-            allowlist=cfg.allowlist or None,
-            n_salts=getattr(cfg, "n_salts", 0),
-            quarantine_dir=getattr(cfg, "quarantine_dir", None),
-            expectations=_specs(getattr(cfg, "expectations", None)),
-            table_expectations=_specs(getattr(cfg, "table_expectations", None)),
-            write_mode=getattr(cfg, "write_mode", "cow"),
-            mor_compact_threshold=getattr(cfg, "mor_compact_threshold", 8),
-            auto_split_rows_per_bucket=getattr(
-                cfg, "auto_split_rows_per_bucket", None
-            ),
-            auto_split_migrate_per_batch=getattr(
-                cfg, "auto_split_migrate_per_batch", 16
-            ),
-            compact_sort_by=getattr(cfg, "compact_sort_by", None),
-            compact_files_per_bucket=getattr(cfg, "compact_files_per_bucket", 1),
-            transform=_resolve_transform(getattr(cfg, "transform", None)),
-            bloom_cols=getattr(cfg, "bloom_cols", None) or None,
-            gtid_list=getattr(cfg, "gtid_list", None),
-            gtid_set=getattr(cfg, "gtid_set", None),
-            incident_policy=getattr(cfg, "incident_policy", "fail"),
+            spark, cfg.input_dir, cfg.table_path,
+            **{**config_kwargs(cfg), **overrides},
         )
 
     # ------------------------------------------------------------- lifecycle
@@ -1120,33 +1124,18 @@ class CdcApplyJob:
                 d, _s, q = (int(x) for x in bits)
                 if d in fence and q <= fence[d]:
                     return True
-        if self._gtid_set_parsed is not None and ":" in gtid:
+        if self.gtid_set is not None and ":" in gtid:
+            from .operators.parse import parse_gtid_set
+
             uuid_part, txn_part = gtid.split(":", 1)
             try:
                 txn = int(txn_part)
             except ValueError:
                 return False
-            for lo, hi in self._gtid_set_parsed.get(uuid_part, []):
+            for lo, hi in parse_gtid_set(self.gtid_set).get(uuid_part, []):
                 if lo <= txn <= hi:
                     return True
         return False
-
-    def _lww(self, keyed: DataFrame, payload_cols: list[str]) -> DataFrame:
-        if self.n_salts > 0:
-            from .operators.dedup import lww_latest_salted
-
-            return lww_latest_salted(keyed, self.key_cols, payload_cols, self.n_salts)
-        # max_by over struct payloads is NOT hash-aggregable (struct agg
-        # buffers fall back to SortAggregate), so the default
-        # partial+final plan SORTS the whole batch twice. Repartition by
-        # the grouping keys first: the groupBy reuses the exchange and
-        # runs ONE sort + one aggregation pass (measured 28% faster
-        # end-to-end at 32 cores). Map-side combine loses little here —
-        # pre-shuffle partitions hold mostly-unique keys — and per-key
-        # skew is bounded (hot CONVERSATIONS spread over their turns;
-        # for true single-key floods use n_salts).
-        keyed = keyed.repartition(*[F.col(c) for c in self.key_cols])
-        return lww_latest(keyed, self.key_cols, payload_cols)
 
     INPUT_MANIFEST = "_batches.json"
 
@@ -1252,280 +1241,302 @@ class CdcApplyJob:
         after the intervening commit, and the captured skew state
         makes the speculated LWW variant deterministic (documented
         one-batch escalation lag)."""
-        wm_file, wm_pos, _ = self.watermark()
+        wm = self.watermark()[:2]
         fut = pool.submit(
-            self._prefetch_work,
-            batch_id, paths, wm_file, wm_pos, self._escalated,
+            self._prefetch_work, batch_id, paths, wm, self._escalated
         )
-        self._prefetch[batch_id] = (fut, (wm_file, wm_pos))
+        self._prefetch[batch_id] = (fut, wm)
 
-    def _prefetch_work(
-        self, batch_id: int, paths: list[str], wm_file, wm_pos, escalated: bool
-    ):
+    def _prefetch_work(self, batch_id: int, paths: list[str], wm, escalated: bool):
         """Helper-thread body: manifest pass, then (when safe) the
-        speculative staged delta. Any failure in the speculative part
-        degrades to the synchronous path at consume time."""
+        speculative winners, materialized under ``_winners_<batch_id>``
+        so the consume side adopts them instead of recomputing the
+        decode+shuffle. Any failure in the speculative part degrades to
+        the synchronous path at consume time."""
         import shutil
 
-        from .schema import RAW_FRAME_SCHEMA
-
-        raw = self.spark.read.schema(RAW_FRAME_SCHEMA).parquet(*paths)
-        m = self._wire_manifest(raw, wm_file, wm_pos)
-        delta = None
-        eligible = (
-            int(m["n"] or 0) > 0
-            and self.quarantine_dir is None
-            and (
-                wm_file is None
-                or m["lo"] is None
-                or (wm_file, wm_pos) < (m["lo"]["file"], m["lo"]["pos"])
-            )
-        )
-        if eligible:
+        src = _WireSource(self, paths)
+        m = src.manifest(wm)
+        if m.n and self.quarantine_dir is None and (wm[0] is None or wm < m.lo):
             scratch = ApplyStats(batch_id=batch_id)
+            wdir = self._winners_dir(batch_id)
             try:
-                self._wire_winners(
-                    batch_id, raw, m, wm_file, wm_pos, scratch, escalated
-                )
-                delta = {"stats": scratch}
+                latest = self._winners(src, m, wm, None, scratch, escalated)
+                shutil.rmtree(wdir, ignore_errors=True)
+                t1 = time.time()
+                latest.write.parquet(wdir)
+                scratch.phase_ms["lww"] = _ms_since(t1)
+                m.speculation = scratch
             except Exception:
-                shutil.rmtree(self._winners_dir(batch_id), ignore_errors=True)
-        return m, delta
+                shutil.rmtree(wdir, ignore_errors=True)
+        return m
 
     # ----------------------------------------------------------- micro-batch
 
     def apply_batch(self, batch_id: int, paths: list[str]) -> ApplyStats:
-        # remember the input file names so the commit can carry the
-        # input-side cursor (streaming front-end skip; lineage)
-        self._input_names = sorted(os.path.basename(p) for p in paths)
+        """Apply one micro-batch of input files exactly once — shared by
+        the replay loop and the Structured Streaming front-end.
+
+        The source contributes two stages (:class:`_TypedSource`,
+        :class:`_WireSource`): ``manifest()``, ONE pass over the batch
+        for its offset range (C1/C2 fence), txn boundary (B4),
+        past-fence DML count (M1), lag timestamp (M3), PK-move flag and
+        the rare DDL / INCIDENT rows; and ``keyed_changes()``, the
+        fenced and filtered change rows. The rest is one chain for
+        every source: incident gate -> DDL -> PK-move explode -> LWW ->
+        typed projection -> transform / expectations -> bucket-aligned
+        staged delta -> COW merge or MoR adopt through the audit gate ->
+        epilogue (compaction, lag, growth, expiry, lineage).
+
+        Deliberately NO .cache() anywhere: caching the batch thrashes
+        the memory store under high thread counts (measured 5x
+        slowdown at local[32]); the staged delta is the batch's one
+        materialization, so the merge never recomputes the decode or
+        the LWW shuffle."""
+        import shutil
+
+        if self.table is None:
+            self.prepare()
+        t0 = time.time()
+        stats = ApplyStats(batch_id=batch_id)
+        wm = self.watermark()[:2]
+        src = (_WireSource if self.source_format == "wire" else _TypedSource)(
+            self, paths
+        )
+        wdir = self._winners_dir(batch_id)
         try:
-            return self._apply_batch_inner(batch_id, paths)
+            m = src.manifest(wm, self._prefetch.pop(batch_id, None))
+            if m.prefetched:
+                stats.phase_ms["manifest_prefetched"] = 1
+            stats.phase_ms["manifest"] = _ms_since(t0)
+            stats.rows_in = m.n
+            if m.n == 0:
+                stats.skipped = True
+                return stats
+            stats.file_start, stats.pos_start = m.lo
+            stats.file_end, stats.pos_end = m.hi
+            stats.bytes_in = m.bytes_in
+            if m.txn_hi is not None:
+                stats.txn_file_end, stats.txn_pos_end = m.txn_hi
+            if wm[0] is not None and m.hi <= wm:
+                stats.skipped = True
+                stats.wall_ms = _ms_since(t0)
+                return stats
+
+            # C5 incident gate: BEFORE any apply work
+            if m.incidents:
+                if self.incident_policy == "fail":
+                    raise IncidentError(m.incidents)
+                stats.incidents = m.incidents
+            stats.heartbeat_ts = m.heartbeat_ts
+            trunc_fp = self._handle_ddl(m.ddl_rows) if m.ddl_rows else None
+
+            # LWW winners: ADOPT the prefetch thread's materialized
+            # winners when its manifest was accepted (identical fenced
+            # row set) and no TRUNCATE discards a prefix of this batch —
+            # the winners are schema-free, so the batch's own additive/
+            # rename DDL, applied just above, never invalidates them.
+            # Otherwise ONE lazy pipeline feeds the projection directly.
+            spec = m.speculation
+            if spec is not None and trunc_fp is None and os.path.isdir(wdir):
+                stats.phase_ms.update(spec.phase_ms)
+                stats.phase_ms["winners_prefetched"] = 1
+                stats.lww_variant = spec.lww_variant
+                latest = self.spark.read.parquet(wdir)
+            else:
+                latest = self._winners(src, m, wm, trunc_fp, stats)
+            delta_dir, nb = self._stage_delta(
+                batch_id, latest, src.keys.as_map, stats
+            )
         finally:
-            self._input_names = None
+            shutil.rmtree(wdir, ignore_errors=True)
+        t1 = time.time()
 
-    def _apply_batch_inner(self, batch_id: int, paths: list[str]) -> ApplyStats:
-        if self.source_format == "wire":
-            return self._apply_wire(batch_id, paths)
-        if self.source_format == "jsonl":
-            # JSON-lines typed change events (the reference's flattened
-            # Avro/JSON record shape as an ingest format): schema-first
-            # read — no sampling pass, absent fields decode as null
-            batch = self.spark.read.schema(CHANGE_EVENT_SCHEMA).json(list(paths))
+        # LWW winners from the delta files' parquet FOOTERS (driver
+        # metadata reads, no Spark job) -> collapse ratio -> auto skew
+        # escalation decision for the NEXT batch (see AUTO_SALT_RATIO)
+        stats.rows_winners = _parquet_dir_rows(delta_dir)
+        if self.n_salts == 0 and stats.rows_winners:
+            self._escalated = m.n_dml / stats.rows_winners >= self.AUTO_SALT_RATIO
+
+        props = {
+            "offset_file": stats.file_end,
+            "offset_pos": str(stats.pos_end),
+            "batch_seq": str(batch_id),
+        }
+        fenced = self.gtid_set is not None or self.gtid_list is not None
+        if fenced:
+            # open-group fence carry, atomic with the watermark (see
+            # _wire_gtid_fence; staged when the winners plan was built)
+            carry = getattr(self, "_gtid_carry_pending", None)
+            props["gtid_fence_carry"] = "" if carry is None else str(carry)
+        if stats.txn_file_end is not None:
+            props["txn_end_file"] = stats.txn_file_end
+            props["txn_end_pos"] = str(stats.txn_pos_end)
+        if paths:
+            # input-side cursor: the last (name-ordered) input file this
+            # commit covers — the streaming front-end skips groups at or
+            # below it without re-reading them
+            props["input_file_end"] = max(os.path.basename(p) for p in paths)
+        # affected buckets = the staged delta's own directory listing
+        # (tombstones included: a PK-moving UPDATE's old-key bucket must
+        # be rewritten too, or merge() carries the ghost row forward)
+        affected = sorted(
+            int(d.split("=", 1)[1])
+            for d in os.listdir(delta_dir)
+            if d.startswith("__bucket=")
+        )
+        stats.write_mode = self.write_mode
+        if not affected:
+            stats.snapshot_version = self.table.set_properties(props)
         else:
-            batch = self.spark.read.schema(CHANGE_EVENT_SCHEMA).parquet(*paths)
-        return self.apply_df(batch_id, batch)
+            if self.write_mode == "mor":
+                # merge-on-read: the staged bucket-partitioned delta IS
+                # the commit — one rename + manifest append, zero Spark
+                # jobs; per-batch cost never sees the table size
+                def commit(wap):
+                    return self.table.adopt_delta(
+                        delta_dir, properties=props, stage_as=wap,
+                        base_n_buckets=nb,
+                    )
+            else:
+                # count_upserts=False: rows_applied comes from the
+                # manifest pass (the reference's persisNum semantics); a
+                # merge-side Observation deadlocks under foreachBatch
+                delta = self.spark.read.parquet(delta_dir).drop("__bucket")
 
-    # ------------------------------------------------------ wire fast path
+                def commit(wap):
+                    return self.table.merge(
+                        self.spark, delta, properties=props,
+                        affected_buckets=affected, count_upserts=False,
+                        stage_as=wap,
+                    )
 
-    def _apply_wire(self, batch_id: int, paths: list[str]) -> ApplyStats:
-        from .schema import RAW_FRAME_SCHEMA
+            stats.snapshot_version, summary = self._commit_with_audit(
+                commit, stats
+            )
+            stats.bucket_rows = summary.get("bucket_rows")
+        shutil.rmtree(delta_dir, ignore_errors=True)
+        if fenced:
+            # the commit persisting the staged carry succeeded — NOW
+            # promote it to the in-memory cache the next batch reads
+            self._gtid_carry = getattr(self, "_gtid_carry_pending", None)
+        stats.phase_ms["merge"] = _ms_since(t1)
 
-        raw = self.spark.read.schema(RAW_FRAME_SCHEMA).parquet(*paths)
-        pre = None
-        pf = self._prefetch.pop(batch_id, None)
-        if pf is not None:
-            try:
-                m_row, delta = pf[0].result()
-                pre = (m_row, pf[1], delta)
-            except Exception:
-                pre = None  # prefetch failure -> synchronous pass
-        return self._apply_wire_df(batch_id, raw, prefetched=pre)
+        if self.write_mode == "mor":
+            self._maybe_compact(stats)
+        stats.rows_applied = m.n_dml
+        stats.wall_ms = _ms_since(t0)
+        if m.max_ts_s is not None:
+            stats.lag_s = time.time() - m.max_ts_s
+        self._maybe_grow(stats)
+        if self.expire_keep_last is not None:
+            self.table.expire_snapshots(keep_last=self.expire_keep_last)
+        self._append_lineage(stats)
+        return stats
 
     def _winners_dir(self, batch_id: int) -> str:
         return os.path.join(
             self.table_path, f"_winners_{self._run_id}_{batch_id}"
         )
 
-    def _wire_lww(
-        self,
-        batch_id: int,
-        raw: DataFrame,
-        m,
-        wm_file,
-        wm_pos,
-        trunc_fp,
-        stats: ApplyStats,
-        escalated: bool | None = None,
+    def _winners(
+        self, src, m, wm, trunc_fp, stats: ApplyStats, escalated: bool | None = None
     ) -> DataFrame:
-        """Phase 2a of the wire apply, LAZY: ONE Arrow decode pass over
-        the fenced row-event frames -> narrow LWW dedup -> the WINNERS
-        frame (key cols + op + packed after_kv). Deliberately
-        SCHEMA-FREE: the packed kv strings never touch the table
-        schema. The synchronous path pipes this frame straight into
-        the typed projection (one materialization, the pre-pipelining
-        plan); the prefetch worker materializes it via _wire_winners
-        so batch k+1's decode+shuffle overlaps batch k's merge — valid
-        even when either batch carries additive/rename DDL; only a
-        TRUNCATE (which discards a prefix of the batch pre-LWW)
-        invalidates speculation. ``escalated`` overrides the auto-skew
-        state (the submit-time snapshot, so the speculated variant is
+        """The batch's LWW winners frame, LAZY: the source's keyed
+        change rows -> PK-move explode -> LWW. Deliberately SCHEMA-FREE
+        (the payload is the raw row image), so the prefetch thread can
+        materialize it before the batch's DDL runs; only a TRUNCATE
+        (which discards a prefix of the batch pre-LWW) invalidates that
+        speculation. ``escalated`` overrides the auto-skew state (the
+        prefetch submit-time snapshot, so the speculated variant is
         deterministic — not a helper-thread race with the current
         batch's consume)."""
-        from .sources.wire import ENTRY_SEP, decode_frames_kv, kv_to_map
-
+        dml = src.keyed_changes(wm, trunc_fp, stats)
+        keyed = self._explode_moves(dml, src.keys, m.has_moves)
         if escalated is None:
             escalated = self._escalated
+        return self._lww(keyed, src.keys.payload, stats, escalated)
 
-        raw_f = after_watermark(raw, wm_file, wm_pos)
-        if trunc_fp is not None:
-            # discard DML at or before the truncate (it was wiped)
-            raw_f = after_watermark(raw_f, *trunc_fp)
-        if self.quarantine_dir is not None:
-            stats.frames_quarantined = self._quarantine(raw_f, batch_id)
-        # F4 pre-decode gate, faithful to the reference's decoder
-        # BitSet (LogDecoder.java:108-134): only row-event frames
-        # (WRITE/UPDATE/DELETE_ROWS, header type byte 30/31/32) reach
-        # the Python decode — BEGIN/COMMIT/DDL frames (~1/3 of the
-        # stream) were fully consumed by the JVM manifest pass above
-        raw_dml = raw_f.filter(
-            F.expr("substring(payload, 5, 1) IN (X'1E', X'1F', X'20')")
-        )
-        dec = decode_frames_kv(raw_dml)
-        dml = dml_for_table(self._stream_filters(dec), self.schema_name, self.table_name)
-        # GTID-set fencing (wire twin of after_gtid_set; identity when
-        # no fence is configured)
-        dml = self._wire_gtid_fence(raw_f, dml)
-        # keys from the tiny key_kv map (isKey columns), NOT the full
-        # row image — the full after map is built only for LWW winners.
-        # key_kv is the ROW IDENTITY (before-image key, MySQL RBR
-        # semantics) — equal to the after key for everything except a
-        # PK-MOVING UPDATE. The upsert key is always the AFTER key;
-        # `same_key` is a pure string test (after_kv packs the key
-        # columns first, encoder invariant), so the full after map is
-        # parsed pre-LWW only for the rare rows that actually moved —
-        # and even a false negative here only costs that parse, never
-        # correctness.
+    def _explode_moves(self, dml: DataFrame, keys: _Keys, has_moves: bool) -> DataFrame:
+        """Key each change row for LWW. A batch with no PK-moving
+        UPDATE (manifest flag) keeps the zero-overhead plan: keys
+        straight off ``keys.key``. Otherwise a PK-MOVING UPDATE (MySQL
+        RBR row identity = before image) also emits a tombstone under
+        its OLD key at the same log position, or the old row survives
+        as a ghost. Emitted via explode of a 1-2 element struct array,
+        so the batch is scanned (and a wire batch decoded) ONCE — a
+        union of two selects over ``dml`` would run the source twice.
+        The tombstone's payload only needs to keep the projection well
+        typed: merge keys deletes on key_cols."""
         k0, k1 = self.key_cols
-        key_map = kv_to_map("key_kv")
-        if not int(m["has_moves"] or 0):
-            # no PK-moving UPDATE in this batch (manifest-pass raw-text
-            # test above) — zero-overhead keyed plan, keys straight off
-            # the tiny key_kv map (row identity == upsert key)
-            keyed = dml.select(
-                F.element_at(key_map, k0).alias(k0),
-                F.element_at(key_map, k1).cast("int").alias(k1),
-                *[F.col(c) for c in LOG_ORDER],
-                "op",
-                "after_kv",
-            )
-        else:
-            akey = kv_to_map("after_kv")
-            same_key = (F.col("after_kv") == F.col("key_kv")) | F.col(
-                "after_kv"
-            ).startswith(F.concat(F.col("key_kv"), F.lit(ENTRY_SEP)))
-            maybe_moved = (F.col("op") == "UPDATE") & ~same_key
-            # authoritative map comparison, evaluated only under the
-            # rare maybe_moved branch (CASE WHEN short-circuits)
-            is_move = maybe_moved & (
-                (F.element_at(akey, k0) != F.element_at(key_map, k0))
-                | (
-                    F.element_at(akey, k1).cast("int")
-                    != F.element_at(key_map, k1).cast("int")
-                )
-            )
-            upsert = F.struct(
-                F.when(maybe_moved, F.element_at(akey, k0))
-                .otherwise(F.element_at(key_map, k0))
-                .alias(k0),
-                F.when(maybe_moved, F.element_at(akey, k1))
-                .otherwise(F.element_at(key_map, k1))
-                .cast("int")
-                .alias(k1),
-                F.col("op").alias("op"),
-                F.col("after_kv").alias("after_kv"),
-            )
-            # tombstone the OLD key of a PK-moving UPDATE at the same
-            # log position; payload = key_kv, enough for a delete
-            # (merge keys on key_cols, payload ignored). Emitted via
-            # explode of a 1-2 element struct array so the Arrow decode
-            # runs ONCE per batch (a union of two selects over `dml`
-            # would decode twice).
-            tomb = F.struct(
-                F.element_at(key_map, k0).alias(k0),
-                F.element_at(key_map, k1).cast("int").alias(k1),
-                F.lit("DELETE").alias("op"),
-                F.col("key_kv").alias("after_kv"),
-            )
-            keyed = dml.select(
-                *[F.col(c) for c in LOG_ORDER],
-                F.explode(
-                    F.when(is_move, F.array(tomb, upsert)).otherwise(
-                        F.array(upsert)
-                    )
-                ).alias("__e"),
-            ).select(
-                f"__e.{k0}", f"__e.{k1}", *[F.col(c) for c in LOG_ORDER],
-                "__e.op", "__e.after_kv",
-            )
-        if self.n_salts > 0:
-            latest = self._lww(keyed, ["op", "after_kv"])
-            stats.lww_variant = f"salted{self.n_salts}"
-        elif escalated:
-            # AUTO skew escalation: the previous batch's collapse ratio
-            # (applied rows / LWW winners, free from the manifest pass +
-            # delta footers) crossed AUTO_SALT_RATIO — a single-key
-            # flood regime where the explicit two-phase salted LWW
-            # measures ~1.5x faster than the packed path (BENCH/
+        pay = keys.payload
+
+        def key(pair):
+            return pair[0].alias(k0), pair[1].cast("int").alias(k1)
+
+        if not has_moves:
+            return dml.select(*key(keys.key), *LOG_ORDER, "op", pay)
+        upsert = F.struct(
+            *key(keys.upsert), F.col("op").alias("op"), F.col(pay).alias(pay)
+        )
+        tomb = F.struct(
+            *key(keys.old), F.lit("DELETE").alias("op"), keys.old_payload.alias(pay)
+        )
+        return dml.select(
+            *LOG_ORDER,
+            F.explode(
+                F.when(keys.is_move, F.array(tomb, upsert)).otherwise(F.array(upsert))
+            ).alias("__e"),
+        ).select(f"__e.{k0}", f"__e.{k1}", *LOG_ORDER, "__e.op", f"__e.{pay}")
+
+    def _lww(
+        self, keyed: DataFrame, payload: str, stats: ApplyStats, escalated: bool
+    ) -> DataFrame:
+        """LWW dedup: one row per key, the payload of the event latest
+        in log order; records the variant that ran."""
+        cols = ["op", payload]
+        if self.n_salts > 0 or escalated:
+            # explicit two-phase salted LWW: configured (n_salts), or
+            # AUTO skew escalation — the previous batch's collapse ratio
+            # crossed AUTO_SALT_RATIO, a single-key flood regime where
+            # it measures ~1.5x faster than the default kernels (BENCH/
             # BASELINE.md hot-key section). Semantics identical
-            # (property-tested); de-escalates as soon as a batch's
-            # ratio drops back under the threshold.
+            # (property-tested); de-escalates as soon as a batch's ratio
+            # drops back under the threshold.
             from .operators.dedup import lww_latest_salted
 
-            latest = lww_latest_salted(
-                keyed, self.key_cols, ["op", "after_kv"], self.AUTO_SALTS
-            )
-            stats.lww_variant = f"auto_salted{self.AUTO_SALTS}"
-        else:
-            # packed-argmax partial+final aggregation: hot keys
-            # collapse map-side instead of flooding one shuffle task
-            # (equal wall on uniform keys, strictly better under skew —
-            # see operators.dedup.lww_latest_packed). The explicit
-            # salted variant stays honored above.
+            n = self.n_salts or self.AUTO_SALTS
+            stats.lww_variant = f"salted{n}" if self.n_salts else f"auto_salted{n}"
+            return lww_latest_salted(keyed, self.key_cols, cols, n)
+        if payload == "after_kv":
+            # packed kv string: packed-argmax partial+final aggregation,
+            # hot keys collapse map-side instead of flooding one shuffle
+            # task (see operators.dedup.lww_latest_packed)
             from .operators.dedup import lww_latest_packed
 
-            latest = lww_latest_packed(keyed, self.key_cols)
             stats.lww_variant = "packed"
-        return latest
+            return lww_latest_packed(keyed, self.key_cols)
+        # typed map payload: max_by over struct payloads is NOT
+        # hash-aggregable (struct agg buffers fall back to
+        # SortAggregate), so the default partial+final plan SORTS the
+        # whole batch twice. Repartition by the grouping keys first: the
+        # groupBy reuses the exchange and runs ONE sort + one
+        # aggregation pass (measured 28% faster end-to-end at 32 cores).
+        stats.lww_variant = "max_by"
+        keyed = keyed.repartition(*[F.col(c) for c in self.key_cols])
+        return lww_latest(keyed, self.key_cols, cols)
 
-    def _wire_winners(
-        self,
-        batch_id: int,
-        raw: DataFrame,
-        m,
-        wm_file,
-        wm_pos,
-        stats: ApplyStats,
-        escalated: bool,
-    ) -> None:
-        """Prefetch-worker twin of :meth:`_wire_lww`: materialize the
-        winners frame under ``_winners_<batch_id>`` so the consume side
-        can adopt it without recomputing the decode+shuffle. Runs with
-        ``trunc_fp=None`` — the consume side rejects the speculation
-        when the batch turns out to carry a TRUNCATE."""
-        import shutil
-
-        latest = self._wire_lww(
-            batch_id, raw, m, wm_file, wm_pos, None, stats, escalated
-        )
-        wdir = self._winners_dir(batch_id)
-        shutil.rmtree(wdir, ignore_errors=True)
-        t1 = time.time()
-        latest.write.parquet(wdir)
-        stats.phase_ms["lww"] = int((time.time() - t1) * 1000)
-
-    def _wire_project(
-        self, batch_id: int, latest: DataFrame, stats: ApplyStats
+    def _stage_delta(
+        self, batch_id: int, latest: DataFrame, as_map, stats: ApplyStats
     ) -> tuple[str, int]:
-        """Phase 2b: typed projection of the LWW winners frame under
-        the CURRENT (post-DDL) schema -> ingest transform ->
-        data-quality gate -> bucket-aligned staged delta. Always runs
-        at consume time; ``latest`` is either the lazy _wire_lww frame
-        (synchronous path — one pipeline, no extra materialization) or
-        a read of the adopted prefetched winners. Returns the staged
-        delta dir and the bucket count the write used."""
+        """Typed projection of the LWW winners under the CURRENT
+        (post-DDL) schema -> ingest transform -> data-quality gate ->
+        bucket-aligned staged delta. ``as_map`` reads the winners'
+        payload as map<string,string>. Returns the staged delta dir and
+        the bucket count the write used."""
         import shutil
 
-        from .sources.wire import kv_to_map
         from .lakestore.table import _bucket_expr
 
         # ONE manifest read for schema AND layout: two reads could
@@ -1534,17 +1545,13 @@ class CdcApplyJob:
         # bucket count of the next (the hazard table._schema_of
         # documents)
         m_snap = self.table.manifest()
-        from .lakestore.table import LakeTable as _LT
-
-        schema = _LT._schema_of(m_snap)
+        schema = LakeTable._schema_of(m_snap)
         nb = m_snap["n_buckets"]
         non_key = [f for f in schema.fields if f.name not in self.key_cols]
         changes = latest.select(
             *self.key_cols,
             *typed_from_map(
-                kv_to_map("after_kv"),
-                T.StructType(non_key),
-                aliases=self.table.column_aliases(),
+                as_map, T.StructType(non_key), aliases=self.table.column_aliases()
             ),
             (F.col("op") == "DELETE").alias("__delete"),
         )
@@ -1566,680 +1573,8 @@ class CdcApplyJob:
         changes.repartition(nb, F.col(self.key_cols[0])).write.partitionBy(
             "__bucket"
         ).parquet(delta_dir)
-        stats.phase_ms["delta"] = int((time.time() - t1) * 1000)
+        stats.phase_ms["delta"] = _ms_since(t1)
         return delta_dir, nb
-
-    def _target_ddl_rows(self, m, wm_file, wm_pos) -> list:
-        """Decode the manifest's capped candidate-DDL frames driver-side
-        and keep the past-fence DDL statements addressed to the target
-        table — the batch's ordered schema-evolution input. An empty result
-        under the SUBMIT watermark stays empty under any later one (a
-        fence only removes more frames)."""
-        if not m["ddl_frames"]:
-            return []
-        import pandas as pd
-
-        from .sources.wire import _decode_batch
-
-        pdf = pd.DataFrame(
-            [(r["file"], r["pos"], bytes(r["payload"])) for r in m["ddl_frames"]],
-            columns=["file", "pos", "payload"],
-        )
-        dd = _decode_batch(pdf)
-        dd = dd[
-            dd["is_ddl"]
-            & dd["crc_ok"]
-            & (dd["schema_name"] == self.schema_name)
-            & (dd["table_name"] == self.table_name)
-        ]
-        if wm_file is not None:
-            dd = dd[
-                dd.apply(
-                    lambda r: (r["file"], r["pos"]) > (wm_file, wm_pos), axis=1
-                )
-            ]
-        return dd.sort_values(["file", "pos", "row_idx"]).to_dict("records")
-
-    def _incident_rows(self, m, wm_file, wm_pos) -> list:
-        """Decode the manifest's capped INCIDENT frames driver-side and
-        keep the past-fence ones as (file, pos, message) triples —
-        already-applied incidents (at or before the watermark) were
-        handled when first seen and must not re-fail a replay."""
-        if not m["incident_frames"]:
-            return []
-        import pandas as pd
-
-        from .sources.wire import _decode_batch
-
-        pdf = pd.DataFrame(
-            [
-                (r["file"], r["pos"], bytes(r["payload"]))
-                for r in m["incident_frames"]
-            ],
-            columns=["file", "pos", "payload"],
-        )
-        dd = _decode_batch(pdf)
-        dd = dd[dd["crc_ok"] & (dd["op"] == "INCIDENT")]
-        out = []
-        for _, r in dd.sort_values(["file", "pos"]).iterrows():
-            if wm_file is not None and (r["file"], r["pos"]) <= (wm_file, wm_pos):
-                continue
-            # wire payload "number:message" (mysql_events fixture form);
-            # a bare message is carried verbatim
-            raw_msg = r["ddl_sql"] or ""
-            msg = raw_msg.split(":", 1)[1] if ":" in raw_msg else raw_msg
-            out.append((r["file"], int(r["pos"]), msg))
-        return out
-
-    def _wire_manifest(self, raw: DataFrame, wm_file, wm_pos):
-        """The single JVM aggregation over a batch's raw frames that
-        yields the offset manifest: offset range, txn boundary (B4),
-        past-fence DML count (M1), lag timestamp (M3), PK-move flag,
-        byte count, and the capped candidate-DDL frame collect — no
-        Python, no decode. Separated from the apply body so the run
-        loop can PREFETCH the next batch's manifest concurrently with
-        the current batch's delta+merge phases (pipelined micro-
-        batches); every output field except n_dml is watermark-free,
-        and the consumer revalidates n_dml's fence (see
-        _apply_wire_df)."""
-        from .sources.wire import ENTRY_SEP, FIELD_SEP
-
-        body = F.decode(
-            F.expr("substring(payload, 20, length(payload)-23)"), "UTF-8"
-        )
-        op0 = F.substring_index(body, FIELD_SEP, 1)
-        rows_arr = F.split(body, "\x1c")
-        # target-DML row test without per-row splits: values never
-        # contain the separator bytes (framing invariant), so the
-        # schema/table fields match iff the signature substring occurs
-        sig = f"{FIELD_SEP}{self.schema_name}{FIELD_SEP}{self.table_name}{FIELD_SEP}"
-        is_dml_row = lambda r: r.contains(sig) & (  # noqa: E731
-            r.startswith("INSERT" + FIELD_SEP)
-            | r.startswith("UPDATE" + FIELD_SEP)
-            | r.startswith("DELETE" + FIELD_SEP)
-        )
-        # PK-move candidate test on the RAW row text (body fields: op=0,
-        # …, key_kv=7, before_kv=8, after_kv=9; values never contain the
-        # separator bytes): an UPDATE row whose key_kv (= before-image
-        # key, the row identity) is not the entry-prefix of after_kv
-        # moved its key. Short-circuits after the op test, so the two
-        # substring_index scans run for UPDATE rows only; a batch with
-        # no moves then keeps the zero-overhead keyed plan below.
-        _kk = lambda r: F.substring_index(  # noqa: E731
-            F.substring_index(r, FIELD_SEP, 8), FIELD_SEP, -1
-        )
-        _ak = lambda r: F.substring_index(r, FIELD_SEP, -1)  # noqa: E731
-        mv_cand = lambda r: (  # noqa: E731
-            r.startswith("UPDATE" + FIELD_SEP)
-            # target-table rows only: another table's key layout must
-            # not pin the explode plan on for every batch
-            & r.contains(sig)
-            & ~(
-                (_ak(r) == _kk(r))
-                | _ak(r).startswith(F.concat(_kk(r), F.lit(ENTRY_SEP)))
-            )
-        )
-        h = F.hex(F.expr("substring(payload, 1, 4)"))  # LE u32 ts
-        ts_le = F.conv(
-            F.concat(
-                F.substring(h, 7, 2), F.substring(h, 5, 2),
-                F.substring(h, 3, 2), F.substring(h, 1, 2),
-            ),
-            16, 10,
-        ).cast("long")
-        is_commit = op0 == "COMMIT"
-        # DDL candidates: gated on the HEADER TYPE BYTE being QUERY(2) —
-        # the reference's decoder dispatch (LogDecoder.java:108-134) —
-        # not merely "unknown op text": a corrupt/adversarial stream can
-        # make arbitrary frames carry unknown ops, and collecting their
-        # full payloads would be an unbounded driver collect. QUERY
-        # frames are BEGIN or DDL; BEGIN is excluded by op text.
-        cand_ddl = F.expr("substring(payload, 5, 1) = X'02'") & (op0 != "BEGIN")
-        # control-event classification on the header type byte
-        # (LogDecoder.java:94-491 dispatch): HEARTBEAT(27) feeds M4
-        # liveness, INCIDENT(26) feeds the C5 incident policy. Both are
-        # rare by nature (heartbeats only at idle, incidents on master
-        # faults), so the bounded collect below is safe; an incident
-        # FLOOD past the cap fails loudly in the consumer.
-        is_hb = F.expr("substring(payload, 5, 1) = X'1B'")
-        is_incident = F.expr("substring(payload, 5, 1) = X'1A'")
-        # n_dml counts target-DML rows PAST THE FENCE only (lineage
-        # rows_applied semantics; replay-overlap rows are not applied).
-        # CRC caveat: this JVM pass does not checksum-verify frames — a
-        # corrupt frame that still pattern-matches the DML signature is
-        # counted here but dropped by the decode, so rows_applied is an
-        # upper bound under corruption (exact on clean streams).
-        if wm_file is not None:
-            wm_lit = F.struct(F.lit(wm_file).alias("file"), F.lit(wm_pos).alias("pos"))
-            past_fence = F.struct(F.col("file"), F.col("pos")) > wm_lit
-        else:
-            past_fence = F.lit(True)
-        fp = F.struct("file", "pos")
-        m = raw.select(
-            "file", "pos", "payload",
-            rows_arr.alias("rows_arr"), op0.alias("op0"),
-            is_commit.alias("is_commit"), cand_ddl.alias("cand_ddl"),
-            is_hb.alias("is_hb"), is_incident.alias("is_incident"),
-            past_fence.alias("past_fence"),
-            ts_le.alias("ts_s"),
-        ).agg(
-            F.min(fp).alias("lo"),
-            F.max(fp).alias("hi"),
-            F.sum(F.size("rows_arr")).alias("n"),
-            F.sum(
-                F.when(
-                    F.col("past_fence"), F.size(F.filter("rows_arr", is_dml_row))
-                ).otherwise(F.lit(0))
-            ).alias("n_dml"),
-            F.max(F.when(F.col("is_commit") | F.col("cand_ddl"), fp)).alias("txn_hi"),
-            F.sum(F.length("payload")).alias("bytes_in"),
-            F.max("ts_s").alias("max_ts_s"),
-            F.sum(F.col("cand_ddl").cast("long")).alias("n_cand_ddl"),
-            F.max(F.exists("rows_arr", mv_cand).cast("int")).alias("has_moves"),
-            F.slice(
-                F.collect_list(
-                    F.when(F.col("cand_ddl"), F.struct("file", "pos", "payload"))
-                ),
-                1,
-                self.MAX_DDL_FRAMES_PER_BATCH + 1,
-            ).alias("ddl_frames"),
-            F.max(F.when(F.col("is_hb"), F.col("ts_s"))).alias("hb_ts_s"),
-            F.sum(F.col("is_incident").cast("long")).alias("n_incident"),
-            F.slice(
-                F.collect_list(
-                    F.when(
-                        F.col("is_incident"), F.struct("file", "pos", "payload")
-                    )
-                ),
-                1,
-                self.MAX_INCIDENT_FRAMES_PER_BATCH + 1,
-            ).alias("incident_frames"),
-        ).collect()[0]
-        # (returned Row consumed by _apply_wire_df)
-        return m
-
-    def _apply_wire_df(
-        self,
-        batch_id: int,
-        raw: DataFrame,
-        prefetched: tuple | None = None,
-    ) -> ApplyStats:
-        """Apply one micro-batch of raw wire frames with exactly ONE
-        Python decode pass. Shared by the batch replay loop and the
-        Structured Streaming foreachBatch front-end.
-
-        The naive structure (decode everything, then observe + merge)
-        runs the vectorized decode twice per batch and shuffles fat map
-        columns; measured on local[8] vs local[32] that serialized on
-        allocator/bandwidth contention (scaling efficiency 0.19). This
-        path instead:
-
-        1. computes the offset manifest (C1/C2 fence, txn boundary B4,
-           lag M3, row counts M1) **JVM-side from the raw frames** —
-           header fields via substring/hex arithmetic, per-frame row
-           counts via higher-order array functions; collects the rare
-           candidate-DDL frames in the same single aggregation job;
-        2. runs the Arrow-kernel decode (``decode_frames_kv``) once,
-           dedups on the *packed* kv strings (narrow shuffle), builds
-           maps + typed columns only for the LWW winners, and
-           **materializes the deduped delta** bucket-partitioned;
-        3. MERGEs the delta (affected buckets read from the delta's
-           own directory listing — no extra job, no recompute of the
-           decode lineage, no caching).
-        """
-        import shutil
-
-        if self.table is None:
-            self.prepare()
-        t0 = time.time()
-        stats = ApplyStats(batch_id=batch_id)
-        wm_file, wm_pos, _ = self.watermark()
-
-        # --- 1. manifest pass: one JVM aggregation over raw frames ----
-        m = None
-        if prefetched is not None:
-            pm, pwm = prefetched[0], prefetched[1]
-            # a prefetched manifest was computed under the watermark in
-            # force at SUBMIT time (before the previous batch's commit
-            # advanced it). Every field except n_dml is watermark-free;
-            # n_dml (past-fence DML count, a lineage metric) is
-            # identical under both watermarks iff the batch lies wholly
-            # past the CURRENT fence too — the steady state. Replay
-            # overlap falls back to a synchronous pass.
-            if pwm == (wm_file, wm_pos) or not int(pm["n"] or 0):
-                m = pm
-            elif wm_file is not None and pm["lo"] is not None and (
-                (wm_file, wm_pos) < (pm["lo"]["file"], pm["lo"]["pos"])
-            ):
-                m = pm
-            if m is not None:
-                stats.phase_ms["manifest_prefetched"] = 1
-        if m is None:
-            m = self._wire_manifest(raw, wm_file, wm_pos)
-        stats.phase_ms["manifest"] = int((time.time() - t0) * 1000)
-
-        if int(m["n_cand_ddl"] or 0) > self.MAX_DDL_FRAMES_PER_BATCH:
-            raise RuntimeError(
-                f"batch {batch_id}: {m['n_cand_ddl']} candidate-DDL (QUERY) "
-                f"frames exceed the {self.MAX_DDL_FRAMES_PER_BATCH} cap — "
-                "refusing the unbounded driver collect. Either the input is "
-                "corrupt/adversarial or the batch genuinely carries that much "
-                "DDL; split it into smaller micro-batches."
-            )
-        stats.rows_in = int(m["n"] or 0)
-        if stats.rows_in == 0:
-            stats.skipped = True
-            shutil.rmtree(self._winners_dir(batch_id), ignore_errors=True)
-            return stats
-        stats.file_start, stats.pos_start = m["lo"]["file"], m["lo"]["pos"]
-        stats.file_end, stats.pos_end = m["hi"]["file"], m["hi"]["pos"]
-        stats.bytes_in = int(m["bytes_in"] or 0)
-        if m["txn_hi"] is not None:
-            stats.txn_file_end, stats.txn_pos_end = m["txn_hi"]["file"], m["txn_hi"]["pos"]
-        if wm_file is not None and (stats.file_end, stats.pos_end) <= (wm_file, wm_pos):
-            stats.skipped = True
-            shutil.rmtree(self._winners_dir(batch_id), ignore_errors=True)
-            stats.wall_ms = int((time.time() - t0) * 1000)
-            return stats
-
-        # --- C5 incident gate: BEFORE any apply work ------------------
-        if int(m["n_incident"] or 0) > self.MAX_INCIDENT_FRAMES_PER_BATCH:
-            raise IncidentError(
-                [("<flood>", int(m["n_incident"]), "incident-frame flood")]
-            )
-        if int(m["n_incident"] or 0) > 0:
-            incidents = self._incident_rows(m, wm_file, wm_pos)
-            if incidents:
-                if self.incident_policy == "fail":
-                    raise IncidentError(incidents)
-                stats.incidents = incidents
-        # M4 liveness: newest heartbeat header ts in the batch
-        if m["hb_ts_s"] is not None:
-            stats.heartbeat_ts = float(m["hb_ts_s"])
-
-        # --- DDL: decode the handful of collected frames driver-side --
-        ddl_rows = self._target_ddl_rows(m, wm_file, wm_pos)
-        trunc_fp = self._handle_ddl(ddl_rows) if ddl_rows else None
-
-        # --- 2. decode -> LWW winners (or ADOPT the prefetch thread's
-        # already-materialized winners: valid iff the manifest prefetch
-        # was accepted above — identical fenced row set — and no
-        # TRUNCATE discards a prefix of this batch; the winners are
-        # schema-free, so the batch's own additive/rename DDL, applied
-        # just above, never invalidates them) -> typed projection under
-        # the POST-DDL schema -> staged bucket-aligned delta
-        wdir = self._winners_dir(batch_id)
-        latest = None
-        if (
-            prefetched is not None
-            and prefetched[0] is m  # manifest prefetch accepted above
-            and len(prefetched) > 2
-            and prefetched[2] is not None
-        ):
-            if trunc_fp is None and os.path.isdir(wdir):
-                scratch = prefetched[2]["stats"]
-                for k, v in scratch.phase_ms.items():
-                    stats.phase_ms[k] = v
-                stats.phase_ms["winners_prefetched"] = 1
-                stats.lww_variant = scratch.lww_variant
-                latest = self.spark.read.parquet(wdir)
-            else:
-                shutil.rmtree(wdir, ignore_errors=True)
-        if latest is None:
-            # synchronous path: ONE pipeline — the lazy LWW frame feeds
-            # the projection directly, exactly the pre-pipelining plan
-            latest = self._wire_lww(
-                batch_id, raw, m, wm_file, wm_pos, trunc_fp, stats
-            )
-        try:
-            delta_dir, nb = self._wire_project(batch_id, latest, stats)
-        finally:
-            shutil.rmtree(wdir, ignore_errors=True)
-        t1 = time.time()
-
-        # LWW winners from the delta files' parquet FOOTERS (driver
-        # metadata reads, no Spark job) -> collapse ratio -> auto skew
-        # escalation decision for the NEXT batch (see AUTO_SALT_RATIO)
-        stats.rows_winners = _parquet_dir_rows(delta_dir)
-        if self.n_salts == 0 and stats.rows_winners:
-            ratio = int(m["n_dml"] or 0) / stats.rows_winners
-            self._escalated = ratio >= self.AUTO_SALT_RATIO
-
-        # --- 3. merge the materialized delta --------------------------
-        props = {
-            "offset_file": stats.file_end,
-            "offset_pos": str(stats.pos_end),
-            "batch_seq": str(batch_id),
-        }
-        if self.gtid_set is not None or self.gtid_list is not None:
-            # open-group fence carry, atomic with the watermark (see
-            # _wire_gtid_fence; staged when _wire_lww built the plan)
-            carry = getattr(self, "_gtid_carry_pending", None)
-            props["gtid_fence_carry"] = "" if carry is None else str(carry)
-        if stats.txn_file_end is not None:
-            props["txn_end_file"] = stats.txn_file_end
-            props["txn_end_pos"] = str(stats.txn_pos_end)
-        if getattr(self, "_input_names", None):
-            # input-side cursor: the last (name-ordered) input file this
-            # commit covers — the streaming front-end skips groups at or
-            # below it without re-reading them
-            props["input_file_end"] = self._input_names[-1]
-        affected = sorted(
-            int(d.split("=", 1)[1])
-            for d in os.listdir(delta_dir)
-            if d.startswith("__bucket=")
-        )
-        stats.write_mode = self.write_mode
-        if affected and self.write_mode == "mor":
-            # merge-on-read: the staged bucket-partitioned delta IS the
-            # commit — one rename + manifest append, zero Spark jobs
-            # (lakestore.adopt_delta); per-batch cost never sees the
-            # table size. Compaction below bounds read amplification.
-            version, summary = self._commit_with_audit(
-                lambda wap: self.table.adopt_delta(
-                    delta_dir, properties=props, stage_as=wap,
-                    base_n_buckets=nb,
-                ),
-                stats,
-            )
-            stats.snapshot_version = version
-            stats.bucket_rows = summary.get("bucket_rows")
-            self._maybe_compact(stats)
-        elif affected:
-            delta = self.spark.read.parquet(delta_dir).drop("__bucket")
-            version, summary = self._commit_with_audit(
-                lambda wap: self.table.merge(
-                    self.spark,
-                    delta,
-                    properties=props,
-                    affected_buckets=affected,
-                    count_upserts=False,
-                    stage_as=wap,
-                ),
-                stats,
-            )
-            stats.snapshot_version = version
-            stats.bucket_rows = summary.get("bucket_rows")
-        else:
-            stats.snapshot_version = self.table.set_properties(props)
-        shutil.rmtree(delta_dir, ignore_errors=True)
-        if self.gtid_set is not None or self.gtid_list is not None:
-            # the commit persisting the staged carry succeeded — NOW
-            # promote it to the in-memory cache the next batch reads
-            self._gtid_carry = getattr(self, "_gtid_carry_pending", None)
-        stats.phase_ms["merge"] = int((time.time() - t1) * 1000)
-        stats.rows_applied = int(m["n_dml"] or 0)
-        stats.wall_ms = int((time.time() - t0) * 1000)
-        if m["max_ts_s"] is not None:
-            stats.lag_s = time.time() - float(m["max_ts_s"])
-        self._maybe_grow(stats)
-        if self.expire_keep_last is not None:
-            self.table.expire_snapshots(keep_last=self.expire_keep_last)
-        self._append_lineage(stats)
-        return stats
-
-    def apply_df(self, batch_id: int, batch: DataFrame) -> ApplyStats:
-        """Apply one micro-batch given as a DataFrame of change events —
-        shared by the batch replay loop and the Structured Streaming
-        foreachBatch front-end.
-
-        Deliberately NO .cache() anywhere: caching the map-typed batch
-        (or the deduped changes) thrashes the memory store under high
-        thread counts — measured 5x slowdown at local[32] — while the
-        only duplicated work, the LWW aggregation feeding both the
-        upsert and anti-join branches, is already covered by Spark's
-        shuffle reuse (ReusedExchange), and the wire decode re-run is a
-        cheap parallel vectorized scan."""
-        return self._apply_df_inner(batch_id, batch)
-
-    def _apply_df_inner(self, batch_id: int, batch: DataFrame) -> ApplyStats:
-        t0 = time.time()
-        stats = ApplyStats(batch_id=batch_id)
-        wm_file, wm_pos, last_seq = self.watermark()
-
-        # ONE pass over the batch computes the offset manifest (observe
-        # metrics: C1/C2 fencing range, txn boundary B4, lag M3, the
-        # affected MERGE buckets) while collecting the rare DDL rows.
-        from pyspark.sql import Observation
-
-        from .lakestore.table import _bucket_expr
-
-        manifest = self.table.manifest()
-        nb = manifest["n_buckets"]
-        k0, k1 = self.key_cols
-        is_target_dml = (
-            F.col("op").isin("INSERT", "UPDATE", "DELETE")
-            & (F.col("schema_name") == self.schema_name)
-            & (F.col("table_name") == self.table_name)
-        )
-        # fence for the apply-semantics aggregates (n_dml, buckets,
-        # n_moves): replay-overlap rows at or before the committed
-        # watermark are never applied, so counting them would report
-        # phantom rows_applied and force needless bucket rewrites —
-        # the wire path's manifest pass fences the same way
-        if wm_file is not None:
-            wm_lit = F.struct(
-                F.lit(wm_file).alias("file"), F.lit(wm_pos).alias("pos")
-            )
-            past_fence = F.struct(F.col("file"), F.col("pos")) > wm_lit
-        else:
-            past_fence = F.lit(True)
-        applied_dml = is_target_dml & past_fence
-        bucket_of_row = F.when(
-            applied_dml,
-            _bucket_expr(F.element_at("after", k0), nb),
-        )
-        # a PK-moving UPDATE also emits a tombstone under the BEFORE
-        # key (explode plan below) — its bucket must be in the COW
-        # affected set too, or merge() carries that bucket forward by
-        # reference and the ghost row survives the anti-join
-        bucket_of_before = F.when(
-            (F.col("op") == "UPDATE")
-            & applied_dml
-            & F.col("before").isNotNull(),
-            _bucket_expr(F.element_at("before", k0), nb),
-        )
-        # PK-moving UPDATE detector (before-image key != after key) —
-        # rides the same single observe pass; op test first so the
-        # before-map lookups run for target UPDATE rows only
-        is_move_row = (
-            (F.col("op") == "UPDATE")
-            & applied_dml
-            & F.col("before").isNotNull()
-            & (
-                (F.element_at("before", k0)
-                 != F.element_at("after", k0))
-                | (F.element_at("before", k1).cast("int")
-                   != F.element_at("after", k1).cast("int"))
-            )
-        )
-        obs = Observation()
-        ddl_rows = (
-            batch.observe(
-                obs,
-                F.min(F.struct("file", "pos")).alias("lo"),
-                F.max(F.struct("file", "pos")).alias("hi"),
-                F.count(F.lit(1)).alias("n"),
-                F.max(
-                    F.when(
-                        F.col("op").eqNullSafe("COMMIT") | F.col("is_ddl"),
-                        F.struct("file", "pos"),
-                    )
-                ).alias("txn_hi"),
-                F.max("ts").alias("max_ts"),
-                F.collect_set(bucket_of_row).alias("buckets"),
-                F.collect_set(bucket_of_before).alias("before_buckets"),
-                F.count(F.when(applied_dml, 1)).alias("n_dml"),
-                F.count(F.when(is_move_row, 1)).alias("n_moves"),
-            )
-            .filter(
-                F.col("is_ddl")
-                & (F.col("schema_name") == self.schema_name)
-                & (F.col("table_name") == self.table_name)
-            )
-            .select(*LOG_ORDER, "ddl_sql")
-            .collect()
-        )
-        # sort the handful of DDL rows driver-side: an orderBy here would
-        # add a range-partitioning sampling job, which evaluates the
-        # observe node twice and breaks Observation's single-action rule
-        ddl_rows.sort(key=lambda r: (r["file"], r["pos"], r["row_idx"]))
-        rng = obs.get
-        stats.rows_in = rng["n"]
-        if rng["n"] == 0:
-            stats.skipped = True
-            return stats
-        stats.file_start, stats.pos_start = rng["lo"]["file"], rng["lo"]["pos"]
-        stats.file_end, stats.pos_end = rng["hi"]["file"], rng["hi"]["pos"]
-        if rng["txn_hi"] is not None:
-            stats.txn_file_end, stats.txn_pos_end = rng["txn_hi"]["file"], rng["txn_hi"]["pos"]
-        if wm_file is not None and (rng["hi"]["file"], rng["hi"]["pos"]) <= (wm_file, wm_pos):
-            stats.skipped = True
-            stats.wall_ms = int((time.time() - t0) * 1000)
-            return stats
-
-        # partial overlap: drop already-committed prefix (event-level fence)
-        batch = after_watermark(batch, wm_file, wm_pos)
-
-        # the DDL rows need the SAME fence (the wire path applies it in
-        # its manifest pass): a partial-overlap replay must not
-        # re-execute an already-committed TRUNCATE/ALTER — the replayed
-        # destructive DDL would wipe rows whose DML events are fenced
-        # out above and thus never re-applied
-        if wm_file is not None and ddl_rows:
-            ddl_rows = [
-                r for r in ddl_rows if (r["file"], r["pos"]) > (wm_file, wm_pos)
-            ]
-
-        trunc_fp = self._handle_ddl(ddl_rows) if ddl_rows else None
-        if trunc_fp is not None:
-            batch = after_watermark(batch, *trunc_fp)
-
-        schema = self.table.schema()
-
-        # --- DML: filter -> LWW dedup on raw maps -> typed projection ---
-        dml = dml_for_table(self._stream_filters(batch), self.schema_name, self.table_name)
-        if not int(rng["n_moves"] or 0):
-            # no PK-moving UPDATE in this batch (observe pass above) —
-            # zero-overhead keyed plan off the after image
-            keyed = dml.select(
-                F.element_at("after", k0).alias(k0),
-                F.element_at("after", k1).cast("int").alias(k1),
-                *[F.col(c) for c in LOG_ORDER],
-                "op",
-                "after",
-            )
-        else:
-            # PK-MOVING UPDATE (MySQL RBR row identity = before image):
-            # an UPDATE whose before-image key differs from the after
-            # key relocates the row, so the OLD key needs a tombstone
-            # at the same log position or it survives as a ghost.
-            # Emitted via explode of a 1-2 element struct array — one
-            # batch scan, no union branch. Tombstone payload = before
-            # map (deletes key on key_cols only; the map keeps the
-            # projection well-typed).
-            is_move = (
-                (F.col("op") == "UPDATE")
-                & F.col("before").isNotNull()
-                & (
-                    (F.element_at("before", k0)
-                     != F.element_at("after", k0))
-                    | (F.element_at("before", k1).cast("int")
-                       != F.element_at("after", k1).cast("int"))
-                )
-            )
-            upsert = F.struct(
-                F.element_at("after", k0).alias(k0),
-                F.element_at("after", k1).cast("int").alias(k1),
-                F.col("op").alias("op"),
-                F.col("after").alias("after"),
-            )
-            tomb = F.struct(
-                F.element_at("before", k0).alias(k0),
-                F.element_at("before", k1).cast("int").alias(k1),
-                F.lit("DELETE").alias("op"),
-                F.col("before").alias("after"),
-            )
-            keyed = dml.select(
-                *[F.col(c) for c in LOG_ORDER],
-                F.explode(
-                    F.when(is_move, F.array(tomb, upsert)).otherwise(
-                        F.array(upsert)
-                    )
-                ).alias("__e"),
-            ).select(
-                f"__e.{k0}", f"__e.{k1}", *[F.col(c) for c in LOG_ORDER],
-                "__e.op", "__e.after",
-            )
-        latest = self._lww(keyed, ["op", "after"])
-        non_key = [f for f in schema.fields if f.name not in self.key_cols]
-        changes = latest.select(
-            k0,
-            k1,
-            *typed_from_map(
-                "after",
-                T.StructType(non_key),
-                aliases=self.table.column_aliases(),
-            ),
-            (F.col("op") == "DELETE").alias("__delete"),
-        )
-
-        props = {
-            "offset_file": stats.file_end,
-            "offset_pos": str(stats.pos_end),
-            "batch_seq": str(batch_id),
-        }
-        if stats.txn_file_end is not None:
-            props["txn_end_file"] = stats.txn_file_end
-            props["txn_end_pos"] = str(stats.txn_pos_end)
-        if getattr(self, "_input_names", None):
-            # input-side cursor: the last (name-ordered) input file this
-            # commit covers — the streaming front-end skips groups at or
-            # below it without re-reading them
-            props["input_file_end"] = self._input_names[-1]
-        affected = sorted(
-            {b for b in rng["buckets"] if b is not None}
-            | {b for b in rng["before_buckets"] if b is not None}
-        )
-        # count_upserts=False: rows_applied comes from the first-pass
-        # observe (the reference's persisNum counter semantics); a
-        # merge-side Observation deadlocks under foreachBatch
-        changes = self._apply_transform(changes)
-        self._gate_expectations(changes, stats)
-        stats.write_mode = self.write_mode
-        if self.write_mode == "mor":
-            version, summary = self._commit_with_audit(
-                lambda wap: self.table.merge_mor(
-                    self.spark, changes, properties=props, stage_as=wap
-                ),
-                stats,
-            )
-            stats.snapshot_version = version
-            stats.bucket_rows = summary.get("bucket_rows")
-            self._maybe_compact(stats)
-        else:
-            version, summary = self._commit_with_audit(
-                lambda wap: self.table.merge(
-                    self.spark,
-                    changes,
-                    properties=props,
-                    affected_buckets=affected,
-                    count_upserts=False,
-                    stage_as=wap,
-                ),
-                stats,
-            )
-            stats.snapshot_version = version
-            stats.bucket_rows = summary.get("bucket_rows")
-        stats.rows_applied = rng["n_dml"]
-        stats.wall_ms = int((time.time() - t0) * 1000)
-        if rng["max_ts"] is not None:
-            stats.lag_s = time.time() - rng["max_ts"].timestamp()
-        self._maybe_grow(stats)
-        if self.expire_keep_last is not None:
-            self.table.expire_snapshots(keep_last=self.expire_keep_last)
-        self._append_lineage(stats)
-        return stats
 
     def _resolved_sort_by(self):
         """The job's ``compact_sort_by`` resolved through any applied
@@ -2358,7 +1693,7 @@ class CdcApplyJob:
         table-level expectations are declared (else commit directly —
         zero overhead on the hot path). ``commit_fn(stage_as)`` must
         stage when given an id and commit when given None (the
-        lakestore merge/merge_mor/adopt_delta contract). On a blocking
+        lakestore merge/adopt_delta contract). On a blocking
         violation the staged snapshot is aborted — data files reaped,
         table and watermark untouched — and the batch raises; replay
         after the fix goes through the normal fence."""
@@ -2479,6 +1814,444 @@ class CdcApplyJob:
         }
         with open(path, "a") as f:
             f.write(json.dumps(rec) + "\n")
+
+
+# ------------------------------------------------------------ source stages
+
+
+def _ms_since(t0: float) -> int:
+    return int((time.time() - t0) * 1000)
+
+
+def _fp(s) -> tuple | None:
+    """A (file, pos) struct value as a tuple (None stays None)."""
+    return None if s is None else (s["file"], s["pos"])
+
+
+def _past_fence(wm) -> Column:
+    """Rows strictly beyond the committed watermark ``wm`` — the
+    apply-semantics fence: replay-overlap rows at or before it are never
+    applied, so counting them would report phantom rows_applied."""
+    if wm[0] is None:
+        return F.lit(True)
+    return F.struct(F.col("file"), F.col("pos")) > F.struct(
+        F.lit(wm[0]).alias("file"), F.lit(wm[1]).alias("pos")
+    )
+
+
+@dataclass
+class _Manifest:
+    """A batch's offset manifest, from its source's one manifest pass:
+    everything the shared chain decides on before any decode."""
+
+    n: int  # rows in the batch (rows_in)
+    lo: tuple | None = None  # (file, pos) range
+    hi: tuple | None = None
+    txn_hi: tuple | None = None  # last txn boundary (B4)
+    n_dml: int = 0  # past-fence target DML rows (rows_applied, M1)
+    has_moves: bool = False  # any past-fence PK-moving UPDATE
+    max_ts_s: float | None = None  # newest event ts, epoch s (lag, M3)
+    bytes_in: int | None = None
+    ddl_rows: list = field(default_factory=list)  # past-fence, log order
+    incidents: list = field(default_factory=list)  # (file, pos, message)
+    heartbeat_ts: float | None = None
+    prefetched: bool = False  # computed ahead by the prefetch thread
+    speculation: ApplyStats | None = None  # its materialized winners' stats
+
+
+class _Keys(NamedTuple):
+    """How a source's change rows map onto the apply keys. ``key`` is
+    the key pair when the batch moved no primary key; under moves,
+    ``upsert`` is the after-image key and ``old`` the row identity
+    (before-image key) that a PK-moving row (``is_move``) tombstones
+    with ``old_payload``. ``payload`` names the row-image column LWW
+    keeps; ``as_map`` reads it as map<string,string>."""
+
+    payload: str
+    as_map: Column
+    key: tuple
+    upsert: tuple
+    old: tuple
+    old_payload: Column
+    is_move: Column
+
+
+class _TypedSource:
+    """Typed change events (parquet, or JSON lines — the reference's
+    flattened record shape as an ingest format). The manifest is an
+    Observation riding the driver collect of the batch's rare DDL
+    rows: one pass over the batch."""
+
+    def __init__(self, job: CdcApplyJob, paths: list[str]):
+        self.job = job
+        # schema-first read: no sampling pass, absent fields are null
+        reader = job.spark.read.schema(CHANGE_EVENT_SCHEMA)
+        self.df = (
+            reader.json(list(paths))
+            if job.source_format == "jsonl"
+            else reader.parquet(*paths)
+        )
+        k0, k1 = job.key_cols
+        after = (F.element_at("after", k0), F.element_at("after", k1))
+        before = (F.element_at("before", k0), F.element_at("before", k1))
+        is_move = (
+            (F.col("op") == "UPDATE")
+            & F.col("before").isNotNull()
+            & (
+                (before[0] != after[0])
+                | (before[1].cast("int") != after[1].cast("int"))
+            )
+        )
+        self.keys = _Keys(
+            "after", F.col("after"), after, after, before, F.col("before"), is_move
+        )
+
+    def manifest(self, wm, prefetched=None) -> _Manifest:
+        from pyspark.sql import Observation
+
+        job = self.job
+        target = (F.col("schema_name") == job.schema_name) & (
+            F.col("table_name") == job.table_name
+        )
+        applied_dml = (
+            F.col("op").isin("INSERT", "UPDATE", "DELETE") & target & _past_fence(wm)
+        )
+        fp = F.struct("file", "pos")
+        obs = Observation()
+        ddl_rows = (
+            self.df.observe(
+                obs,
+                F.min(fp).alias("lo"),
+                F.max(fp).alias("hi"),
+                F.count(F.lit(1)).alias("n"),
+                F.max(
+                    F.when(F.col("op").eqNullSafe("COMMIT") | F.col("is_ddl"), fp)
+                ).alias("txn_hi"),
+                F.max("ts").alias("max_ts"),
+                F.count(F.when(applied_dml, 1)).alias("n_dml"),
+                F.count(F.when(applied_dml & self.keys.is_move, 1)).alias("n_moves"),
+            )
+            .filter(F.col("is_ddl") & target)
+            .select(*LOG_ORDER, "ddl_sql")
+            .collect()
+        )
+        r = obs.get
+        # the DDL rows need the fence too: a partial-overlap replay must
+        # not re-execute an already-committed TRUNCATE/ALTER (it would
+        # wipe rows whose DML is fenced out and never re-applied). Sort
+        # driver-side: an orderBy would add a range-partitioning
+        # sampling job, evaluating the observe node twice
+        ddl_rows = sorted(
+            (d for d in ddl_rows if wm[0] is None or (d["file"], d["pos"]) > wm),
+            key=lambda d: (d["file"], d["pos"], d["row_idx"]),
+        )
+        return _Manifest(
+            n=r["n"],
+            lo=_fp(r["lo"]),
+            hi=_fp(r["hi"]),
+            txn_hi=_fp(r["txn_hi"]),
+            n_dml=r["n_dml"],
+            has_moves=bool(r["n_moves"]),
+            max_ts_s=r["max_ts"].timestamp() if r["max_ts"] is not None else None,
+            ddl_rows=ddl_rows,
+        )
+
+    def keyed_changes(self, wm, trunc_fp, stats: ApplyStats) -> DataFrame:
+        df = after_watermark(self.df, *wm)
+        if trunc_fp is not None:
+            # discard DML at or before the truncate (it was wiped)
+            df = after_watermark(df, *trunc_fp)
+        job = self.job
+        return dml_for_table(job._stream_filters(df), job.schema_name, job.table_name)
+
+
+class _WireSource:
+    """Raw binlog wire frames, decoded exactly ONCE per batch. The naive
+    structure (decode everything, then observe + merge) runs the
+    vectorized decode twice and shuffles fat map columns — measured on
+    local[8] vs local[32] it serialized on allocator/bandwidth
+    contention (scaling efficiency 0.19). Here the manifest is computed
+    JVM-side from the raw frames (header fields via substring/hex
+    arithmetic, per-frame row counts via higher-order array functions),
+    and LWW runs on the *packed* kv strings (narrow shuffle); maps and
+    typed columns are built only for the winners."""
+
+    def __init__(self, job: CdcApplyJob, paths: list[str]):
+        from .schema import RAW_FRAME_SCHEMA
+        from .sources.wire import ENTRY_SEP, kv_to_map
+
+        self.job = job
+        self.raw = job.spark.read.schema(RAW_FRAME_SCHEMA).parquet(*paths)
+        # keys come from the tiny key_kv map (isKey columns), NOT the
+        # full row image. key_kv is the ROW IDENTITY (before-image key,
+        # MySQL RBR semantics) — equal to the after key for everything
+        # except a PK-MOVING UPDATE. The upsert key is always the AFTER
+        # key; `same_key` is a pure string test (after_kv packs the key
+        # columns first, encoder invariant), so the full after map is
+        # parsed pre-LWW only for the rare rows that actually moved —
+        # and even a false negative here only costs that parse, never
+        # correctness.
+        k0, k1 = job.key_cols
+        key_map, akey = kv_to_map("key_kv"), kv_to_map("after_kv")
+        ident = (F.element_at(key_map, k0), F.element_at(key_map, k1))
+        same_key = (F.col("after_kv") == F.col("key_kv")) | F.col(
+            "after_kv"
+        ).startswith(F.concat(F.col("key_kv"), F.lit(ENTRY_SEP)))
+        maybe_moved = (F.col("op") == "UPDATE") & ~same_key
+        # authoritative map comparison, evaluated only under the rare
+        # maybe_moved branch (CASE WHEN short-circuits)
+        is_move = maybe_moved & (
+            (F.element_at(akey, k0) != ident[0])
+            | (F.element_at(akey, k1).cast("int") != ident[1].cast("int"))
+        )
+        upsert = tuple(
+            F.when(maybe_moved, F.element_at(akey, k)).otherwise(i)
+            for k, i in zip((k0, k1), ident)
+        )
+        # tombstone payload = key_kv, enough for a delete
+        self.keys = _Keys(
+            "after_kv", akey, ident, upsert, ident, F.col("key_kv"), is_move
+        )
+
+    def manifest(self, wm, prefetched=None) -> _Manifest:
+        """The batch's manifest: the prefetch thread's when still valid
+        under the current watermark, else one synchronous pass."""
+        if prefetched is not None:
+            fut, pwm = prefetched
+            try:
+                pm = fut.result()
+            except Exception:
+                pm = None  # prefetch failure -> synchronous pass
+            # a prefetched manifest was computed under the watermark in
+            # force at SUBMIT time (before the previous batch's commit
+            # advanced it). Its past-fence fields (n_dml, DDL and
+            # incident rows) are identical under both watermarks iff
+            # the batch lies wholly past the CURRENT fence too — the
+            # steady state. Replay overlap falls back to a synchronous
+            # pass (and drops the speculated winners with it).
+            if pm is not None and (
+                pwm == wm or not pm.n or (wm[0] is not None and wm < pm.lo)
+            ):
+                pm.prefetched = True
+                return pm
+        return self._scan(wm)
+
+    def _scan(self, wm) -> _Manifest:
+        """The single JVM aggregation over a batch's raw frames that
+        yields the offset manifest — no Python, no decode — plus the
+        driver-side decode of the handful of collected DDL and INCIDENT
+        frames."""
+        from .sources.wire import ENTRY_SEP, FIELD_SEP
+
+        job = self.job
+        body = F.decode(
+            F.expr("substring(payload, 20, length(payload)-23)"), "UTF-8"
+        )
+        op0 = F.substring_index(body, FIELD_SEP, 1)
+        rows_arr = F.split(body, "\x1c")
+        # target-DML row test without per-row splits: values never
+        # contain the separator bytes (framing invariant), so the
+        # schema/table fields match iff the signature substring occurs
+        sig = f"{FIELD_SEP}{job.schema_name}{FIELD_SEP}{job.table_name}{FIELD_SEP}"
+        is_dml_row = lambda r: r.contains(sig) & (  # noqa: E731
+            r.startswith("INSERT" + FIELD_SEP)
+            | r.startswith("UPDATE" + FIELD_SEP)
+            | r.startswith("DELETE" + FIELD_SEP)
+        )
+        # PK-move candidate test on the RAW row text (body fields: op=0,
+        # …, key_kv=7, before_kv=8, after_kv=9; values never contain the
+        # separator bytes): an UPDATE row whose key_kv (= before-image
+        # key, the row identity) is not the entry-prefix of after_kv
+        # moved its key. Short-circuits after the op test, so the two
+        # substring_index scans run for UPDATE rows only; a batch with
+        # no moves then keeps the zero-overhead keyed plan.
+        _kk = lambda r: F.substring_index(  # noqa: E731
+            F.substring_index(r, FIELD_SEP, 8), FIELD_SEP, -1
+        )
+        _ak = lambda r: F.substring_index(r, FIELD_SEP, -1)  # noqa: E731
+        mv_cand = lambda r: (  # noqa: E731
+            r.startswith("UPDATE" + FIELD_SEP)
+            # target-table rows only: another table's key layout must
+            # not pin the explode plan on for every batch
+            & r.contains(sig)
+            & ~(
+                (_ak(r) == _kk(r))
+                | _ak(r).startswith(F.concat(_kk(r), F.lit(ENTRY_SEP)))
+            )
+        )
+        h = F.hex(F.expr("substring(payload, 1, 4)"))  # LE u32 ts
+        ts_le = F.conv(
+            F.concat(
+                F.substring(h, 7, 2), F.substring(h, 5, 2),
+                F.substring(h, 3, 2), F.substring(h, 1, 2),
+            ),
+            16, 10,
+        ).cast("long")
+        is_commit = op0 == "COMMIT"
+        # DDL candidates: gated on the HEADER TYPE BYTE being QUERY(2) —
+        # the reference's decoder dispatch (LogDecoder.java:108-134) —
+        # not merely "unknown op text": a corrupt/adversarial stream can
+        # make arbitrary frames carry unknown ops, and collecting their
+        # full payloads would be an unbounded driver collect. QUERY
+        # frames are BEGIN or DDL; BEGIN is excluded by op text.
+        cand_ddl = F.expr("substring(payload, 5, 1) = X'02'") & (op0 != "BEGIN")
+        past_fence = _past_fence(wm)
+        # control-event classification on the header type byte
+        # (LogDecoder.java:94-491 dispatch): HEARTBEAT(27) feeds M4
+        # liveness, INCIDENT(26) feeds the C5 incident policy. Both are
+        # rare by nature (heartbeats only at idle, incidents on master
+        # faults), so the bounded collect below is safe; an incident
+        # FLOOD past the cap fails loudly. Incidents count past the
+        # fence only, like n_dml: already-applied incidents were
+        # handled when first seen and must not re-fail (or flood) a
+        # replay.
+        is_hb = F.expr("substring(payload, 5, 1) = X'1B'")
+        is_incident = F.expr("substring(payload, 5, 1) = X'1A'") & past_fence
+        # n_dml counts target-DML rows PAST THE FENCE only (lineage
+        # rows_applied semantics; replay-overlap rows are not applied).
+        # CRC caveat: this JVM pass does not checksum-verify frames — a
+        # corrupt frame that still pattern-matches the DML signature is
+        # counted here but dropped by the decode, so rows_applied is an
+        # upper bound under corruption (exact on clean streams).
+        fp = F.struct("file", "pos")
+        r = self.raw.select(
+            "file", "pos", "payload",
+            rows_arr.alias("rows_arr"), op0.alias("op0"),
+            is_commit.alias("is_commit"), cand_ddl.alias("cand_ddl"),
+            is_hb.alias("is_hb"), is_incident.alias("is_incident"),
+            past_fence.alias("past_fence"),
+            ts_le.alias("ts_s"),
+        ).agg(
+            F.min(fp).alias("lo"),
+            F.max(fp).alias("hi"),
+            F.sum(F.size("rows_arr")).alias("n"),
+            F.sum(
+                F.when(
+                    F.col("past_fence"), F.size(F.filter("rows_arr", is_dml_row))
+                ).otherwise(F.lit(0))
+            ).alias("n_dml"),
+            F.max(F.when(F.col("is_commit") | F.col("cand_ddl"), fp)).alias("txn_hi"),
+            F.sum(F.length("payload")).alias("bytes_in"),
+            F.max("ts_s").alias("max_ts_s"),
+            F.sum(F.col("cand_ddl").cast("long")).alias("n_cand_ddl"),
+            F.max(F.exists("rows_arr", mv_cand).cast("int")).alias("has_moves"),
+            F.slice(
+                F.collect_list(
+                    F.when(F.col("cand_ddl"), F.struct("file", "pos", "payload"))
+                ),
+                1,
+                job.MAX_DDL_FRAMES_PER_BATCH + 1,
+            ).alias("ddl_frames"),
+            F.max(F.when(F.col("is_hb"), F.col("ts_s"))).alias("hb_ts_s"),
+            F.sum(F.col("is_incident").cast("long")).alias("n_incident"),
+            F.slice(
+                F.collect_list(
+                    F.when(
+                        F.col("is_incident"), F.struct("file", "pos", "payload")
+                    )
+                ),
+                1,
+                job.MAX_INCIDENT_FRAMES_PER_BATCH + 1,
+            ).alias("incident_frames"),
+        ).collect()[0]
+        if int(r["n_cand_ddl"] or 0) > job.MAX_DDL_FRAMES_PER_BATCH:
+            raise RuntimeError(
+                f"{r['n_cand_ddl']} candidate-DDL (QUERY) frames in batch "
+                f"exceed the {job.MAX_DDL_FRAMES_PER_BATCH} cap — "
+                "refusing the unbounded driver collect. Either the input is "
+                "corrupt/adversarial or the batch genuinely carries that much "
+                "DDL; split it into smaller micro-batches."
+            )
+        n_incident = int(r["n_incident"] or 0)
+        if n_incident > job.MAX_INCIDENT_FRAMES_PER_BATCH:
+            raise IncidentError([("<flood>", n_incident, "incident-frame flood")])
+        return _Manifest(
+            n=int(r["n"] or 0),
+            lo=_fp(r["lo"]),
+            hi=_fp(r["hi"]),
+            txn_hi=_fp(r["txn_hi"]),
+            n_dml=int(r["n_dml"] or 0),
+            has_moves=bool(r["has_moves"]),
+            max_ts_s=float(r["max_ts_s"]) if r["max_ts_s"] is not None else None,
+            bytes_in=int(r["bytes_in"] or 0),
+            ddl_rows=self._ddl_rows(r["ddl_frames"], wm),
+            incidents=self._incidents(r["incident_frames"]),
+            heartbeat_ts=float(r["hb_ts_s"]) if r["hb_ts_s"] is not None else None,
+        )
+
+    @staticmethod
+    def _decode(frames):
+        import pandas as pd
+
+        from .sources.wire import _decode_batch
+
+        return _decode_batch(
+            pd.DataFrame(
+                [(f["file"], f["pos"], bytes(f["payload"])) for f in frames],
+                columns=["file", "pos", "payload"],
+            )
+        )
+
+    def _ddl_rows(self, frames, wm) -> list:
+        """Decode the capped candidate-DDL frames driver-side and keep
+        the past-fence DDL statements addressed to the target table — the
+        batch's ordered schema-evolution input."""
+        if not frames:
+            return []
+        job = self.job
+        dd = self._decode(frames)
+        dd = dd[
+            dd["is_ddl"]
+            & dd["crc_ok"]
+            & (dd["schema_name"] == job.schema_name)
+            & (dd["table_name"] == job.table_name)
+        ]
+        if wm[0] is not None:
+            dd = dd[dd.apply(lambda d: (d["file"], d["pos"]) > wm, axis=1)]
+        return dd.sort_values(["file", "pos", "row_idx"]).to_dict("records")
+
+    def _incidents(self, frames) -> list:
+        """Decode the capped (past-fence) INCIDENT frames driver-side
+        into (file, pos, message) triples."""
+        if not frames:
+            return []
+        dd = self._decode(frames)
+        dd = dd[dd["crc_ok"] & (dd["op"] == "INCIDENT")]
+        out = []
+        for _, d in dd.sort_values(["file", "pos"]).iterrows():
+            # wire payload "number:message" (mysql_events fixture form);
+            # a bare message is carried verbatim
+            raw_msg = d["ddl_sql"] or ""
+            msg = raw_msg.split(":", 1)[1] if ":" in raw_msg else raw_msg
+            out.append((d["file"], int(d["pos"]), msg))
+        return out
+
+    def keyed_changes(self, wm, trunc_fp, stats: ApplyStats) -> DataFrame:
+        from .sources.wire import decode_frames_kv
+
+        job = self.job
+        raw_f = after_watermark(self.raw, *wm)
+        if trunc_fp is not None:
+            # discard DML at or before the truncate (it was wiped)
+            raw_f = after_watermark(raw_f, *trunc_fp)
+        if job.quarantine_dir is not None:
+            stats.frames_quarantined = job._quarantine(raw_f, stats.batch_id)
+        # F4 pre-decode gate, faithful to the reference's decoder
+        # BitSet (LogDecoder.java:108-134): only row-event frames
+        # (WRITE/UPDATE/DELETE_ROWS, header type byte 30/31/32) reach
+        # the Python decode — BEGIN/COMMIT/DDL frames (~1/3 of the
+        # stream) were fully consumed by the JVM manifest pass
+        raw_dml = raw_f.filter(
+            F.expr("substring(payload, 5, 1) IN (X'1E', X'1F', X'20')")
+        )
+        dml = dml_for_table(
+            job._stream_filters(decode_frames_kv(raw_dml)),
+            job.schema_name,
+            job.table_name,
+        )
+        # GTID-set fencing (wire twin of after_gtid_set; identity when
+        # no fence is configured)
+        return job._wire_gtid_fence(raw_f, dml)
 
 
 class MultiApplyJob:

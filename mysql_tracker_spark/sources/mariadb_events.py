@@ -21,7 +21,7 @@ BitSet, ``LogDecoder.java:108-134``):
 
 * **wire/frame level** — the types are enumerated and classified;
   none of them is a row event, so the JVM pre-decode gate
-  (``runner._apply_wire_df``: header type byte in 30/31/32) skips
+  (``runner._WireSource.keyed_changes``: header type byte in 30/31/32) skips
   them without a Python decode, exactly like BEGIN/COMMIT frames.
 * **byte level** — the real MariaDB body layouts (public format,
   documented in the MariaDB knowledge base "Replication Protocol"

@@ -2,7 +2,7 @@
 query).
 
 The batch replay loop (``runner.CdcApplyJob``) is the canonical apply
-path; this wraps the same ``apply_df`` in ``readStream -> foreachBatch``
+path; this wraps the same ``apply_batch`` in ``readStream -> foreachBatch``
 so an unbounded directory of arriving micro-batch files is tailed like
 the reference tails the binlog socket:
 
@@ -313,6 +313,23 @@ class Heartbeat:
         self.stream_job = stream_job
         self.stall_after_s = stall_after_s
         self.query = None
+        # fold of stream_job.stats[:_scanned]: the newest batch id and
+        # heartbeat ts seen, so a probe reads only the batches applied
+        # since the previous one — O(new batches), not O(uptime)
+        self._scanned = 0
+        self._last_batch = None
+        self._heartbeat_ts = None
+
+    def _fold_new_stats(self) -> None:
+        stats = self.stream_job.stats
+        for i in range(self._scanned, len(stats)):
+            s = stats[i]
+            if self._last_batch is None or s.batch_id > self._last_batch:
+                self._last_batch = s.batch_id
+            ts = getattr(s, "heartbeat_ts", None)
+            if ts is not None and (self._heartbeat_ts is None or ts > self._heartbeat_ts):
+                self._heartbeat_ts = ts
+        self._scanned = len(stats)
 
     def attach(self, query) -> None:
         import time
@@ -322,9 +339,8 @@ class Heartbeat:
         # completes its FIRST batch (poison file, misconfigured source
         # path) would probe progress_ok=True forever — the exact dead
         # fetcher M4 exists to notice
-        self._last_seen_batch = max(
-            (s.batch_id for s in self.stream_job.stats), default=None
-        )
+        self._fold_new_stats()
+        self._last_seen_batch = self._last_batch
         self._last_seen_ts = time.time()
 
     def probe(self) -> dict:
@@ -347,10 +363,11 @@ class Heartbeat:
             )
         except (OSError, KeyError, ValueError):
             checks["sink_ok"] = False
+        self._fold_new_stats()
         if self.query is not None:
             alive = self.query.isActive and self.query.exception() is None
             checks["query_alive"] = alive
-            last = max((s.batch_id for s in self.stream_job.stats), default=None)
+            last = self._last_batch
             last_ts = getattr(self, "_last_seen_ts", None)
             if last != getattr(self, "_last_seen_batch", None):
                 self._last_seen_batch = last
@@ -365,16 +382,7 @@ class Heartbeat:
         # HEARTBEAT_LOG_EVENT the master sends at idle). Informational
         # — it measures the MASTER's pulse, not this engine's progress
         # — so it is excluded from the reload decision below.
-        # reverse scan, first hit wins: batch order follows stream
-        # time, so the newest batch carrying a heartbeat holds the max
-        # ts — probe cost stays O(batches since last heartbeat), not
-        # O(uptime) (review fix)
-        hb = None
-        for s in reversed(self.stream_job.stats):
-            ts = getattr(s, "heartbeat_ts", None)
-            if ts is not None:
-                hb = ts
-                break
+        hb = self._heartbeat_ts
         checks["master_heartbeat_age_s"] = (
             time.time() - hb if hb is not None else None
         )

@@ -20,6 +20,7 @@ Prints one JSON line per applied batch and a final summary line.
 from __future__ import annotations
 
 import argparse
+import dataclasses
 import json
 import sys
 
@@ -226,7 +227,8 @@ def main() -> None:
         help="stamp per-file bloom bitmaps over these columns at every "
         "write (Delta bloom-index analogue; table-creation time only) "
         "so exact-value point reads via read_where_in skip files that "
-        "min/max bounds cannot",
+        "min/max bounds cannot; --write-mode mor deltas carry no "
+        "bitmaps until compaction",
     )
     ap.add_argument(
         "--bootstrap-snapshot", nargs=3, default=None,
@@ -375,122 +377,66 @@ def main() -> None:
             file=sys.stderr,
         )
 
+    # ONE JobConfig for every path: the --config file (without one, the
+    # defaults and no position policy) with each flag passed on top;
+    # then one constructor call builds the job from it
+    from mysql_tracker_spark.config import JobConfig
+    from mysql_tracker_spark.runner import CdcApplyJob, config_kwargs
+
+    cfg = (
+        JobConfig.load(args.config)
+        if args.config
+        else JobConfig(on_invalid_position=None)
+    )
+    flags = {
+        "input_dir": args.input,
+        "table_path": args.table,
+        "source_format": args.format,
+        "n_buckets": args.buckets,
+        "files_per_batch": args.files_per_batch,
+        "on_destructive_ddl": args.on_destructive_ddl,
+        "n_salts": args.salts,
+        "quarantine_dir": args.quarantine_dir,
+        "write_mode": args.write_mode,
+        "mor_compact_threshold": args.mor_compact_threshold,
+        "compact_sort_by": args.compact_sort_by,
+        "compact_files_per_bucket": args.compact_files_per_bucket,
+        "bloom_cols": [c for c in args.bloom_cols.split(",") if c]
+        if args.bloom_cols is not None
+        else None,
+        "auto_split_rows_per_bucket": args.auto_split_rows_per_bucket,
+        "gtid_list": args.gtid_list,
+        "gtid_set": args.gtid_set,
+        "incident_policy": args.incident_policy,
+    }
+    cfg = dataclasses.replace(cfg, **{k: v for k, v in flags.items() if v is not None})
+    # options a JSON config cannot carry
+    extra = {"expire_keep_last": args.expire_keep_last, "branch": args.branch}
+    if expectations:
+        extra["expectations"] = expectations
+
     if args.streaming:
         if args.branch is not None:
             print("--branch is batch-mode only", file=sys.stderr)
             sys.exit(2)
         from mysql_tracker_spark.streaming import CdcStreamJob
 
-        job = CdcStreamJob(
+        # the streaming front-end wraps the SAME apply job — every
+        # operator-facing option must reach it (a --expect gate or a
+        # GTID fence silently not enforced would merge the wrong rows)
+        stream = CdcStreamJob(
             spark,
-            args.input,
-            args.table,
+            cfg.input_dir,
+            cfg.table_path,
             checkpoint_dir=args.checkpoint or args.table + "_ckpt",
-            source_format=args.format or "typed",
-            n_buckets=args.buckets if args.buckets is not None else 64,
-            # the streaming front-end wraps the SAME apply job — every
-            # operator-facing option must reach it (a --expect gate
-            # silently not enforced would merge bad rows with no error)
-            files_per_batch=args.files_per_batch if args.files_per_batch is not None else 1,
-            on_destructive_ddl=args.on_destructive_ddl or "raise",
-            n_salts=args.salts if args.salts is not None else 0,
-            quarantine_dir=args.quarantine_dir,
-            expectations=expectations,
-            write_mode=args.write_mode or "cow",
-            mor_compact_threshold=args.mor_compact_threshold
-            if args.mor_compact_threshold is not None
-            else 8,
-            auto_split_rows_per_bucket=args.auto_split_rows_per_bucket,
+            **{**config_kwargs(cfg), **extra},
         )
-        if args.expire_keep_last is not None:
-            job.job.expire_keep_last = args.expire_keep_last
-        if args.gtid_list is not None:
-            job.job.gtid_list = args.gtid_list
-        if args.gtid_set is not None:
-            job.job.gtid_set = args.gtid_set
-        if args.incident_policy is not None:
-            job.job.incident_policy = args.incident_policy
-        if args.reset_policy:
-            probe = job.job.validate_position(reset_policy=args.reset_policy)
-            print(json.dumps({"position_probe": probe}), file=sys.stderr)
-        stats = job.run_available()
+        job = stream.job
     else:
-        from mysql_tracker_spark.runner import CdcApplyJob
-
-        if args.config:
-            from mysql_tracker_spark.config import JobConfig
-
-            cfg = JobConfig.load(args.config)
-            cfg.input_dir = args.input or cfg.input_dir
-            cfg.table_path = args.table or cfg.table_path
-            if args.format is not None:
-                cfg.source_format = args.format
-            if args.buckets is not None:
-                cfg.n_buckets = args.buckets
-            if args.files_per_batch is not None:
-                cfg.files_per_batch = args.files_per_batch
-            if args.on_destructive_ddl:
-                cfg.on_destructive_ddl = args.on_destructive_ddl
-            if args.salts is not None:
-                cfg.n_salts = args.salts
-            if args.quarantine_dir is not None:
-                cfg.quarantine_dir = args.quarantine_dir
-            if args.write_mode is not None:
-                cfg.write_mode = args.write_mode
-            if args.mor_compact_threshold is not None:
-                cfg.mor_compact_threshold = args.mor_compact_threshold
-            if args.compact_sort_by is not None:
-                cfg.compact_sort_by = args.compact_sort_by
-            if args.compact_files_per_bucket is not None:
-                cfg.compact_files_per_bucket = args.compact_files_per_bucket
-            if args.bloom_cols is not None:
-                cfg.bloom_cols = [c for c in args.bloom_cols.split(",") if c]
-            if args.auto_split_rows_per_bucket is not None:
-                cfg.auto_split_rows_per_bucket = args.auto_split_rows_per_bucket
-            job2 = CdcApplyJob.from_config(spark, cfg)
-            job2.expectations = expectations or job2.expectations
-            if args.gtid_list is not None:
-                job2.gtid_list = args.gtid_list
-            if args.gtid_set is not None:
-                job2.gtid_set = args.gtid_set
-            if args.incident_policy is not None:
-                job2.incident_policy = args.incident_policy
-            if args.branch is not None:
-                job2.branch = args.branch
-        else:
-            job2 = CdcApplyJob(
-                spark,
-                args.input,
-                args.table,
-                n_buckets=args.buckets if args.buckets is not None else 64,
-                files_per_batch=args.files_per_batch if args.files_per_batch is not None else 1,
-                source_format=args.format or "typed",
-                on_destructive_ddl=args.on_destructive_ddl or "raise",
-                n_salts=args.salts if args.salts is not None else 0,
-                quarantine_dir=args.quarantine_dir,
-                gtid_list=args.gtid_list,
-                gtid_set=args.gtid_set,
-                incident_policy=args.incident_policy or "fail",
-                expectations=expectations,
-                write_mode=args.write_mode or "cow",
-                mor_compact_threshold=args.mor_compact_threshold
-                if args.mor_compact_threshold is not None
-                else 8,
-                compact_sort_by=args.compact_sort_by,
-                compact_files_per_bucket=args.compact_files_per_bucket
-                if args.compact_files_per_bucket is not None
-                else 1,
-                bloom_cols=[c for c in args.bloom_cols.split(",") if c]
-                if args.bloom_cols
-                else None,
-                auto_split_rows_per_bucket=args.auto_split_rows_per_bucket,
-                branch=args.branch,
-            )
-        if args.expire_keep_last is not None:
-            job2.expire_keep_last = args.expire_keep_last
+        job = CdcApplyJob.from_config(spark, cfg, **extra)
         if args.bootstrap_snapshot is not None:
             snap_dir, bfile, bpos = args.bootstrap_snapshot
-            v = job2.bootstrap_snapshot(
+            v = job.bootstrap_snapshot(
                 spark.read.parquet(snap_dir), bfile, int(bpos)
             )
             print(
@@ -499,10 +445,14 @@ def main() -> None:
                 ),
                 file=sys.stderr,
             )
-        if args.reset_policy:
-            probe = job2.validate_position(reset_policy=args.reset_policy)
-            print(json.dumps({"position_probe": probe}), file=sys.stderr)
-        stats = job2.run(max_batches=args.max_batches)
+    if args.reset_policy:
+        probe = job.validate_position(reset_policy=args.reset_policy)
+        print(json.dumps({"position_probe": probe}), file=sys.stderr)
+    stats = (
+        stream.run_available()
+        if args.streaming
+        else job.run(max_batches=args.max_batches)
+    )
 
     total = 0
     for s in stats:

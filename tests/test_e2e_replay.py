@@ -379,8 +379,11 @@ def _inject_ddl_event(ev, frac, op, sql):
         "schema_name": "chat", "table_name": "transcripts",
         "is_ddl": True, "ddl_sql": sql, "before": None, "after": None,
     }
+    # the new row carries ev's column dtypes: an all-NA column of another
+    # dtype makes concat warn (pandas deprecation)
+    row_df = pd.DataFrame([row]).astype(ev.dtypes[list(row)].to_dict())
     out = pd.concat(
-        [ev.iloc[:cut_row], pd.DataFrame([row]), ev.iloc[cut_row:]],
+        [ev.iloc[:cut_row], row_df, ev.iloc[cut_row:]],
         ignore_index=True,
     )
     for c in ("before", "after"):

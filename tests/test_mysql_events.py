@@ -520,8 +520,9 @@ def test_gtid_set_parser_contract():
     # empty set normalizes to None at the real constructor (the
     # constructor needs only plain args — no SparkSession touched)
     j = CdcApplyJob(None, "/tmp/x", "/tmp/y", gtid_set="")
-    assert j.gtid_set is None and j._gtid_set_parsed is None
+    assert j.gtid_set is None and not j._gtid_text_inside(f"{u}:1")
     with pytest.raises(ValueError):
         CdcApplyJob(None, "/tmp/x", "/tmp/y", gtid_set="garbage")
     j2 = CdcApplyJob(None, "/tmp/x", "/tmp/y", gtid_set=f"{u}:1-3")
-    assert j2._gtid_set_parsed == {u: [(1, 3)]}
+    assert [j2._gtid_text_inside(f"{u}:{n}") for n in (1, 3, 4)] == [True, True, False]
+    assert not j2._gtid_text_inside(f"{SERVER_UUID[:-1]}0:2")  # other server

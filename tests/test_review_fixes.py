@@ -80,7 +80,10 @@ def test_pk_move_across_buckets_no_ghost(spark, tmp_path):
         "op": "UPDATE", "schema_name": "chat", "table_name": "transcripts",
         "is_ddl": False, "ddl_sql": None, "before": before, "after": after,
     }
-    ev2 = pd.concat([ev, pd.DataFrame([move_row])], ignore_index=True)
+    # the new row carries ev's column dtypes: an all-NA column of another
+    # dtype makes concat warn (pandas deprecation)
+    move_df = pd.DataFrame([move_row]).astype(ev.dtypes[list(move_row)].to_dict())
+    ev2 = pd.concat([ev, move_df], ignore_index=True)
     for c in ("before", "after"):
         ev2[c] = ev2[c].astype(object).where(ev2[c].notna(), None)
     ev2["xid"] = ev2["xid"].astype("Int64")

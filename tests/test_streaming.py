@@ -316,7 +316,9 @@ def test_stateful_sessionize_stream_across_batches(spark, tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    thirds = np.array_split(pdf, 3)
+    # split row positions, not the frame: np.array_split on a DataFrame
+    # goes through the deprecated DataFrame.swapaxes
+    thirds = [pdf.iloc[ix] for ix in np.array_split(np.arange(len(pdf)), 3)]
     for i, part in enumerate(thirds):
         out = pd.DataFrame(
             {

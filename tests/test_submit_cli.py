@@ -360,6 +360,35 @@ def test_spark_submit_gtid_set_fence_and_incident_record(tmp_path):
     control-event-laden MySQL stream (GTID groups, heartbeats, one
     INCIDENT): fenced transactions never land, the incident is
     recorded not fatal, and the final table equals the suffix oracle."""
+    _submit_gtid_fence_with_incident(tmp_path, seed=47, streaming=False)
+
+
+def test_spark_submit_streaming_gtid_set_fence_carries_across_batches(tmp_path):
+    """The same CLI surface through --streaming, with the fence on the
+    transaction that straddles the batch cut: the streaming front-end
+    must build its job with the GTID set (not patch it in afterwards),
+    so batch 0 commits that open fenced group as its carry and batch 1
+    fences the group's tail rows."""
+    from mysql_tracker_spark.lakestore import LakeTable
+
+    tbl, fence = _submit_gtid_fence_with_incident(tmp_path, seed=41, streaming=True)
+    t = LakeTable.load(tbl)
+    first = next(
+        h["version"]
+        for h in t.watermark_history()
+        if t.properties(h["version"]).get("batch_seq") == "0"
+    )
+    assert t.properties(first).get("gtid_fence_carry") == str(fence)
+
+
+def _submit_gtid_fence_with_incident(tmp_path, seed: int, streaming: bool):
+    """Apply a 2-batch MySQL-flavored wire stream through spark-submit
+    under --gtid-set and --incident-policy record, and check the result
+    against the suffix oracle. The fence is the median transaction,
+    or under ``streaming`` the one whose rows straddle the batch cut.
+    Returns the table path and the fence's last transaction."""
+    import pyarrow.parquet as pq
+
     from mysql_tracker_spark.sources.binlog_gen import (
         SERVER_UUID,
         GenConfig,
@@ -369,12 +398,20 @@ def test_spark_submit_gtid_set_fence_and_incident_record(tmp_path):
     from mysql_tracker_spark.sources.mysql_events import mysql_control_flavor
     from mysql_tracker_spark.sources.wire import write_wire_batches
 
-    ev = gen_change_events(GenConfig(n_events=1200, n_conversations=50, seed=47))
+    ev = gen_change_events(GenConfig(n_events=1200, n_conversations=50, seed=seed))
     fl = mysql_control_flavor(ev, heartbeat_every=400, incident_at=300)
     in_dir = str(tmp_path / "in")
-    write_wire_batches(fl, in_dir, n_batches=2)
+    paths = write_wire_batches(fl, in_dir, n_batches=2)
     xids = sorted(ev["xid"].dropna().astype(int).unique())
     mid = xids[len(xids) // 2]
+    if streaming:
+        first = pq.read_table(paths[0], columns=["file", "pos"]).to_pandas()
+        cut = max(zip(first["file"], first["pos"]))
+        dml = ev[ev["op"].isin(["INSERT", "UPDATE", "DELETE"])].dropna(subset=["xid"])
+        side = [(f, p) <= cut for f, p in zip(dml["file"], dml["pos"])]
+        straddle = set(dml["xid"][side]) & set(dml["xid"][[not s for s in side]])
+        assert len(straddle) == 1, straddle
+        mid = int(straddle.pop())
     tbl = str(tmp_path / "tbl")
 
     z = _zip_pkg(tmp_path)
@@ -383,7 +420,8 @@ def test_spark_submit_gtid_set_fence_and_incident_record(tmp_path):
          "--input", in_dir, "--table", tbl, "--format", "wire",
          "--buckets", "4",
          "--gtid-set", f"{SERVER_UUID}:1-{mid}",
-         "--incident-policy", "record"],
+         "--incident-policy", "record"]
+        + (["--streaming", "--checkpoint", str(tmp_path / "ckpt")] if streaming else []),
         cwd=str(tmp_path),
     )
     assert res.returncode == 0, res.stderr[-4000:]
@@ -417,3 +455,4 @@ def test_spark_submit_gtid_set_fence_and_incident_record(tmp_path):
     assert os.path.exists(lineage), "lineage JSONL missing"
     recs = [json.loads(l) for l in open(lineage)]
     assert any(r.get("incidents") for r in recs), "incident not recorded in lineage"
+    return tbl, mid
