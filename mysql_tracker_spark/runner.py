@@ -32,7 +32,7 @@ import json
 import os
 import time
 import uuid
-from dataclasses import dataclass, field
+from dataclasses import asdict, dataclass, field
 from typing import NamedTuple
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F, types as T
@@ -247,8 +247,11 @@ class CdcApplyJob:
     # is (a legitimately >1h in-flight batch on a shared table path
     # keeps its staging), and one whose marker went stale
     # (>OWNER_STALE_S — the process died, daemon thread with it) is
-    # provably debris and reaped immediately. Dirs with no marker at
-    # all (legacy/unparseable) fall back to the age gate.
+    # debris and reaped immediately. A live job whose marker cannot be
+    # refreshed (disk full, permissions) fails its next apply_batch
+    # before staging, so a stale marker never hides in-flight staging.
+    # Dirs with no marker at all (legacy/unparseable) fall back to the
+    # age gate.
     STAGING_DEBRIS_AGE_S = 3600.0
     OWNER_HEARTBEAT_S = 60.0
     OWNER_STALE_S = 900.0
@@ -297,7 +300,6 @@ class CdcApplyJob:
         auto_split_rows_per_bucket: int | None = None,
         auto_split_migrate_per_batch: int = 16,
         branch: str | None = None,
-        pipeline_prefetch: bool = True,
         gtid_list: str | None = None,
         gtid_set: str | None = None,
         incident_policy: str = "fail",  # fail | record
@@ -327,10 +329,10 @@ class CdcApplyJob:
         self.files_per_batch = files_per_batch
         self.source_format = source_format
         self.n_salts = n_salts
-        # unique per-job staging namespace: fixed _delta_<batch_id> /
-        # _winners_<batch_id> names would let two jobs on one table
-        # path (main apply + a concurrent branch apply) overwrite or
-        # adopt each other's in-flight staged data
+        # unique per-job staging namespace: a fixed _delta_<batch_id>
+        # name would let two jobs on one table path (main apply + a
+        # concurrent branch apply) overwrite or adopt each other's
+        # in-flight staged data
         import uuid as _uuid
 
         self._run_id = _uuid.uuid4().hex[:8]
@@ -361,14 +363,6 @@ class CdcApplyJob:
         self.incident_policy = incident_policy
         # auto skew escalation state (see AUTO_SALT_RATIO)
         self._escalated = False
-        # pipelined micro-batches (wire source): the run loop prefetches
-        # the NEXT batch's JVM manifest pass concurrently with the
-        # current batch's delta+merge (~12% of batch wall measured);
-        # revalidated against the advanced watermark by
-        # _WireSource.manifest when apply_batch consumes it
-        self.pipeline_prefetch = pipeline_prefetch
-        # batch_id -> (Future[_Manifest], (wm_file, wm_pos)); <=2 entries
-        self._prefetch: dict = {}
         # C2 bootstrap fallback (reference order: checkpoint first, then
         # config-supplied position — HandlerMagpieKafka.java:363-406)
         self.start_file = start_file
@@ -519,7 +513,9 @@ class CdcApplyJob:
                 if not d.startswith(("_delta_", "_winners_")):
                     continue
                 p = os.path.join(self.table_path, d)
-                # names are _delta_<run_id>_<batch_id> / _winners_...
+                # names are _delta_<run_id>_<batch_id>; _winners_ dirs
+                # are left by an earlier version that staged LWW winners
+                # ahead of their batch
                 parts = d.split("_")
                 run_id = parts[2] if len(parts) >= 4 else ""
                 age = _marker_age(run_id) if run_id else None
@@ -579,25 +575,39 @@ class CdcApplyJob:
             self.table_path, f"_owner_{run_id or self._run_id}.alive"
         )
 
+    def _touch_owner(self) -> None:
+        """Refresh ``_owner_<run_id>.alive`` (create it if missing).
+        Raises RuntimeError when the marker cannot be written: its age
+        then no longer proves this job live, and a concurrent
+        prepare() would reap staging written from here on."""
+        marker = self._owner_marker()
+        try:
+            with open(marker, "a"):
+                pass
+            os.utime(marker, None)
+        except OSError as e:
+            raise RuntimeError(
+                f"cannot refresh ownership marker {marker} ({e}); refusing "
+                "to stage — a concurrent prepare() sweep could reap it"
+            ) from e
+
     def _start_owner_heartbeat(self) -> None:
         """Ownership liveness for the staging sweep: touch
         ``_owner_<run_id>.alive`` now and every OWNER_HEARTBEAT_S from
         a daemon thread. The thread dies with the process, so a killed
         job's marker goes stale and its staging becomes reapable —
-        genuine liveness, not an age heuristic. Idempotent."""
+        genuine liveness, not an age heuristic. A failed refresh here
+        is not fatal: ``apply_batch`` refreshes the marker itself and
+        raises before staging anything. Idempotent."""
         if getattr(self, "_owner_stop", None) is not None:
             return
         import threading
 
-        marker = self._owner_marker()
-
         def _touch():
             try:
-                with open(marker, "a"):
-                    pass
-                os.utime(marker, None)
-            except OSError:
-                pass  # sweep falls back to the age gate
+                self._touch_owner()
+            except RuntimeError:
+                pass  # the next apply_batch's own refresh raises
 
         _touch()
         stop = threading.Event()
@@ -1178,98 +1188,16 @@ class CdcApplyJob:
         return [files[i : i + k] for i in range(0, len(files), k)]
 
     def run(self, max_batches: int | None = None) -> list[ApplyStats]:
-        """O1 run loop: apply every pending micro-batch in order.
-        ``max_batches`` lets tests kill the job mid-stream (O2 replay)."""
+        """O1 run loop: apply every pending micro-batch in order, one
+        after another — the same ``apply_batch`` body the streaming
+        front-end drives. ``max_batches`` lets tests kill the job
+        mid-stream (O2 replay)."""
         if self.table is None:
             self.prepare()
         if self.reset_policy is not None:
             self.validate_position(self.reset_policy)
-        groups = self.batch_files()
-        pool = None
-        if (
-            self.pipeline_prefetch
-            and self.source_format == "wire"
-            and len(groups) > 1
-            # GTID fencing threads open-group carry state batch-to-batch
-            # (_wire_gtid_fence): batch k+1's fence needs batch k's
-            # carry-out, so speculative winners would race it — run
-            # synchronously under a fence (opt-in replay feature; the
-            # steady state has no fence and keeps the pipeline)
-            and self.gtid_set is None
-            and self.gtid_list is None
-        ):
-            from concurrent.futures import ThreadPoolExecutor
-
-            pool = ThreadPoolExecutor(
-                max_workers=1, thread_name_prefix="mts-prefetch"
-            )
-        out = []
-        try:
-            for i, group in enumerate(groups):
-                if max_batches is not None and len(out) >= max_batches:
-                    break
-                if (
-                    pool is not None
-                    and i + 1 < len(groups)
-                    and (max_batches is None or len(out) + 1 < max_batches)
-                ):
-                    self._submit_prefetch(pool, i + 1, groups[i + 1])
-                out.append(self.apply_batch(i, group))
-            return out
-        finally:
-            if pool is not None:
-                pool.shutdown(wait=True, cancel_futures=True)
-            # unconsumed speculations (abort mid-run, max_batches cut):
-            # reap their winners staging dirs — a long-lived job calling
-            # run() again never re-runs prepare()'s debris sweep
-            import shutil as _sh
-
-            for bid in list(self._prefetch):
-                _sh.rmtree(self._winners_dir(bid), ignore_errors=True)
-            self._prefetch.clear()
-
-    def _submit_prefetch(self, pool, batch_id: int, paths: list[str]) -> None:
-        """Schedule the NEXT batch's manifest pass — and, when the
-        batch is eligible (non-empty, no quarantine sink, no fence
-        overlap at submit), its decode->LWW winners materialization —
-        on the helper thread, concurrently with the current batch's
-        projection+merge (Spark sessions are thread-safe). DDL does
-        NOT gate speculation: the winners are schema-free; the consume
-        side rejects the speculation only on a TRUNCATE or a fence
-        overlap. Captures the watermark AND the auto-skew state in
-        force at submit time — the consumer revalidates the fence
-        after the intervening commit, and the captured skew state
-        makes the speculated LWW variant deterministic (documented
-        one-batch escalation lag)."""
-        wm = self.watermark()[:2]
-        fut = pool.submit(
-            self._prefetch_work, batch_id, paths, wm, self._escalated
-        )
-        self._prefetch[batch_id] = (fut, wm)
-
-    def _prefetch_work(self, batch_id: int, paths: list[str], wm, escalated: bool):
-        """Helper-thread body: manifest pass, then (when safe) the
-        speculative winners, materialized under ``_winners_<batch_id>``
-        so the consume side adopts them instead of recomputing the
-        decode+shuffle. Any failure in the speculative part degrades to
-        the synchronous path at consume time."""
-        import shutil
-
-        src = _WireSource(self, paths)
-        m = src.manifest(wm)
-        if m.n and self.quarantine_dir is None and (wm[0] is None or wm < m.lo):
-            scratch = ApplyStats(batch_id=batch_id)
-            wdir = self._winners_dir(batch_id)
-            try:
-                latest = self._winners(src, m, wm, None, scratch, escalated)
-                shutil.rmtree(wdir, ignore_errors=True)
-                t1 = time.time()
-                latest.write.parquet(wdir)
-                scratch.phase_ms["lww"] = _ms_since(t1)
-                m.speculation = scratch
-            except Exception:
-                shutil.rmtree(wdir, ignore_errors=True)
-        return m
+        groups = self.batch_files()[:max_batches]
+        return [self.apply_batch(i, group) for i, group in enumerate(groups)]
 
     # ----------------------------------------------------------- micro-batch
 
@@ -1286,7 +1214,9 @@ class CdcApplyJob:
         every source: incident gate -> DDL -> PK-move explode -> LWW ->
         typed projection -> transform / expectations -> bucket-aligned
         staged delta -> COW merge or MoR adopt through the audit gate ->
-        epilogue (compaction, lag, growth, expiry, lineage).
+        epilogue (compaction, lag, growth, expiry, lineage). Every wall
+        in ``phase_ms`` is timed on the calling thread, inside
+        ``wall_ms``.
 
         Deliberately NO .cache() anywhere: caching the batch thrashes
         the memory store under high thread counts (measured 5x
@@ -1298,58 +1228,43 @@ class CdcApplyJob:
         if self.table is None:
             self.prepare()
         t0 = time.time()
+        self._touch_owner()
         stats = ApplyStats(batch_id=batch_id)
         wm = self.watermark()[:2]
         src = (_WireSource if self.source_format == "wire" else _TypedSource)(
             self, paths
         )
-        wdir = self._winners_dir(batch_id)
-        try:
-            m = src.manifest(wm, self._prefetch.pop(batch_id, None))
-            if m.prefetched:
-                stats.phase_ms["manifest_prefetched"] = 1
-            stats.phase_ms["manifest"] = _ms_since(t0)
-            stats.rows_in = m.n
-            if m.n == 0:
-                stats.skipped = True
-                return stats
-            stats.file_start, stats.pos_start = m.lo
-            stats.file_end, stats.pos_end = m.hi
-            stats.bytes_in = m.bytes_in
-            if m.txn_hi is not None:
-                stats.txn_file_end, stats.txn_pos_end = m.txn_hi
-            if wm[0] is not None and m.hi <= wm:
-                stats.skipped = True
-                stats.wall_ms = _ms_since(t0)
-                return stats
+        m = src.manifest(wm)
+        stats.phase_ms["manifest"] = _ms_since(t0)
+        stats.rows_in = m.n
+        if m.n == 0:
+            stats.skipped = True
+            stats.wall_ms = _ms_since(t0)
+            return stats
+        stats.file_start, stats.pos_start = m.lo
+        stats.file_end, stats.pos_end = m.hi
+        stats.bytes_in = m.bytes_in
+        if m.txn_hi is not None:
+            stats.txn_file_end, stats.txn_pos_end = m.txn_hi
+        if wm[0] is not None and m.hi <= wm:
+            stats.skipped = True
+            stats.wall_ms = _ms_since(t0)
+            return stats
 
-            # C5 incident gate: BEFORE any apply work
-            if m.incidents:
-                if self.incident_policy == "fail":
-                    raise IncidentError(m.incidents)
-                stats.incidents = m.incidents
-            stats.heartbeat_ts = m.heartbeat_ts
-            trunc_fp = self._handle_ddl(m.ddl_rows) if m.ddl_rows else None
+        # C5 incident gate: BEFORE any apply work
+        if m.incidents:
+            if self.incident_policy == "fail":
+                raise IncidentError(m.incidents)
+            stats.incidents = m.incidents
+        stats.heartbeat_ts = m.heartbeat_ts
+        trunc_fp = self._handle_ddl(m.ddl_rows) if m.ddl_rows else None
 
-            # LWW winners: ADOPT the prefetch thread's materialized
-            # winners when its manifest was accepted (identical fenced
-            # row set) and no TRUNCATE discards a prefix of this batch —
-            # the winners are schema-free, so the batch's own additive/
-            # rename DDL, applied just above, never invalidates them.
-            # Otherwise ONE lazy pipeline feeds the projection directly.
-            spec = m.speculation
-            if spec is not None and trunc_fp is None and os.path.isdir(wdir):
-                stats.phase_ms.update(spec.phase_ms)
-                stats.phase_ms["winners_prefetched"] = 1
-                stats.lww_variant = spec.lww_variant
-                latest = self.spark.read.parquet(wdir)
-            else:
-                latest = self._winners(src, m, wm, trunc_fp, stats)
-            delta_dir, nb = self._stage_delta(
-                batch_id, latest, src.keys.as_map, stats
-            )
-        finally:
-            shutil.rmtree(wdir, ignore_errors=True)
+        # LWW winners, LAZY: the source's keyed change rows -> PK-move
+        # explode -> LWW, one pipeline feeding the typed projection
+        dml = src.keyed_changes(wm, trunc_fp, stats)
+        keyed = self._explode_moves(dml, src.keys, m.has_moves)
+        latest = self._lww(keyed, src.keys.payload, stats)
+        delta_dir, nb = self._stage_delta(batch_id, latest, src.keys.as_map, stats)
         t1 = time.time()
 
         # LWW winners from the delta files' parquet FOOTERS (driver
@@ -1435,29 +1350,6 @@ class CdcApplyJob:
         self._append_lineage(stats)
         return stats
 
-    def _winners_dir(self, batch_id: int) -> str:
-        return os.path.join(
-            self.table_path, f"_winners_{self._run_id}_{batch_id}"
-        )
-
-    def _winners(
-        self, src, m, wm, trunc_fp, stats: ApplyStats, escalated: bool | None = None
-    ) -> DataFrame:
-        """The batch's LWW winners frame, LAZY: the source's keyed
-        change rows -> PK-move explode -> LWW. Deliberately SCHEMA-FREE
-        (the payload is the raw row image), so the prefetch thread can
-        materialize it before the batch's DDL runs; only a TRUNCATE
-        (which discards a prefix of the batch pre-LWW) invalidates that
-        speculation. ``escalated`` overrides the auto-skew state (the
-        prefetch submit-time snapshot, so the speculated variant is
-        deterministic — not a helper-thread race with the current
-        batch's consume)."""
-        dml = src.keyed_changes(wm, trunc_fp, stats)
-        keyed = self._explode_moves(dml, src.keys, m.has_moves)
-        if escalated is None:
-            escalated = self._escalated
-        return self._lww(keyed, src.keys.payload, stats, escalated)
-
     def _explode_moves(self, dml: DataFrame, keys: _Keys, has_moves: bool) -> DataFrame:
         """Key each change row for LWW. A batch with no PK-moving
         UPDATE (manifest flag) keeps the zero-overhead plan: keys
@@ -1490,13 +1382,11 @@ class CdcApplyJob:
             ).alias("__e"),
         ).select(f"__e.{k0}", f"__e.{k1}", *LOG_ORDER, "__e.op", f"__e.{pay}")
 
-    def _lww(
-        self, keyed: DataFrame, payload: str, stats: ApplyStats, escalated: bool
-    ) -> DataFrame:
+    def _lww(self, keyed: DataFrame, payload: str, stats: ApplyStats) -> DataFrame:
         """LWW dedup: one row per key, the payload of the event latest
         in log order; records the variant that ran."""
         cols = ["op", payload]
-        if self.n_salts > 0 or escalated:
+        if self.n_salts > 0 or self._escalated:
             # explicit two-phase salted LWW: configured (n_salts), or
             # AUTO skew escalation — the previous batch's collapse ratio
             # crossed AUTO_SALT_RATIO, a single-key flood regime where
@@ -1778,40 +1668,7 @@ class CdcApplyJob:
         checkpoint; this file is append-only JSONL like the reference's
         monitor topic (``monitor/TrackerMonitor.java:153-192``)."""
         path = os.path.join(self.table_path, "lineage.jsonl")
-        rec = {
-            "batch_id": stats.batch_id,
-            "file_start": stats.file_start,
-            "pos_start": stats.pos_start,
-            "file_end": stats.file_end,
-            "pos_end": stats.pos_end,
-            "bytes_in": stats.bytes_in,
-            "txn_file_end": stats.txn_file_end,
-            "txn_pos_end": stats.txn_pos_end,
-            "rows_in": stats.rows_in,
-            "rows_applied": stats.rows_applied,
-            "snapshot_version": stats.snapshot_version,
-            "wall_ms": stats.wall_ms,
-            "lag_s": stats.lag_s,
-            "expectation_violations": stats.expectation_violations,
-            "table_audit": stats.table_audit,
-            "write_mode": stats.write_mode,
-            "compacted_buckets": stats.compacted_buckets,
-            "split_to": stats.split_to,
-            "migrated_buckets": stats.migrated_buckets,
-            "bucket_rows": stats.bucket_rows,
-            # audit completeness: quarantined-frame counts (the whole
-            # point of the dead-letter feature is an audit trail that
-            # outlives the process), LWW observability, and the
-            # replay-overlap skip flag must survive into the JSONL or
-            # they exist only for the ApplyStats objects' lifetime
-            "skipped": stats.skipped,
-            "rows_winners": stats.rows_winners,
-            "lww_variant": stats.lww_variant,
-            "frames_quarantined": stats.frames_quarantined,
-            "heartbeat_ts": stats.heartbeat_ts,
-            "incidents": stats.incidents,
-            "ts_ms": int(time.time() * 1000),
-        }
+        rec = {**asdict(stats), "ts_ms": int(time.time() * 1000)}
         with open(path, "a") as f:
             f.write(json.dumps(rec) + "\n")
 
@@ -1855,8 +1712,6 @@ class _Manifest:
     ddl_rows: list = field(default_factory=list)  # past-fence, log order
     incidents: list = field(default_factory=list)  # (file, pos, message)
     heartbeat_ts: float | None = None
-    prefetched: bool = False  # computed ahead by the prefetch thread
-    speculation: ApplyStats | None = None  # its materialized winners' stats
 
 
 class _Keys(NamedTuple):
@@ -1906,7 +1761,7 @@ class _TypedSource:
             "after", F.col("after"), after, after, before, F.col("before"), is_move
         )
 
-    def manifest(self, wm, prefetched=None) -> _Manifest:
+    def manifest(self, wm) -> _Manifest:
         from pyspark.sql import Observation
 
         job = self.job
@@ -2013,30 +1868,7 @@ class _WireSource:
             "after_kv", akey, ident, upsert, ident, F.col("key_kv"), is_move
         )
 
-    def manifest(self, wm, prefetched=None) -> _Manifest:
-        """The batch's manifest: the prefetch thread's when still valid
-        under the current watermark, else one synchronous pass."""
-        if prefetched is not None:
-            fut, pwm = prefetched
-            try:
-                pm = fut.result()
-            except Exception:
-                pm = None  # prefetch failure -> synchronous pass
-            # a prefetched manifest was computed under the watermark in
-            # force at SUBMIT time (before the previous batch's commit
-            # advanced it). Its past-fence fields (n_dml, DDL and
-            # incident rows) are identical under both watermarks iff
-            # the batch lies wholly past the CURRENT fence too — the
-            # steady state. Replay overlap falls back to a synchronous
-            # pass (and drops the speculated winners with it).
-            if pm is not None and (
-                pwm == wm or not pm.n or (wm[0] is not None and wm < pm.lo)
-            ):
-                pm.prefetched = True
-                return pm
-        return self._scan(wm)
-
-    def _scan(self, wm) -> _Manifest:
+    def manifest(self, wm) -> _Manifest:
         """The single JVM aggregation over a batch's raw frames that
         yields the offset manifest — no Python, no decode — plus the
         driver-side decode of the handful of collected DDL and INCIDENT

@@ -1,8 +1,9 @@
 """One apply pipeline for every source: the typed and wire sources run
 the same LWW -> staged delta -> commit chain, so they report the same
 per-batch observability and converge to the same table; plus the job
-config round trip, the incident-flood cap's fence, and the heartbeat
-probe's bounded work."""
+config round trip, the incident-flood cap's fence, the heartbeat
+probe's bounded work, the per-batch phase ledger and lineage record,
+run() against the streaming drain, and the ownership-marker guard."""
 
 import dataclasses
 
@@ -10,7 +11,7 @@ import pandas as pd
 import pytest
 
 from mysql_tracker_spark.config import JobConfig
-from mysql_tracker_spark.runner import CdcApplyJob
+from mysql_tracker_spark.runner import ApplyStats, CdcApplyJob
 from mysql_tracker_spark.sources.binlog_gen import (
     GenConfig,
     expected_final_state,
@@ -212,3 +213,118 @@ def test_heartbeat_probe_reads_only_new_batches():
         assert checks["master_heartbeat_age_s"] >= first
     stats.append(Stat(len(stats), 2e9))  # a newer heartbeat wins
     assert hb.probe()["master_heartbeat_age_s"] < 0
+
+
+@pytest.fixture(scope="module")
+def wire_run(spark, tmp_path_factory):
+    """One 4-batch wire run(); yields (job, stats) and closes the job."""
+    tmp = tmp_path_factory.mktemp("wire_run")
+    ev = gen_change_events(GenConfig(n_events=4000, n_conversations=100, seed=47))
+    write_wire_batches(ev, str(tmp / "in"), n_batches=4)
+    job = CdcApplyJob(
+        spark, str(tmp / "in"), str(tmp / "t"), n_buckets=8, source_format="wire"
+    )
+    stats = job.run()
+    yield job, stats
+    job.close()
+
+
+def test_phase_walls_fit_inside_the_batch_wall(wire_run):
+    """Every phase is timed on the batch's own thread, one after
+    another: the phase keys are the chain's layers and they add up to
+    no more than the batch wall."""
+    _, stats = wire_run
+    assert len(stats) == 4
+    for s in stats:
+        assert set(s.phase_ms) <= {"manifest", "delta", "merge"}, s.phase_ms
+        assert sum(s.phase_ms.values()) <= s.wall_ms, s
+
+
+def test_lineage_record_carries_every_apply_stats_field(wire_run):
+    """lineage.jsonl is derived from ApplyStats, so no field (the
+    per-layer phases included) is dropped on the way to disk."""
+    import json
+    import os
+
+    job, stats = wire_run
+    with open(os.path.join(job.table_path, "lineage.jsonl")) as f:
+        recs = [json.loads(line) for line in f]
+    assert [r["batch_id"] for r in recs] == [s.batch_id for s in stats if not s.skipped]
+    names = {f.name for f in dataclasses.fields(ApplyStats)}
+    for r in recs:
+        assert names <= set(r), names - set(r)
+        assert {"manifest", "delta", "merge"} <= set(r["phase_ms"]), r["phase_ms"]
+
+
+def test_run_and_stream_drain_escalate_alike(spark, tmp_path):
+    """run() applies one batch after another, exactly like the
+    streaming drain: over the same flooded wire input both switch to
+    the salted LWW on the strictly next batch and end on equal
+    tables."""
+    from mysql_tracker_spark.streaming import CdcStreamJob
+
+    ev = gen_change_events(
+        GenConfig(n_events=4500, n_conversations=6, max_turns=3, zipf_a=3.0, seed=13)
+    )
+    d = str(tmp_path / "in")
+    write_wire_batches(ev, d, n_batches=3)
+    job = CdcApplyJob(
+        spark, d, str(tmp_path / "t_run"), n_buckets=4, source_format="wire"
+    )
+    ran = [s.lww_variant for s in job.run() if not s.skipped]
+    job.close()
+    sj = CdcStreamJob(
+        spark, d, str(tmp_path / "t_stream"), str(tmp_path / "ck"),
+        source_format="wire", n_buckets=4,
+    )
+    sj.job.prepare()
+    sj._drain_in_order()
+    sj.job.close()
+    drained = [s.lww_variant for s in sj.stats if not s.skipped]
+    auto = f"auto_salted{CdcApplyJob.AUTO_SALTS}"
+    assert ran == ["packed", auto, auto], ran
+    assert drained == ran
+    got = {
+        k: normalize(t.read(spark).toPandas())[CMP]
+        for k, t in (("run", job.table), ("stream", sj.job.table))
+    }
+    pd.testing.assert_frame_equal(got["run"], got["stream"])
+    exp = normalize(expected_final_state(ev))
+    pd.testing.assert_frame_equal(got["run"], exp[CMP])
+
+
+def test_failed_owner_refresh_fails_the_next_batch_before_staging(
+    spark, tmp_path, monkeypatch
+):
+    """A job that cannot refresh its ownership marker (disk full,
+    permissions) must not stage: once the marker ages out a concurrent
+    prepare() reaps its staging. The next apply_batch raises with the
+    table version and watermark untouched, and applies once the marker
+    can be written again."""
+    import errno
+    import os
+
+    ev = gen_change_events(GenConfig(n_events=600, n_conversations=30, seed=43))
+    d, tbl = str(tmp_path / "in"), str(tmp_path / "t")
+    write_wire_batches(ev, d, n_batches=2)
+    job = CdcApplyJob(spark, d, tbl, n_buckets=4, source_format="wire")
+    g0, g1 = job.batch_files()
+    job.apply_batch(0, g0)
+    before = (job.table.current_version(), job.watermark())
+    marker = job._owner_marker()
+    utime = os.utime
+
+    def failing_utime(path, *a, **kw):
+        if os.fspath(path) == marker:
+            raise OSError(errno.ENOSPC, "No space left on device", path)
+        return utime(path, *a, **kw)
+
+    monkeypatch.setattr(os, "utime", failing_utime)
+    with pytest.raises(RuntimeError, match="ownership marker"):
+        job.apply_batch(1, g1)
+    assert (job.table.current_version(), job.watermark()) == before
+    assert not [n for n in os.listdir(tbl) if n.startswith("_delta_")]
+    monkeypatch.undo()
+    assert not job.apply_batch(1, g1).skipped
+    assert job.watermark() != before[1]
+    job.close()

@@ -190,12 +190,9 @@ def test_auto_skew_escalation_on_flood(spark, tmp_path):
     collapse ratio (applied rows / LWW winners) over AUTO_SALT_RATIO,
     so the NEXT batch switches to the two-phase salted LWW; a uniform
     workload never escalates; both converge to the sequential oracle
-    (the variants are semantically identical). Under pipelined
-    prefetch, batch k+1's winners are speculated BEFORE batch k's
-    collapse ratio exists, so escalation engages one batch later than
-    in the serial loop (the speculated work overlapped the previous
-    merge either way); the serial loop keeps the strict next-batch
-    sequence."""
+    (the variants are semantically identical). run() applies one batch
+    after another, so escalation and de-escalation follow strictly on
+    the next batch."""
     from mysql_tracker_spark.sources.wire import write_wire_batches
 
     # flood: 9000 events over <=18 (conv_id, turn_idx) keys, zipf(3.0)
@@ -209,21 +206,12 @@ def test_auto_skew_escalation_on_flood(spark, tmp_path):
         spark, d, str(tmp_path / "t"), n_buckets=8, source_format="wire"
     )
     stats = [s for s in job.run() if not s.skipped]
-    assert stats[0].lww_variant == "packed"  # no prior ratio yet
-    # pipelined loop: batch 1's winners were speculated before batch
-    # 0's ratio was known -> packed; escalation engages from batch 2
+    # batch 0 has no prior ratio yet; its flood escalates batch 1 on
     salted = f"auto_salted{CdcApplyJob.AUTO_SALTS}"
-    assert [s.lww_variant for s in stats] == ["packed", "packed", salted]
+    assert [s.lww_variant for s in stats] == ["packed", salted, salted]
     assert all(
         s.rows_applied / s.rows_winners >= CdcApplyJob.AUTO_SALT_RATIO for s in stats
     )
-    # serial loop keeps the strict next-batch escalation sequence
-    job_serial = CdcApplyJob(
-        spark, d, str(tmp_path / "t_serial"), n_buckets=8,
-        source_format="wire", pipeline_prefetch=False,
-    )
-    st_serial = [s for s in job_serial.run() if not s.skipped]
-    assert [s.lww_variant for s in st_serial] == ["packed", salted, salted]
     got = normalize(job.table.read(spark).toPandas())
     exp = normalize(expected_final_state(ev))
     pd.testing.assert_frame_equal(got[CMP], exp[CMP])
@@ -242,8 +230,8 @@ def test_auto_skew_escalation_on_flood(spark, tmp_path):
     pd.testing.assert_frame_equal(got_u[CMP], exp_u[CMP])
 
     # DE-escalation: the flood table keeps applying, now with a
-    # uniform continuation — one lagging salted batch (decided by the
-    # last flood ratio), then back to packed
+    # uniform continuation — one salted batch (decided by the last
+    # flood ratio), then back to packed
     import os
 
     ev2 = gen_change_events(
@@ -262,20 +250,9 @@ def test_auto_skew_escalation_on_flood(spark, tmp_path):
     )
     variants = [s.lww_variant for s in job2.run() if not s.skipped]
     auto = f"auto_salted{CdcApplyJob.AUTO_SALTS}"
-    # 3 flood batches + 2 uniform, PIPELINED loop: batch k+1's variant
-    # is the submit-time snapshot (deterministic, not a helper-thread
-    # race), so both escalation AND de-escalation lag one batch:
-    # batch 1 speculated pre-ratio (packed), 2-3 under flood ratios
-    # (auto), 4 under batch 2's still-flood state (auto) — a 6th batch
-    # would de-escalate. The serial loop below keeps the strict
-    # next-batch sequence including de-escalation at batch 4.
-    assert variants == ["packed", "packed", auto, auto, auto], variants
-    job2s = CdcApplyJob(
-        spark, d2, str(tmp_path / "t2_serial"), n_buckets=8,
-        source_format="wire", pipeline_prefetch=False,
-    )
-    variants_s = [s.lww_variant for s in job2s.run() if not s.skipped]
-    assert variants_s == ["packed", auto, auto, auto, "packed"], variants_s
+    # 3 flood batches + 2 uniform: batches 1-3 run under flood ratios
+    # (auto), batch 4 under the first uniform batch's ratio (packed)
+    assert variants == ["packed", auto, auto, auto, "packed"], variants
 
 
 def test_invalid_position_detect_and_reset(spark, stream, tmp_path):
@@ -521,63 +498,6 @@ def test_auto_expire_bounds_snapshots_and_reclaims_files(spark, tmp_path):
     # fencing survives expiry: full rerun is a no-op
     again = CdcApplyJob(spark, d, p, n_buckets=4, expire_keep_last=2)
     assert all(s.skipped for s in again.run())
-
-
-def test_pipeline_prefetch_equivalent_and_replay_safe(spark, tmp_path):
-    """Pipelined micro-batches (manifest prefetch) must change NOTHING
-    except wall time: final state, per-batch stats (incl. the fence-
-    gated rows_applied lineage metric), and watermark equal the
-    synchronous run; a replay overlap (restart from batch 0 against a
-    half-applied table) revalidates the prefetched fence and still
-    converges."""
-    from mysql_tracker_spark.sources.wire import write_wire_batches
-
-    ev = gen_change_events(GenConfig(n_events=4000, n_conversations=100, seed=47))
-    in_dir = str(tmp_path / "in")
-    write_wire_batches(ev, in_dir, n_batches=4)
-
-    tables = {}
-    stats = {}
-    for tag, pf in (("on", True), ("off", False)):
-        d = str(tmp_path / f"t_{tag}")
-        job = CdcApplyJob(
-            spark, in_dir, d, n_buckets=8, source_format="wire",
-            pipeline_prefetch=pf,
-        )
-        stats[tag] = job.run()
-        tables[tag] = normalize(job.table.read(spark).toPandas())
-    assert tables["on"].equals(tables["off"])
-    for a, b in zip(stats["on"], stats["off"]):
-        assert (a.rows_in, a.rows_applied, a.file_end, a.pos_end) == (
-            b.rows_in, b.rows_applied, b.file_end, b.pos_end,
-        )
-    n_pre = sum(
-        s.phase_ms.get("manifest_prefetched", 0) for s in stats["on"]
-    )
-    # batches 1-2 use their prefetch; batch 3 carries the generator's
-    # duplicated replay tail, so its lo overlaps the advanced fence and
-    # the consumer correctly DISCARDS the prefetched manifest (n_dml
-    # would differ) — the fallback path, exercised on a real overlap
-    assert n_pre == 2, stats["on"]
-    assert not stats["on"][3].phase_ms.get("manifest_prefetched")
-    assert not any(
-        s.phase_ms.get("manifest_prefetched") for s in stats["off"]
-    )
-
-    # kill/restart: re-apply over a table already holding batches 0-1;
-    # the first prefetched manifests fail fence revalidation (overlap)
-    # and the run still converges to the same state
-    d2 = str(tmp_path / "t_replay")
-    CdcApplyJob(
-        spark, in_dir, d2, n_buckets=8, source_format="wire",
-    ).run(max_batches=2)
-    job2 = CdcApplyJob(
-        spark, in_dir, d2, n_buckets=8, source_format="wire",
-        pipeline_prefetch=True,
-    )
-    st2 = job2.run()
-    assert [s.skipped for s in st2] == [True, True, False, False]
-    assert normalize(job2.table.read(spark).toPandas()).equals(tables["off"])
 
 
 def test_typed_apply_honors_custom_key_cols(spark, tmp_path):

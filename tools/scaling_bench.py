@@ -88,10 +88,6 @@ def level_main(cores: int, in_dir: str, tbl_dir: str) -> None:
     # protocol as bench.py's cdc_apply_mor — which also keeps the
     # raw-file digest valid)
     mode = os.environ.get("SCALE_WRITE_MODE", "cow")
-    # SCALE_PREFETCH=0 disables the pipelined micro-batch prefetch so
-    # the scaling claim can be evidenced for both the shipping default
-    # (on) and the serial loop (off)
-    prefetch = os.environ.get("SCALE_PREFETCH", "1") != "0"
     spark = get_spark(
         app_name=f"scale{cores}", cores=cores, shuffle_partitions=cores,
         extra_conf={"spark.sql.files.maxPartitionBytes": "4m"},
@@ -101,7 +97,6 @@ def level_main(cores: int, in_dir: str, tbl_dir: str) -> None:
     CdcApplyJob(
         spark, in_dir, tbl_dir + "_warm", n_buckets=64,
         files_per_batch=FILES_PER_BATCH, source_format="wire", write_mode=mode,
-        pipeline_prefetch=prefetch,
     ).run()
     warm = time.time() - t0
     walls, events = [], 0
@@ -111,7 +106,6 @@ def level_main(cores: int, in_dir: str, tbl_dir: str) -> None:
         job = CdcApplyJob(
             spark, in_dir, tgt, n_buckets=64,
             files_per_batch=FILES_PER_BATCH, source_format="wire", write_mode=mode,
-            pipeline_prefetch=prefetch,
         )
         stats = job.run()
         if mode == "mor":
@@ -250,12 +244,6 @@ Reference single-JVM baseline (BASELINE.md): ~543 events/s sustained,
     # that a raw re-run must never clobber — merge by hand from here
     mode = os.environ.get("SCALE_WRITE_MODE", "cow")
     out_name = "SCALING.md" if mode == "cow" else f"SCALING_{mode.upper()}.md"
-    if os.environ.get("SCALE_PREFETCH", "1") == "0":
-        out_name = out_name.replace(".md", "_NOPREFETCH.md")
-        md = md.replace(
-            "# BENCH — scaling evidence",
-            "# BENCH — scaling evidence (pipeline_prefetch OFF)",
-        )
     if mode != "cow":
         md = md.replace(
             "# BENCH — scaling evidence",

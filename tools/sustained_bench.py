@@ -10,14 +10,6 @@ working set, not table size.
 Usage: python tools/sustained_bench.py [n_events] [reps]
 Input is cached under $BENCH_CACHE_DIR (default /tmp/mts_bench_cache)
 keyed by size, like tools/scaling_bench.py.
-
-SUSTAINED_AB_PREFETCH=1 switches to the prefetch A/B protocol
-(round-4 VERDICT item 8): `reps` INTERLEAVED pairs of prefetch-ON /
-prefetch-OFF applies (interleaving is this host's documented defense
-against its multi-minute 2x slowdown windows — see BENCH/BASELINE.md),
-each pair's final-table digests compared (must be identical), both
-sides reported min-of-reps. This records the shipping default's
-benefit at the headline volume, not just the round-3 10M-event A/B.
 """
 
 from __future__ import annotations
@@ -57,70 +49,26 @@ def main() -> None:
         print(f"gen {time.time() - t0:.0f}s", file=sys.stderr)
     work = tempfile.mkdtemp(prefix="mts_sustained_")
 
-    def one_rep(tbl: str, prefetch: bool) -> dict:
+    def one_rep(tbl: str) -> dict:
         t0 = time.time()
         job = CdcApplyJob(
             spark, in_dir, tbl, n_buckets=64,
             files_per_batch=FILES_PER_BATCH, source_format="wire",
-            pipeline_prefetch=prefetch,
         )
         stats = job.run()
         wall = time.time() - t0
         ev = sum(s.rows_in for s in stats)
         return {
-            "prefetch": prefetch,
             "wall": round(wall, 1),
             "events": ev,
             "eps": round(ev / wall),
             "batch_walls": [round(s.wall_ms / 1000, 1) for s in stats],
         }
 
-    if os.environ.get("SUSTAINED_AB_PREFETCH", "0") == "1":
-        from tools.scaling_bench import table_digest
-
-        pairs = []
-        for r in range(reps):
-            pair = {}
-            # alternate which side runs first: the session's one-time
-            # JIT/slow-start penalty lands on the FIRST apply, and must
-            # not systematically tax one arm (min-of-reps then absorbs
-            # it for both)
-            order = (("on", True), ("off", False))
-            if r % 2:
-                order = (order[1], order[0])
-            for tag, pf in order:
-                tbl = os.path.join(work, f"tbl_{tag}_{r}")
-                rec = one_rep(tbl, pf)
-                rec["digest"] = table_digest(tbl)
-                print(json.dumps(rec), file=sys.stderr)
-                pair[tag] = rec
-                shutil.rmtree(tbl, ignore_errors=True)
-            assert pair["on"]["digest"] == pair["off"]["digest"], (
-                "prefetch changed the final table state"
-            )
-            pairs.append(pair)
-        shutil.rmtree(work, ignore_errors=True)
-        best_on = min(p["on"]["wall"] for p in pairs)
-        best_off = min(p["off"]["wall"] for p in pairs)
-        print(
-            json.dumps(
-                {
-                    "protocol": "ab_prefetch_interleaved",
-                    "n_events": n_events,
-                    "prefetch_on_wall": best_on,
-                    "prefetch_off_wall": best_off,
-                    "speedup": round(best_off / best_on, 3),
-                    "digests_identical": True,
-                    "pairs": pairs,
-                }
-            )
-        )
-        return
-
     recs = []
     for r in range(reps):
         tbl = os.path.join(work, f"tbl_{r}")
-        recs.append(one_rep(tbl, True))
+        recs.append(one_rep(tbl))
         print(json.dumps(recs[-1]), file=sys.stderr)
         shutil.rmtree(tbl, ignore_errors=True)
     shutil.rmtree(work, ignore_errors=True)
