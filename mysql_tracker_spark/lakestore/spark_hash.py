@@ -1,11 +1,14 @@
 """Pure-Python twin of Spark's ``F.hash()`` (Murmur3 x86-32, seed 42)
-— ONLY for executor-side code that has no SparkSession (the Python
-Data Source streaming reader, `changes_source.py`), where bucket
-placement must be recomputed per row to apply post-split ``residual``
-predicates and cross-layout diffs. Every Spark-side path keeps using
-``F.hash`` itself (see ``LakeTable.buckets_for_keys``'s stance: the
-placement function is the engine's); this module exists because a
-``DataSourceStreamReader.read()`` task cannot call into the JVM.
+— the engine's bucket placement (``table._bucket_expr``) computed
+without a Spark job. Two kinds of caller need it:
+- driver-side point reads (``LakeTable.buckets_for_keys``): placing a
+  handful of keys through Spark would cost a job per read;
+- executor-side code that has no SparkSession (the Python Data Source
+  streaming reader, `changes_source.py`), where bucket placement must
+  be recomputed per row to apply post-split ``residual`` predicates
+  and cross-layout diffs — a ``DataSourceStreamReader.read()`` task
+  cannot call into the JVM.
+Writes keep placing rows with ``F.hash`` itself.
 
 Byte-for-byte equivalence with ``org.apache.spark.unsafe.hash.
 Murmur3_x86_32`` (the implementation behind the ``hash`` expression)
@@ -88,6 +91,9 @@ def hash_bytes(data: bytes, seed: int = 42) -> int:
 
 
 _INT_TYPES = {"byte", "short", "integer"}
+# bucket-key types the twin covers (``DataType.typeName()`` vocabulary);
+# ``LakeTable.create`` refuses any other bucket_by type
+BUCKET_KEY_TYPES = frozenset({"string", "long", "boolean", "binary", *_INT_TYPES})
 
 
 def spark_hash(value, spark_type: str) -> int:

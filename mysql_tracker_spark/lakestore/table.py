@@ -50,6 +50,8 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
+from .spark_hash import BUCKET_KEY_TYPES, pmod_bucket
+
 _BUCKET_COL = "__bucket"
 # tombstone column riding in merge-on-read delta files (the runner's
 # change sets already carry exactly this flag)
@@ -213,8 +215,9 @@ def _stats_keep_range(fe: dict, col: str, lo, hi) -> bool:
 # costs 1 KiB per (file, column) in the manifest; at 10^9-file scale
 # the bitmaps would move to side-car files (puffin), the probe protocol
 # is unchanged. Hashing is Spark's own xxhash64 seeded per probe — the
-# write side and the probe side run the SAME engine function (the
-# buckets_for_keys placement principle), never a Python reimplementation.
+# write side and the probe side run the SAME engine function. Unlike
+# bucket placement (driver-side Murmur3 twin, see buckets_for_keys),
+# the probe keeps its own tiny xxhash64 job: no twin of it exists.
 _BLOOM_M = 8192
 _BLOOM_K = 4
 
@@ -491,13 +494,29 @@ def _residual_pred(rk: tuple, renames: list | None):
 def _bucket_expr(key_col: str | F.Column, n_buckets: int):
     """Bucket id of a key — DELIBERATELY Spark's own Murmur3 ``hash()``
     (seed 42) mod n_buckets: ``HashPartitioning`` places a row of
-    ``repartition(n_buckets, key)`` in partition ``pmod(hash(key), n)``,
-    so a repartition by the bucketing key makes partition i hold EXACTLY
-    bucket i. The apply pipeline exploits that to run dedup + the
+    ``repartition(P, key)`` in partition ``pmod(hash(key), P)``, and
+    for any P dividing n_buckets that equals ``bucket mod P``. A
+    repartition by the bucketing key into :func:`_write_tasks` P
+    partitions therefore has bucket b written by task b mod P, every
+    bucket whole in one task: the apply pipeline runs the
     bucket-partitioned write off a single exchange, with one output
     file per bucket and no second shuffle."""
     c = F.col(key_col) if isinstance(key_col, str) else key_col
     return F.pmod(F.hash(c), F.lit(n_buckets))
+
+
+def _write_tasks(n_buckets: int, parallelism: int) -> int:
+    """Task count P of a bucket-aligned write of ``n_buckets`` buckets:
+    the smallest divisor of n_buckets not below ``parallelism`` (the
+    session's ``defaultParallelism``), else n_buckets itself. P must
+    divide the count ``__bucket`` was computed with, so each bucket
+    lands whole in one task (see :func:`_bucket_expr`); sizing P to the
+    cores rather than to the bucket count keeps a small batch from
+    paying one task's scheduling and deserialization cost per bucket."""
+    return next(
+        (p for p in range(max(parallelism, 1), n_buckets) if n_buckets % p == 0),
+        n_buckets,
+    )
 
 
 class LakeTable:
@@ -521,6 +540,17 @@ class LakeTable:
         properties: dict[str, str] | None = None,
         bloom_cols: list[str] | None = None,
     ) -> "LakeTable":
+        ktype = next(
+            (f.dataType.typeName() for f in schema.fields if f.name == bucket_by),
+            None,
+        )
+        if ktype not in BUCKET_KEY_TYPES:
+            # point reads place keys with the driver-side Murmur3 twin,
+            # which covers exactly these types
+            raise ValueError(
+                f"bucket_by column {bucket_by!r} has type {ktype!r}; a "
+                f"bucket key must be one of {sorted(BUCKET_KEY_TYPES)}"
+            )
         t = cls(path)
         os.makedirs(t.snap_dir, exist_ok=True)
         os.makedirs(t.data_dir, exist_ok=True)
@@ -971,26 +1001,27 @@ class LakeTable:
     def buckets_for_keys(
         self, spark: SparkSession, keys: list, version: int | None = None
     ) -> list[int]:
-        """Bucket ids owning ``keys`` — computed by Spark's own
-        ``hash()`` (one tiny single-partition job), never a Python
-        reimplementation of Murmur3: the placement function is the
-        engine's, so the lookup's is too, by construction.
+        """Bucket ids owning ``keys`` — computed on the driver with
+        :func:`.spark_hash.pmod_bucket`, the Murmur3 twin of
+        :func:`_bucket_expr` that tests/test_spark_hash.py
+        property-tests against ``F.hash``. Placing a key submits no
+        Spark job, so a point read pays only for its scan (``spark``
+        is not used; the signature stays for callers).
 
         ``version`` computes placement under THAT snapshot's layout —
         a time-travel point read across a rescale/split boundary must
         hash with the historical ``n_buckets``, or it opens buckets
-        that did not exist (and silently misses the row)."""
+        that did not exist (and silently misses the row). Null keys
+        own no row (key columns are non-null) and place nowhere."""
         m = self.manifest(version)
         ktype = next(
-            f.dataType
-            for f in self.schema(version).fields
+            f.dataType.typeName()
+            for f in self._schema_of(m).fields
             if f.name == m["bucket_by"]
         )
-        kdf = spark.createDataFrame(
-            [(k,) for k in keys], T.StructType([T.StructField("k", ktype)])
+        return sorted(
+            {pmod_bucket(k, ktype, m["n_buckets"]) for k in keys if k is not None}
         )
-        rows = kdf.select(_bucket_expr("k", m["n_buckets"]).alias("b")).distinct().collect()
-        return sorted({int(r["b"]) for r in rows})
 
     def read_for_keys(
         self, spark: SparkSession, keys: list, version: int | None = None
@@ -1119,8 +1150,9 @@ class LakeTable:
         value, all k of its bloom bits are set; bloom false negatives
         are impossible by construction, so skipping is exact on the
         miss side. Probe positions come from one tiny Spark job running
-        the SAME xxhash64 the write side stamped with (engine-hash
-        fidelity, as in :meth:`buckets_for_keys`).
+        the SAME xxhash64 the write side stamped with (no driver-side
+        twin of it exists, unlike the Murmur3 placement
+        :meth:`buckets_for_keys` computes).
 
         Skipping soundness mirrors :meth:`read_where_all`: a KEY column
         skips under merge-on-read deltas too; a PAYLOAD column skips
@@ -1348,10 +1380,11 @@ class LakeTable:
                 F.col(sort_cols[0]),
             ).sortWithinPartitions(_BUCKET_COL, sort_cols[0])
         else:
-            # repartition by the BUCKETING KEY with numPartitions =
-            # n_buckets: partition i == bucket i (see _bucket_expr), so
-            # each task writes exactly one file into one bucket dir
-            shaped = shaped.repartition(nb, F.col(m0["bucket_by"]))
+            # repartition by the BUCKETING KEY into P | nb partitions:
+            # bucket b is written by task b mod P (see _bucket_expr), so
+            # each bucket dir gets exactly one file
+            p = _write_tasks(nb, df.sparkSession.sparkContext.defaultParallelism)
+            shaped = shaped.repartition(p, F.col(m0["bucket_by"]))
         (
             shaped
             .write.partitionBy(_BUCKET_COL)
@@ -1363,11 +1396,16 @@ class LakeTable:
         )
         bloom_cols = [c for c in m0.get("bloom_cols", []) if c in cols]
         if bloom_cols and out:
-            self._stamp_blooms(df.sparkSession, stage_dir, bloom_cols, out)
+            self._stamp_blooms(
+                df.sparkSession,
+                stage_dir,
+                T.StructType([shaped.schema[c] for c in bloom_cols]),
+                out,
+            )
         return out
 
     def _stamp_blooms(
-        self, spark, stage_dir: str, bloom_cols: list[str], out: dict
+        self, spark, stage_dir: str, bloom_schema: T.StructType, out: dict
     ) -> None:
         """Attach per-(file, column) bloom bitmaps to freshly written
         file entries. ONE distributed job over the staged files: read
@@ -1378,8 +1416,10 @@ class LakeTable:
         bloom index (Delta/Iceberg pay it at write time too); it is
         column-pruned and embarrassingly parallel. NULL values hash to
         the seed-only position (harmless shared bits); a probe never
-        asks for NULL."""
-        bdf = spark.read.parquet(stage_dir)
+        asks for NULL. ``bloom_schema`` holds the bloom columns as
+        written, so the re-read runs no schema-inference job."""
+        bloom_cols = bloom_schema.fieldNames()
+        bdf = spark.read.schema(bloom_schema).parquet(stage_dir)
         rows = (
             bdf.select(
                 F.input_file_name().alias("f"),
@@ -1453,15 +1493,16 @@ class LakeTable:
         ``bucket(N, key)`` partition-evolution analogue, done eagerly):
         re-hash every row into ``new_n_buckets`` buckets and commit one
         new snapshot. The bucket count is fixed at create() for the
-        MERGE fast path (partition i == bucket i off a single
-        exchange), but a table that grows 100x needs wider buckets or
-        every COW rewrite touches files 100x the working set — this is
-        the migration lever.
+        MERGE fast path (bucket b is written by task b mod P off a
+        single exchange, P dividing the count), but a table that grows
+        100x needs wider buckets or every COW rewrite touches files
+        100x the working set — this is the migration lever.
 
         One full-table Spark job (read aligned to the current schema,
-        one repartition on the bucketing key, bucket-partitioned
-        write). Data content is IDENTICAL by construction: history
-        stays time-travelable, a changelog scan across the rescale
+        one repartition on the bucketing key into P partitions, P
+        dividing ``new_n_buckets``, bucket-partitioned write). Data
+        content is IDENTICAL by construction: history stays
+        time-travelable, a changelog scan across the rescale
         boundary yields zero rows (same keys, same payloads), and
         subsequent merges pick up the new count from the manifest.
         Concurrent writers are fenced by the optimistic snapshot commit

@@ -1264,7 +1264,9 @@ class CdcApplyJob:
         dml = src.keyed_changes(wm, trunc_fp, stats)
         keyed = self._explode_moves(dml, src.keys, m.has_moves)
         latest = self._lww(keyed, src.keys.payload, stats)
-        delta_dir, nb = self._stage_delta(batch_id, latest, src.keys.as_map, stats)
+        delta_dir, nb, delta_schema = self._stage_delta(
+            batch_id, latest, src.keys.as_map, stats
+        )
         t1 = time.time()
 
         # LWW winners from the delta files' parquet FOOTERS (driver
@@ -1318,7 +1320,11 @@ class CdcApplyJob:
                 # count_upserts=False: rows_applied comes from the
                 # manifest pass (the reference's persisNum semantics); a
                 # merge-side Observation deadlocks under foreachBatch
-                delta = self.spark.read.parquet(delta_dir).drop("__bucket")
+                delta = (
+                    self.spark.read.schema(delta_schema)
+                    .parquet(delta_dir)
+                    .drop("__bucket")
+                )
 
                 def commit(wap):
                     return self.table.merge(
@@ -1419,15 +1425,16 @@ class CdcApplyJob:
 
     def _stage_delta(
         self, batch_id: int, latest: DataFrame, as_map, stats: ApplyStats
-    ) -> tuple[str, int]:
+    ) -> tuple[str, int, T.StructType]:
         """Typed projection of the LWW winners under the CURRENT
         (post-DDL) schema -> ingest transform -> data-quality gate ->
         bucket-aligned staged delta. ``as_map`` reads the winners'
-        payload as map<string,string>. Returns the staged delta dir and
-        the bucket count the write used."""
+        payload as map<string,string>. Returns the staged delta dir,
+        the bucket count the write used and the delta's schema (without
+        ``__bucket``), so a re-read needs no schema-inference job."""
         import shutil
 
-        from .lakestore.table import _bucket_expr
+        from .lakestore.table import _bucket_expr, _write_tasks
 
         # ONE manifest read for schema AND layout: two reads could
         # straddle a concurrent commit (split_buckets from another
@@ -1454,17 +1461,18 @@ class CdcApplyJob:
         )
         shutil.rmtree(delta_dir, ignore_errors=True)
         t1 = time.time()
-        # repartition by the bucketing KEY with numPartitions=n_buckets:
-        # partition i == bucket i (see _bucket_expr), so each task
-        # writes exactly one file into one bucket dir. Without this
-        # every task writes every bucket dir (tasks x buckets small
-        # files) and the file explosion compounds into thousands of
-        # scan tasks downstream (measured: 97% wait at 32 cores).
-        changes.repartition(nb, F.col(self.key_cols[0])).write.partitionBy(
+        # repartition by the bucketing KEY into P partitions, P | nb:
+        # bucket b is written by task b mod P (see _bucket_expr), so
+        # each bucket dir gets exactly one file. Without this every
+        # task writes every bucket dir (tasks x buckets small files)
+        # and the file explosion compounds into thousands of scan
+        # tasks downstream (measured: 97% wait at 32 cores).
+        p = _write_tasks(nb, self.spark.sparkContext.defaultParallelism)
+        changes.repartition(p, F.col(self.key_cols[0])).write.partitionBy(
             "__bucket"
         ).parquet(delta_dir)
         stats.phase_ms["delta"] = _ms_since(t1)
-        return delta_dir, nb
+        return delta_dir, nb, changes.drop("__bucket").schema
 
     def _resolved_sort_by(self):
         """The job's ``compact_sort_by`` resolved through any applied

@@ -11,6 +11,30 @@ import os
 from pyspark.sql import SparkSession
 
 
+def engine_sql_conf(cores: int) -> dict[str, str]:
+    """Runtime SQL confs every session running the engine gets, for a
+    session of ``cores`` task slots: applied by :func:`get_spark` and by
+    the spark-submit entry (scripts/submit_apply.py), which passes its
+    ``defaultParallelism`` once the session is up."""
+    return {
+        # List a read's files on the driver, never with Spark's
+        # distributed leaf-file listing job (one task per path past the
+        # default threshold of 32): the lakestore is local-FS only and
+        # its manifest already names every file, so that job would only
+        # add a scheduling round to every read of a >32-bucket set.
+        "spark.sql.sources.parallelPartitionDiscovery.threshold": str(2**31 - 1),
+        # At most one scan partition per core, the shuffle-partition
+        # rule: a bucketed read opens one small file per bucket, and the
+        # 4 MB open cost per file otherwise keeps every file in a split
+        # of its own (a 64-bucket scan = 64 tasks). Spark repacks the
+        # splits into at most this many partitions but never cuts a
+        # file finer, so a batch's single wire file still decodes in one
+        # task (lowering spark.sql.files.openCostInBytes instead would
+        # split it).
+        "spark.sql.files.maxPartitionNum": str(cores),
+    }
+
+
 def get_spark(
     app_name: str = "mysql-tracker-spark",
     cores: int | None = None,
@@ -46,6 +70,7 @@ def get_spark(
         # ts and the eventlog's footer-derived segment stats
         # (eventlog._dir_stats / read_range pruning)
         .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
+        .config(map=engine_sql_conf(cores))
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

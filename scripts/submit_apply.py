@@ -257,7 +257,11 @@ def main() -> None:
 
     from pyspark.sql import SparkSession
 
+    from mysql_tracker_spark.session import engine_sql_conf
+
     spark = SparkSession.builder.appName("mysql-tracker-spark-apply").getOrCreate()
+    for k, v in engine_sql_conf(spark.sparkContext.defaultParallelism).items():
+        spark.conf.set(k, v)
 
     if args.rollback_to is not None:
         from mysql_tracker_spark.lakestore import LakeTable
