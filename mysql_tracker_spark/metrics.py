@@ -10,28 +10,28 @@ metrics (per-minute windows, lag, backlog).
 
 from __future__ import annotations
 
+import dataclasses
 import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
-LINEAGE_JSON_SCHEMA = T.StructType(
-    [
-        T.StructField("batch_id", T.LongType()),
-        T.StructField("file_start", T.StringType()),
-        T.StructField("pos_start", T.LongType()),
-        T.StructField("file_end", T.StringType()),
-        T.StructField("pos_end", T.LongType()),
-        T.StructField("bytes_in", T.LongType()),
-        T.StructField("txn_file_end", T.StringType()),
-        T.StructField("txn_pos_end", T.LongType()),
-        T.StructField("rows_in", T.LongType()),
-        T.StructField("rows_applied", T.LongType()),
-        T.StructField("snapshot_version", T.LongType()),
-        T.StructField("wall_ms", T.LongType()),
-        T.StructField("lag_s", T.DoubleType()),
-        T.StructField("ts_ms", T.LongType()),
-    ]
-)
+from .runner import ApplyStats
+
+
+def _lineage_schema() -> T.StructType:
+    """The reader schema of ``lineage.jsonl``: one column per
+    :class:`~mysql_tracker_spark.runner.ApplyStats` field plus the
+    writer's ``ts_ms``. Scalars are typed from the annotation; dict and
+    list fields read as their JSON text."""
+    scalar = {"int": T.LongType(), "float": T.DoubleType(), "bool": T.BooleanType()}
+    named = [(f.name, str(f.type).split(" |")[0]) for f in dataclasses.fields(ApplyStats)]
+    return T.StructType(
+        [T.StructField(n, scalar.get(t, T.StringType())) for n, t in named]
+        + [T.StructField("ts_ms", T.LongType())]
+    )
+
+
+LINEAGE_JSON_SCHEMA = _lineage_schema()
 
 
 def lineage_df(spark: SparkSession, table_path: str) -> DataFrame:

@@ -39,6 +39,9 @@ class Expect:
     hi: float | None = None
     predicate: Column | None = field(default=None, compare=False)
     blocking: bool = False
+    # a SQL PASS expression compiled when the check runs (a Column
+    # needs an active SparkSession; the SQL text does not)
+    sql: str | None = None
 
 
 def not_null(name: str, col: str, blocking: bool = False) -> Expect:
@@ -67,9 +70,9 @@ def from_spec(spec: dict) -> Expect:
     form a :class:`~mysql_tracker_spark.config.JobConfig` carries so
     spark-submit jobs declare gates in the per-job JSON (the
     reference's TrackerConf style) without Python code. Kinds map 1:1
-    to the constructors above; ``sql`` compiles a SQL boolean PASS
-    expression via ``F.expr`` (needs an active SparkSession, so specs
-    are resolved at job build, not config load)."""
+    to the constructors above; ``sql`` carries a SQL boolean PASS
+    expression, compiled via ``F.expr`` when the check runs, so a spec
+    needs no SparkSession to build."""
     kind, name = spec["kind"], spec["name"]
     blocking = bool(spec.get("blocking", False))
     if kind == "not_null":
@@ -81,12 +84,13 @@ def from_spec(spec: dict) -> Expect:
     if kind == "unique":
         return unique(name, spec["cols"], blocking)
     if kind == "sql":
-        return predicate(name, F.expr(spec["expr"]), blocking)
+        return Expect(name, "predicate", sql=spec["expr"], blocking=blocking)
     raise ValueError(f"unknown expectation kind: {kind!r}")
 
 
 def from_specs(specs) -> list[Expect]:
-    return [from_spec(s) for s in (specs or [])]
+    """Spec dicts built into expectations; built ones pass through."""
+    return [s if isinstance(s, Expect) else from_spec(s) for s in (specs or [])]
 
 
 def _violation_term(e: Expect) -> Column:
@@ -102,7 +106,8 @@ def _violation_term(e: Expect) -> Column:
         if e.hi is not None:
             bad = bad | (c > e.hi)
     elif e.kind == "predicate":
-        bad = ~F.coalesce(e.predicate, F.lit(False))
+        cond = e.predicate if e.sql is None else F.expr(e.sql)
+        bad = ~F.coalesce(cond, F.lit(False))
     else:
         raise ValueError(f"not a row-level expectation: {e.kind}")
     return F.sum(bad.cast("long")).alias(e.name)

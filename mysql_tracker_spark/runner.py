@@ -32,11 +32,13 @@ import json
 import os
 import time
 import uuid
+import dataclasses
 from dataclasses import asdict, dataclass, field
 from typing import NamedTuple
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F, types as T
 
+from .config import JobConfig, _resolve_transform
 from .lakestore import LakeTable
 from .operators.dedup import lww_latest
 from .operators.filters import dml_for_table
@@ -144,72 +146,6 @@ class ApplyStats:
     table_audit: dict | None = None
 
 
-def _resolve_transform(spec):
-    """Resolve a JobConfig ``transform`` value: a callable passes
-    through; a dotted path ``"package.module:callable"`` is imported
-    (the spark-submit-friendly spelling — a JSON config can't carry a
-    function object). None stays None."""
-    if spec is None or callable(spec):
-        return spec
-    if not isinstance(spec, str) or ":" not in spec:
-        raise ValueError(
-            "transform must be a callable or 'package.module:callable', "
-            f"got {spec!r}"
-        )
-    import importlib
-
-    mod_name, _, attr = spec.partition(":")
-    fn = getattr(importlib.import_module(mod_name), attr)
-    if not callable(fn):
-        raise ValueError(f"transform {spec!r} resolved to a non-callable")
-    return fn
-
-
-def config_kwargs(cfg) -> dict:
-    """:class:`CdcApplyJob` keywords for a
-    :class:`~mysql_tracker_spark.config.JobConfig`: everything except
-    the input and table paths, which every job front-end takes
-    positionally."""
-    from .quality import from_specs
-
-    policy_map = {"fail": "fail", "reset_earliest": "earliest", None: None}
-    if cfg.on_invalid_position not in policy_map:
-        # a typo must not silently DISABLE the validation the
-        # operator explicitly configured (errno-1236 analogue)
-        raise ValueError(
-            "on_invalid_position must be 'fail' or 'reset_earliest', "
-            f"got {cfg.on_invalid_position!r}"
-        )
-    return dict(
-        schema_name=cfg.schema_name,
-        table_name=cfg.table_name,
-        n_buckets=cfg.n_buckets,
-        files_per_batch=cfg.files_per_batch,
-        source_format=cfg.source_format,
-        start_file=cfg.start_file,
-        start_pos=cfg.start_pos,
-        reset_policy=policy_map[cfg.on_invalid_position],
-        on_destructive_ddl=cfg.on_destructive_ddl,
-        filter_regex=cfg.filter_regex,
-        allowlist=cfg.allowlist or None,
-        n_salts=cfg.n_salts,
-        quarantine_dir=cfg.quarantine_dir,
-        expectations=from_specs(cfg.expectations),
-        table_expectations=from_specs(cfg.table_expectations),
-        write_mode=cfg.write_mode,
-        mor_compact_threshold=cfg.mor_compact_threshold,
-        auto_split_rows_per_bucket=cfg.auto_split_rows_per_bucket,
-        auto_split_migrate_per_batch=cfg.auto_split_migrate_per_batch,
-        compact_sort_by=cfg.compact_sort_by,
-        compact_files_per_bucket=cfg.compact_files_per_bucket,
-        transform=_resolve_transform(cfg.transform),
-        bloom_cols=cfg.bloom_cols or None,
-        gtid_list=cfg.gtid_list,
-        gtid_set=cfg.gtid_set,
-        incident_policy=cfg.incident_policy,
-    )
-
-
 class IncidentError(RuntimeError):
     """An INCIDENT_EVENT ("possibly lost events on the master",
     ``mysql/dbsync/event/IncidentLogEvent.java:41-50``) was found past
@@ -273,211 +209,40 @@ class CdcApplyJob:
         spark: SparkSession,
         input_dir: str,
         table_path: str,
-        schema_name: str = "chat",
-        table_name: str = "transcripts",
-        base_schema: T.StructType = TRANSCRIPTS_BASE_SCHEMA,
+        config: JobConfig | None = None,
+        *,
         key_cols: tuple[str, str] = ("conv_id", "turn_idx"),
-        n_buckets: int = 32,
-        files_per_batch: int = 1,
-        source_format: str = "typed",  # "typed" | "wire"
-        n_salts: int = 0,
-        start_file: str | None = None,
-        start_pos: int | None = None,
-        reset_policy: str | None = None,
-        on_destructive_ddl: str = "raise",  # raise | ignore
-        filter_regex: str | None = None,
-        allowlist: list[tuple[str, str]] | None = None,
-        expire_keep_last: int | None = None,
-        quarantine_dir: str | None = None,
-        expectations: list | None = None,
-        table_expectations: list | None = None,
-        write_mode: str = "cow",  # cow | mor
-        mor_compact_threshold: int = 8,
-        compact_sort_by: str | None = None,
-        compact_files_per_bucket: int = 1,
-        transform=None,
-        bloom_cols: list[str] | None = None,
-        auto_split_rows_per_bucket: int | None = None,
-        auto_split_migrate_per_batch: int = 16,
-        branch: str | None = None,
-        gtid_list: str | None = None,
-        gtid_set: str | None = None,
-        incident_policy: str = "fail",  # fail | record
+        base_schema: T.StructType = TRANSCRIPTS_BASE_SCHEMA,
+        **changes,
     ):
-        """``branch="name"`` applies onto a BRANCH of the target table
-        (created at the current main head if absent): batches commit to
-        the branch's snapshot chain, fenced by the branch's own
-        watermark, while main stays untouched — audit the branch state,
-        then ``table.fast_forward(name)`` publishes it (with the
-        branch's final watermark) or ``drop_branch`` discards it. The
-        table must already exist (a branch of nothing is meaningless).
-
-        ``n_salts > 0`` switches LWW dedup to the explicit two-phase
-        salted aggregation (local max per (key, salt) -> global max per
-        key) for workloads where a single hot conversation floods
-        individual input partitions faster than map-side partial
-        aggregation collapses it (north_star skew handling; semantics
-        identical, see operators/dedup.py)."""
+        """Every option lives in ``self.cfg``, a frozen
+        :class:`~mysql_tracker_spark.config.JobConfig`: ``config`` (or
+        the defaults) with the paths and any field keywords
+        (``n_buckets=8``, ``write_mode="mor"``, ...) replaced in —
+        an unknown keyword is a ``TypeError``, a bad value a
+        ``ValueError``. ``key_cols`` / ``base_schema`` are the target
+        table's shape. Options are read from ``self.cfg`` where they
+        are used, so ``job.cfg = dataclasses.replace(job.cfg, ...)``
+        takes effect from the next batch."""
         self.spark = spark
-        self.input_dir = input_dir
-        self.table_path = table_path
-        self.schema_name = schema_name
-        self.table_name = table_name
-        self.base_schema = base_schema
+        self.cfg = dataclasses.replace(
+            config or JobConfig(), input_dir=input_dir, table_path=table_path, **changes
+        )
         self.key_cols = list(key_cols)
-        self.n_buckets = n_buckets
-        self.files_per_batch = files_per_batch
-        self.source_format = source_format
-        self.n_salts = n_salts
+        self.base_schema = base_schema
         # unique per-job staging namespace: a fixed _delta_<batch_id>
         # name would let two jobs on one table path (main apply + a
         # concurrent branch apply) overwrite or adopt each other's
         # in-flight staged data
-        import uuid as _uuid
-
-        self._run_id = _uuid.uuid4().hex[:8]
-        # GTID replication-state fences — MariaDB GTID_LIST form
-        # ("0-1-100,1-2-7") and MySQL executed-set form
-        # ("uuid:1-100[,uuid2:...]"). Applied in _stream_filters on
-        # sources that carry a gtid column (typed/jsonl); on the wire
-        # path, GTID control frames (GTID_LOG_EVENT 33 / MariaDB GTID
-        # 162) open each transaction, so _wire_gtid_fence runs the same
-        # executed-set predicate on that tiny per-txn projection and
-        # anti-joins the fenced xids out of the decoded DML
-        self.gtid_list = gtid_list or None  # "" = no fence (empty
-        self.gtid_set = gtid_set or None    # PREVIOUS_GTIDS preamble)
-        # validate the MySQL set at job build with the shared parser, so
-        # a malformed set fails here instead of mid-batch
-        if self.gtid_set is not None:
-            from .operators.parse import parse_gtid_set
-
-            parse_gtid_set(self.gtid_set)
-        # C5 incident policy: an INCIDENT_EVENT (LogEvent.java:161-163,
-        # "possibly lost events") past the fence either fails the batch
-        # (default — an operator must decide, like reset_policy) or is
-        # recorded in stats/lineage while the apply continues
-        if incident_policy not in ("fail", "record"):
-            raise ValueError(
-                f"incident_policy must be 'fail' or 'record', got {incident_policy!r}"
-            )
-        self.incident_policy = incident_policy
+        self._run_id = uuid.uuid4().hex[:8]
         # auto skew escalation state (see AUTO_SALT_RATIO)
         self._escalated = False
-        # C2 bootstrap fallback (reference order: checkpoint first, then
-        # config-supplied position — HandlerMagpieKafka.java:363-406)
-        self.start_file = start_file
-        self.start_pos = start_pos
-        self.branch = branch
-        self.reset_policy = reset_policy
-        self.on_destructive_ddl = on_destructive_ddl
-        # snapshot retention: a long-running job commits >=1 snapshot
-        # per micro-batch — unbounded metadata + unreclaimed rewritten
-        # files without expiry. When set, expire down to the newest
-        # `expire_keep_last` snapshots after each applied batch
-        # (Iceberg's expire_snapshots maintenance, inlined; time travel
-        # stays available inside the retained window).
-        self.expire_keep_last = expire_keep_last
-        # dead-letter audit (wire path): when set, each batch persists
-        # its corrupt frames (truncated / bad_crc / malformed, verbatim
-        # payload + reason) under this directory instead of ONLY
-        # dropping them — the reference logs-and-skips
-        # (LogDecoder.java:158-169), which at 10^10 events makes data
-        # loss unauditable. None (default) keeps the pure drop path.
-        self.quarantine_dir = quarantine_dir
-        # audit-before-publish gate (quality.py): blocking expectations
-        # run per batch on the UPSERT rows BEFORE the MERGE
-        self.expectations = list(expectations or [])
-        # write-audit-publish gate (lakestore WAP): expectations run on
-        # the STAGED post-merge TABLE STATE — invariants a batch-level
-        # gate cannot express (turn-sequence gaps, row-count floors,
-        # cross-row uniqueness after the merge). When non-empty, every
-        # batch commit stages first, audits read_staged, then publishes
-        # (pass) or aborts + raises (fail; table and watermark
-        # untouched, the batch replays through the fence after the fix)
-        self.table_expectations = list(table_expectations or [])
-        # ingest transform hook (Debezium single-message-transform
-        # analogue): callable(DataFrame) -> DataFrame over the batch's
-        # post-LWW change set (key cols + typed payload + __delete) —
-        # redaction, normalization, enrichment AT INGEST, before the
-        # quality gates audit what actually lands. Contract: must be a
-        # pure, DETERMINISTIC row-wise Catalyst expression (replay of a
-        # fenced batch must reproduce byte-identical rows) and must not
-        # modify key columns or __delete (bucket placement / delete
-        # semantics). The engine validates the column set is unchanged;
-        # cost tracks the batch's LWW winners, never raw events.
-        self.transform = transform
-        # sink write mode: "cow" rewrites affected buckets per batch
-        # (read-optimized; per-batch cost tracks the touched buckets);
-        # "mor" appends the batch's change set as bucket delta files
-        # (write-optimized; per-batch cost tracks the BATCH — the
-        # 10^10-event shape when keys spread across all buckets) and
-        # auto-compacts any bucket once it accumulates
-        # `mor_compact_threshold` deltas, bounding read amplification.
-        if write_mode not in ("cow", "mor"):
-            raise ValueError(f"write_mode must be 'cow' or 'mor', got {write_mode!r}")
-        if mor_compact_threshold < 1:
-            raise ValueError("mor_compact_threshold must be >= 1")
-        self.write_mode = write_mode
-        self.mor_compact_threshold = mor_compact_threshold
-        # range-clustered compaction (Iceberg rewrite-with-sort-order):
-        # when set, auto-compaction folds each bucket into
-        # ~compact_files_per_bucket files sorted on compact_sort_by,
-        # keeping the stamped min/max bounds tight so read_where's file
-        # skipping survives compaction (a monolithic compacted file
-        # spans the whole history and can never be skipped)
-        self.compact_sort_by = compact_sort_by
-        self.compact_files_per_bucket = compact_files_per_bucket
-        # bloom-indexed columns (lakestore per-file bloom bitmaps,
-        # stamped at every write; read via table.read_where_in) —
-        # point-read pruning on high-cardinality non-key columns. Under
-        # write_mode="mor" the adopted deltas carry no bitmaps until
-        # compaction rewrites them (never skipped meanwhile)
-        self.bloom_cols = list(bloom_cols) if bloom_cols else None
-        # autonomous layout growth: once mean live rows/bucket exceeds
-        # this threshold, split_buckets doubles the count (metadata-
-        # only) and subsequent batches migrate <= auto_split_migrate_
-        # per_batch shared buckets each — the table's layout follows
-        # its growth with bounded extra work per batch, no operator
-        if auto_split_rows_per_bucket is not None and auto_split_rows_per_bucket < 1:
-            raise ValueError("auto_split_rows_per_bucket must be >= 1")
-        if auto_split_migrate_per_batch < 1:
-            raise ValueError("auto_split_migrate_per_batch must be >= 1")
-        self.auto_split_rows_per_bucket = auto_split_rows_per_bucket
-        self.auto_split_migrate_per_batch = auto_split_migrate_per_batch
-        # F1/F2 stream filters (reference filterRegex + filterMap,
-        # TrackerConf.java:206-216). This job applies ONE target table,
-        # so a filter that excludes the target is a misconfiguration:
-        # every event would be dropped and the job would silently
-        # commit empty batches forever — fail fast instead.
-        self.filter_regex = filter_regex
-        self.allowlist = [tuple(a) for a in allowlist] if allowlist else None
-        target = f"{schema_name}.{table_name}"
-        if filter_regex is not None:
-            import re as _re
-
-            anchored = filter_regex if filter_regex.startswith("^") else f"^(?:{filter_regex})$"
-            if not _re.match(anchored, target):
-                raise ValueError(
-                    f"filter_regex {filter_regex!r} excludes the target table "
-                    f"{target} — the apply job would drop every event"
-                )
-        if self.allowlist is not None and (schema_name, table_name) not in self.allowlist:
-            raise ValueError(
-                f"allowlist {self.allowlist!r} excludes the target table {target}"
-            )
         self.table: LakeTable | None = None
 
     @classmethod
-    def from_config(cls, spark: SparkSession, cfg, **overrides) -> "CdcApplyJob":
-        """Build a job from a :class:`~mysql_tracker_spark.config.JobConfig`
-        (the reference's per-job JSON, O3). ``overrides`` are constructor
-        keywords that win over the config's — options a JSON config
-        cannot carry (parsed expectations, ``branch``,
-        ``expire_keep_last``)."""
-        return cls(
-            spark, cfg.input_dir, cfg.table_path,
-            **{**config_kwargs(cfg), **overrides},
-        )
+    def from_config(cls, spark: SparkSession, cfg: JobConfig, **changes) -> "CdcApplyJob":
+        """A job on the config's own ``input_dir`` / ``table_path``."""
+        return cls(spark, cfg.input_dir, cfg.table_path, cfg, **changes)
 
     # ------------------------------------------------------------- lifecycle
 
@@ -485,8 +250,8 @@ class CdcApplyJob:
         """O1 prepare: open-or-create the target table (position
         bootstrap C2 = read watermark from the last committed
         snapshot's properties)."""
-        if LakeTable.exists(self.table_path):
-            self.table = LakeTable.load(self.table_path)
+        if LakeTable.exists(self.cfg.table_path):
+            self.table = LakeTable.load(self.cfg.table_path)
             # crash debris: delta staging dirs from a killed run are
             # harmless (never referenced by a committed snapshot) but
             # reclaim the space before replaying. Ownership-liveness
@@ -497,13 +262,13 @@ class CdcApplyJob:
             import shutil
 
             now = time.time()
-            entries = os.listdir(self.table_path)
+            entries = os.listdir(self.cfg.table_path)
 
             def _marker_age(run_id: str) -> float | None:
                 try:
                     return now - os.path.getmtime(
                         os.path.join(
-                            self.table_path, f"_owner_{run_id}.alive"
+                            self.cfg.table_path, f"_owner_{run_id}.alive"
                         )
                     )
                 except OSError:
@@ -512,7 +277,7 @@ class CdcApplyJob:
             for d in entries:
                 if not d.startswith(("_delta_", "_winners_")):
                     continue
-                p = os.path.join(self.table_path, d)
+                p = os.path.join(self.cfg.table_path, d)
                 # names are _delta_<run_id>_<batch_id>; _winners_ dirs
                 # are left by an earlier version that staged LWW winners
                 # ahead of their batch
@@ -532,29 +297,29 @@ class CdcApplyJob:
                 shutil.rmtree(p, ignore_errors=True)
             for d in entries:
                 if d.startswith("_owner_") and d.endswith(".alive"):
-                    p = os.path.join(self.table_path, d)
+                    p = os.path.join(self.cfg.table_path, d)
                     try:
                         if now - os.path.getmtime(p) >= self.OWNER_STALE_S:
                             os.remove(p)
                     except OSError:
                         pass
         else:
-            if self.branch is not None:
+            if self.cfg.branch is not None:
                 raise FileNotFoundError(
-                    f"branch={self.branch!r} requested but no table exists "
-                    f"at {self.table_path} — a branch forks an existing "
+                    f"branch={self.cfg.branch!r} requested but no table exists "
+                    f"at {self.cfg.table_path} — a branch forks an existing "
                     "main head"
                 )
             self.table = LakeTable.create(
-                self.table_path,
+                self.cfg.table_path,
                 self.base_schema,
                 key_cols=self.key_cols,
                 bucket_by=self.key_cols[0],
-                n_buckets=self.n_buckets,
-                bloom_cols=self.bloom_cols,
+                n_buckets=self.cfg.n_buckets,
+                bloom_cols=self.cfg.bloom_cols or None,
             )
-        if self.branch is not None:
-            if self.expire_keep_last is not None:
+        if self.cfg.branch is not None:
+            if self.cfg.expire_keep_last is not None:
                 # snapshot retention is a MAIN-chain maintenance concern
                 # (_BranchTable.expire_snapshots raises); failing here
                 # beats crashing mid-batch after work was committed
@@ -564,15 +329,15 @@ class CdcApplyJob:
                 )
             root = self.table
             try:
-                self.table = root.load_branch(self.branch)
+                self.table = root.load_branch(self.cfg.branch)
             except FileNotFoundError:
-                self.table = root.branch(self.branch)
+                self.table = root.branch(self.cfg.branch)
         self._start_owner_heartbeat()
         return self.table
 
     def _owner_marker(self, run_id: str | None = None) -> str:
         return os.path.join(
-            self.table_path, f"_owner_{run_id or self._run_id}.alive"
+            self.cfg.table_path, f"_owner_{run_id or self._run_id}.alive"
         )
 
     def _touch_owner(self) -> None:
@@ -642,11 +407,11 @@ class CdcApplyJob:
         seq = int(p.get("batch_seq") or -1)
         if f is not None:
             return f, int(p["offset_pos"]) if p.get("offset_pos") else None, seq
-        if self.start_file is not None:
+        if self.cfg.start_file is not None:
             # C2 fallback: config-supplied start position (events at or
             # before it are fenced out), used only when no checkpoint
             # has ever been committed — the reference's resolution order
-            return self.start_file, int(self.start_pos or 0), seq
+            return self.cfg.start_file, int(self.cfg.start_pos or 0), seq
         return None, None, seq
 
     def bootstrap_snapshot(
@@ -762,9 +527,10 @@ class CdcApplyJob:
         watermark must fall inside the retained input's (file,pos)
         range. If it does not:
 
-        * ``reset_policy="fail"`` (default): raise — an operator must
+        * ``"fail"`` (default): raise — an operator must
           decide, because resetting silently breaks at-least-once.
-        * ``reset_policy="earliest"``: clear the watermark and replay
+        * ``"earliest"`` (or ``"reset_earliest"``, the
+          ``on_invalid_position`` spelling): clear the watermark and replay
           everything retained (the reference's delete-checkpoint path;
           idempotent MERGE makes the replay safe, so unlike the
           reference this loses nothing that is still retained).
@@ -790,7 +556,7 @@ class CdcApplyJob:
             return {"valid": False, "wm": (wm_file, wm_pos), "action": "no-input"}
         cols = ["file", "pos"]
         probe_files = files if deep else [files[0], files[-1]]
-        if self.source_format == "jsonl":
+        if self.cfg.source_format == "jsonl":
             # C5/C7 must work for every ingest format: jsonl batches
             # are not parquet — probe them with the same schema-first
             # read apply_batch uses
@@ -821,14 +587,14 @@ class CdcApplyJob:
         if valid:
             return {"valid": True, "wm": wm, "lo": lo, "hi": hi, "action": "none",
                     "probe_files": n_probe}
-        if reset_policy == "earliest":
+        if reset_policy in ("earliest", "reset_earliest"):
             self.table.set_properties({"offset_file": "", "offset_pos": ""})
             # empty strings read back as no watermark
             return {"valid": False, "wm": wm, "lo": lo, "hi": hi, "action": "reset",
                     "probe_files": n_probe}
         raise ValueError(
             f"committed watermark {wm} outside retained input range [{lo}, {hi}] "
-            "(reference errno-1236 analogue); pass reset_policy='earliest' to "
+            "(reference errno-1236 analogue); the 'earliest' policy would "
             "clear the checkpoint and replay retained input"
         )
 
@@ -865,7 +631,7 @@ class CdcApplyJob:
             # MySQL allows comma-separated clause lists in one ALTER —
             # apply EVERY recognized clause in statement order (first-
             # clause-only would silently half-evolve the schema)
-            for parsed in parse_ddl_clauses(sql, self.schema_name):
+            for parsed in parse_ddl_clauses(sql, self.cfg.schema_name):
                 trunc_fp = self._apply_ddl_clause(parsed, row, sql, trunc_fp)
         return trunc_fp
 
@@ -875,8 +641,8 @@ class CdcApplyJob:
         """Apply one parsed DDL clause; returns the (possibly
         updated) truncate fence."""
         targets = (
-            parsed.schema_name == self.schema_name
-            and parsed.table_name == self.table_name
+            parsed.schema_name == self.cfg.schema_name
+            and parsed.table_name == self.cfg.table_name
         )
         if parsed.kind in ("ADD_COLUMN", "WIDEN"):
             if targets:
@@ -889,7 +655,7 @@ class CdcApplyJob:
             # the column — no rewrite). KEY-column drop destroys
             # the apply identity — operator decision.
             if parsed.column in self.key_cols:
-                if self.on_destructive_ddl == "ignore":
+                if self.cfg.on_destructive_ddl == "ignore":
                     return trunc_fp
                 raise RuntimeError(
                     f"DROP of key column {parsed.column!r} at "
@@ -909,7 +675,7 @@ class CdcApplyJob:
             # are keyed by fixed key_cols) — operator decision,
             # like DROP/RENAME TABLE.
             if parsed.column in self.key_cols:
-                if self.on_destructive_ddl == "ignore":
+                if self.cfg.on_destructive_ddl == "ignore":
                     return trunc_fp
                 raise RuntimeError(
                     f"RENAME of key column {parsed.column!r} at "
@@ -940,11 +706,11 @@ class CdcApplyJob:
             self.table.truncate()
             trunc_fp = (row["file"], row["pos"])
         elif parsed.kind in ("DROP", "RENAME") and targets:
-            if self.on_destructive_ddl == "ignore":
+            if self.cfg.on_destructive_ddl == "ignore":
                 return trunc_fp
             raise RuntimeError(
                 f"{parsed.kind} against the target table "
-                f"{self.schema_name}.{self.table_name} at "
+                f"{self.cfg.schema_name}.{self.cfg.table_name} at "
                 f"({row['file']}, {row['pos']}): {sql!r} — refusing to "
                 "continue applying DML to a dropped/renamed identity. "
                 "Pass on_destructive_ddl='ignore' to skip (reference "
@@ -967,7 +733,7 @@ class CdcApplyJob:
         from .sources.wire import quarantine_frames
 
         sub = os.path.join(
-            self.quarantine_dir, f"batch-{batch_id:05d}-{uuid.uuid4().hex[:8]}"
+            self.cfg.quarantine_dir, f"batch-{batch_id:05d}-{uuid.uuid4().hex[:8]}"
         )
         quarantine_frames(raw_f).write.parquet(sub)
         n = _parquet_dir_rows(sub)
@@ -981,18 +747,18 @@ class CdcApplyJob:
         wired so a configured filter is honored in-plan, not ignored)."""
         from .operators.filters import allowlist_filter, regex_name_filter
 
-        if self.filter_regex is not None:
-            df = regex_name_filter(df, self.filter_regex)
-        if self.allowlist is not None:
-            df = allowlist_filter(df, self.allowlist)
-        if self.gtid_list is not None and "gtid" in df.columns:
+        if self.cfg.filter_regex is not None:
+            df = regex_name_filter(df, self.cfg.filter_regex)
+        if self.cfg.allowlist:
+            df = allowlist_filter(df, self.cfg.allowlist)
+        if self.cfg.gtid_list is not None and "gtid" in df.columns:
             from .sources.mariadb_events import after_mariadb_gtid_list
 
-            df = after_mariadb_gtid_list(df, self.gtid_list)
-        if self.gtid_set is not None and "gtid" in df.columns:
+            df = after_mariadb_gtid_list(df, self.cfg.gtid_list)
+        if self.cfg.gtid_set is not None and "gtid" in df.columns:
             from .operators.parse import after_gtid_set
 
-            df = after_gtid_set(df, self.gtid_set)
+            df = after_gtid_set(df, self.cfg.gtid_set)
         return df
 
     def _wire_gtid_fence(self, raw_f: DataFrame, dml: DataFrame) -> DataFrame:
@@ -1008,7 +774,7 @@ class CdcApplyJob:
         of (long, short string), and AQE broadcasts the anti-join's
         small side; zero cost when no fence is configured (the common
         case — this method is then an identity)."""
-        if self.gtid_set is None and self.gtid_list is None:
+        if self.cfg.gtid_set is None and self.cfg.gtid_list is None:
             return dml
         from .sources.wire import FIELD_SEP
 
@@ -1027,17 +793,17 @@ class CdcApplyJob:
             xid.alias("xid"), gtid.alias("gtid")
         )
         inside = F.lit(False)
-        if self.gtid_set is not None:
+        if self.cfg.gtid_set is not None:
             from .operators.parse import gtid_inside_predicate
 
-            inside = inside | gtid_inside_predicate(self.gtid_set)
-        if self.gtid_list is not None:
+            inside = inside | gtid_inside_predicate(self.cfg.gtid_set)
+        if self.cfg.gtid_list is not None:
             from .sources.mariadb_events import (
                 gtid_list_fence,
                 mariadb_gtid_inside_predicate,
             )
 
-            fence = gtid_list_fence(self.gtid_list)
+            fence = gtid_list_fence(self.cfg.gtid_list)
             if fence:
                 is_maria, m_inside = mariadb_gtid_inside_predicate(fence)
                 inside = inside | (is_maria & m_inside)
@@ -1125,16 +891,16 @@ class CdcApplyJob:
         the predicates)."""
         if not gtid:
             return False
-        if self.gtid_list is not None:
+        if self.cfg.gtid_list is not None:
             from .sources.mariadb_events import gtid_list_fence
 
             bits = gtid.split("-")
             if len(bits) == 3 and all(b.isdigit() for b in bits):
-                fence = gtid_list_fence(self.gtid_list)
+                fence = gtid_list_fence(self.cfg.gtid_list)
                 d, _s, q = (int(x) for x in bits)
                 if d in fence and q <= fence[d]:
                     return True
-        if self.gtid_set is not None and ":" in gtid:
+        if self.cfg.gtid_set is not None and ":" in gtid:
             from .operators.parse import parse_gtid_set
 
             uuid_part, txn_part = gtid.split(":", 1)
@@ -1142,7 +908,7 @@ class CdcApplyJob:
                 txn = int(txn_part)
             except ValueError:
                 return False
-            for lo, hi in parse_gtid_set(self.gtid_set).get(uuid_part, []):
+            for lo, hi in parse_gtid_set(self.cfg.gtid_set).get(uuid_part, []):
                 if lo <= txn <= hi:
                     return True
         return False
@@ -1163,8 +929,8 @@ class CdcApplyJob:
         point. Without a manifest, falls back to a sorted local
         directory listing (file names are offset-ordered by
         construction)."""
-        man = os.path.join(self.input_dir, self.INPUT_MANIFEST)
-        ext = ".jsonl" if self.source_format == "jsonl" else ".parquet"
+        man = os.path.join(self.cfg.input_dir, self.INPUT_MANIFEST)
+        ext = ".jsonl" if self.cfg.source_format == "jsonl" else ".parquet"
         if os.path.exists(man):
             with open(man) as f:
                 names = json.load(f)["files"]
@@ -1174,17 +940,17 @@ class CdcApplyJob:
             # — a foreign entry would crash the parquet reader on jsonl
             # or silently null out parquet under the json reader
             files = [
-                os.path.join(self.input_dir, p)
+                os.path.join(self.cfg.input_dir, p)
                 for p in names
                 if p.endswith(ext)
             ]
         else:
             files = sorted(
-                os.path.join(self.input_dir, f)
-                for f in os.listdir(self.input_dir)
+                os.path.join(self.cfg.input_dir, f)
+                for f in os.listdir(self.cfg.input_dir)
                 if f.endswith(ext)
             )
-        k = self.files_per_batch
+        k = self.cfg.files_per_batch
         return [files[i : i + k] for i in range(0, len(files), k)]
 
     def run(self, max_batches: int | None = None) -> list[ApplyStats]:
@@ -1194,8 +960,8 @@ class CdcApplyJob:
         mid-stream (O2 replay)."""
         if self.table is None:
             self.prepare()
-        if self.reset_policy is not None:
-            self.validate_position(self.reset_policy)
+        if self.cfg.on_invalid_position is not None:
+            self.validate_position(self.cfg.on_invalid_position)
         groups = self.batch_files()[:max_batches]
         return [self.apply_batch(i, group) for i, group in enumerate(groups)]
 
@@ -1231,7 +997,7 @@ class CdcApplyJob:
         self._touch_owner()
         stats = ApplyStats(batch_id=batch_id)
         wm = self.watermark()[:2]
-        src = (_WireSource if self.source_format == "wire" else _TypedSource)(
+        src = (_WireSource if self.cfg.source_format == "wire" else _TypedSource)(
             self, paths
         )
         m = src.manifest(wm)
@@ -1253,7 +1019,7 @@ class CdcApplyJob:
 
         # C5 incident gate: BEFORE any apply work
         if m.incidents:
-            if self.incident_policy == "fail":
+            if self.cfg.incident_policy == "fail":
                 raise IncidentError(m.incidents)
             stats.incidents = m.incidents
         stats.heartbeat_ts = m.heartbeat_ts
@@ -1273,7 +1039,7 @@ class CdcApplyJob:
         # metadata reads, no Spark job) -> collapse ratio -> auto skew
         # escalation decision for the NEXT batch (see AUTO_SALT_RATIO)
         stats.rows_winners = _parquet_dir_rows(delta_dir)
-        if self.n_salts == 0 and stats.rows_winners:
+        if self.cfg.n_salts == 0 and stats.rows_winners:
             self._escalated = m.n_dml / stats.rows_winners >= self.AUTO_SALT_RATIO
 
         props = {
@@ -1281,7 +1047,7 @@ class CdcApplyJob:
             "offset_pos": str(stats.pos_end),
             "batch_seq": str(batch_id),
         }
-        fenced = self.gtid_set is not None or self.gtid_list is not None
+        fenced = self.cfg.gtid_set is not None or self.cfg.gtid_list is not None
         if fenced:
             # open-group fence carry, atomic with the watermark (see
             # _wire_gtid_fence; staged when the winners plan was built)
@@ -1303,11 +1069,11 @@ class CdcApplyJob:
             for d in os.listdir(delta_dir)
             if d.startswith("__bucket=")
         )
-        stats.write_mode = self.write_mode
+        stats.write_mode = self.cfg.write_mode
         if not affected:
             stats.snapshot_version = self.table.set_properties(props)
         else:
-            if self.write_mode == "mor":
+            if self.cfg.write_mode == "mor":
                 # merge-on-read: the staged bucket-partitioned delta IS
                 # the commit — one rename + manifest append, zero Spark
                 # jobs; per-batch cost never sees the table size
@@ -1344,15 +1110,15 @@ class CdcApplyJob:
             self._gtid_carry = getattr(self, "_gtid_carry_pending", None)
         stats.phase_ms["merge"] = _ms_since(t1)
 
-        if self.write_mode == "mor":
+        if self.cfg.write_mode == "mor":
             self._maybe_compact(stats)
         stats.rows_applied = m.n_dml
         stats.wall_ms = _ms_since(t0)
         if m.max_ts_s is not None:
             stats.lag_s = time.time() - m.max_ts_s
         self._maybe_grow(stats)
-        if self.expire_keep_last is not None:
-            self.table.expire_snapshots(keep_last=self.expire_keep_last)
+        if self.cfg.expire_keep_last is not None:
+            self.table.expire_snapshots(keep_last=self.cfg.expire_keep_last)
         self._append_lineage(stats)
         return stats
 
@@ -1392,7 +1158,7 @@ class CdcApplyJob:
         """LWW dedup: one row per key, the payload of the event latest
         in log order; records the variant that ran."""
         cols = ["op", payload]
-        if self.n_salts > 0 or self._escalated:
+        if self.cfg.n_salts > 0 or self._escalated:
             # explicit two-phase salted LWW: configured (n_salts), or
             # AUTO skew escalation — the previous batch's collapse ratio
             # crossed AUTO_SALT_RATIO, a single-key flood regime where
@@ -1402,8 +1168,8 @@ class CdcApplyJob:
             # drops back under the threshold.
             from .operators.dedup import lww_latest_salted
 
-            n = self.n_salts or self.AUTO_SALTS
-            stats.lww_variant = f"salted{n}" if self.n_salts else f"auto_salted{n}"
+            n = self.cfg.n_salts or self.AUTO_SALTS
+            stats.lww_variant = f"salted{n}" if self.cfg.n_salts else f"auto_salted{n}"
             return lww_latest_salted(keyed, self.key_cols, cols, n)
         if payload == "after_kv":
             # packed kv string: packed-argmax partial+final aggregation,
@@ -1457,7 +1223,7 @@ class CdcApplyJob:
         )
         self._gate_expectations(changes, stats)
         delta_dir = os.path.join(
-            self.table_path, f"_delta_{self._run_id}_{batch_id}"
+            self.cfg.table_path, f"_delta_{self._run_id}_{batch_id}"
         )
         shutil.rmtree(delta_dir, ignore_errors=True)
         t1 = time.time()
@@ -1479,7 +1245,7 @@ class CdcApplyJob:
         RENAME COLUMN; None (with a warning) if a column no longer
         exists (dropped / typo) — maintenance compactions then fall
         back to unclustered rather than crashing the apply loop."""
-        sort_by = self.compact_sort_by
+        sort_by = self.cfg.compact_sort_by
         if not sort_by:
             return None
         current = {f.name for f in self.table.schema().fields}
@@ -1523,19 +1289,19 @@ class CdcApplyJob:
         rows slightly, which only makes growth marginally eager.
         Like compaction, growth is maintenance, not correctness: any
         optimistic-commit race just defers it to a later batch."""
-        if self.auto_split_rows_per_bucket is None:
+        if self.cfg.auto_split_rows_per_bucket is None:
             return
         from .lakestore import CommitConflictError
 
         shared = self.table.shared_buckets()
         if shared:
-            step = shared[: self.auto_split_migrate_per_batch]
+            step = shared[: self.cfg.auto_split_migrate_per_batch]
             try:
                 _, done = self.table.compact(
                     self.spark,
                     bucket_ids=step,
                     sort_by=self._resolved_sort_by(),
-                    files_per_bucket=self.compact_files_per_bucket,
+                    files_per_bucket=self.cfg.compact_files_per_bucket,
                 )
             except (FileExistsError, CommitConflictError):
                 return
@@ -1548,7 +1314,7 @@ class CdcApplyJob:
             for fe in fs
         )
         nb = m["n_buckets"]
-        if rows / nb <= self.auto_split_rows_per_bucket:
+        if rows / nb <= self.cfg.auto_split_rows_per_bucket:
             return
         try:
             self.table.split_buckets(2)
@@ -1569,7 +1335,7 @@ class CdcApplyJob:
 
         counts = self.table.delta_counts()
         todo = sorted(
-            b for b, n in counts.items() if n >= self.mor_compact_threshold
+            b for b, n in counts.items() if n >= self.cfg.mor_compact_threshold
         )
         if todo:
             try:
@@ -1577,7 +1343,7 @@ class CdcApplyJob:
                     self.spark,
                     todo,
                     sort_by=self._resolved_sort_by(),
-                    files_per_bucket=self.compact_files_per_bucket,
+                    files_per_bucket=self.cfg.compact_files_per_bucket,
                 )
             except (FileExistsError, CommitConflictError):
                 # optimistic-commit collision with a concurrent writer:
@@ -1595,10 +1361,11 @@ class CdcApplyJob:
         violation the staged snapshot is aborted — data files reaped,
         table and watermark untouched — and the batch raises; replay
         after the fix goes through the normal fence."""
-        if not self.table_expectations:
+        if not self.cfg.table_expectations:
             return commit_fn(None)
-        from .quality import run_expectations
+        from .quality import from_specs, run_expectations
 
+        expects = from_specs(self.cfg.table_expectations)
         wap_id = f"batch-{stats.batch_id}-{uuid.uuid4().hex[:8]}"
         commit_fn(wap_id)
         # once the stage exists, ANY failure before publish must reap
@@ -1608,10 +1375,10 @@ class CdcApplyJob:
         try:
             rows = run_expectations(
                 self.table.read_staged(self.spark, wap_id),
-                self.table_expectations,
+                expects,
             ).collect()
             stats.table_audit = {r.name: r.violations for r in rows}
-            blocking = {e.name for e in self.table_expectations if e.blocking}
+            blocking = {e.name for e in expects if e.blocking}
             failed = [r for r in rows if r.name in blocking and not r.passed]
         except Exception:
             self.table.abort_staged(wap_id)
@@ -1631,10 +1398,10 @@ class CdcApplyJob:
         must carry exactly the same columns (any order) — a transform
         that drops/renames/adds columns would silently corrupt the
         merge, so that is an error, not a warning."""
-        if self.transform is None:
+        if self.cfg.transform is None:
             return changes
         cols = changes.columns
-        out = self.transform(changes)
+        out = _resolve_transform(self.cfg.transform)(changes)
         if sorted(out.columns) != sorted(cols):
             raise ValueError(
                 "ingest transform must preserve the change-set columns: "
@@ -1652,15 +1419,14 @@ class CdcApplyJob:
         Violation counts (blocking or not) land in the batch's stats
         and lineage row — the expectations double as a metric stream
         alongside the M1 counters."""
-        if not self.expectations:
+        if not self.cfg.expectations:
             return
-        from .quality import run_expectations
+        from .quality import from_specs, run_expectations
 
-        rows = run_expectations(
-            changes.filter(~F.col("__delete")), self.expectations
-        ).collect()
+        expects = from_specs(self.cfg.expectations)
+        rows = run_expectations(changes.filter(~F.col("__delete")), expects).collect()
         stats.expectation_violations = {r.name: r.violations for r in rows}
-        blocking = {e.name for e in self.expectations if e.blocking}
+        blocking = {e.name for e in expects if e.blocking}
         failed = [r for r in rows if r.name in blocking and not r.passed]
         if failed:
             detail = ", ".join(f"{r.name}={r.violations}" for r in failed)
@@ -1675,7 +1441,7 @@ class CdcApplyJob:
         only — the snapshot properties are the correctness-bearing
         checkpoint; this file is append-only JSONL like the reference's
         monitor topic (``monitor/TrackerMonitor.java:153-192``)."""
-        path = os.path.join(self.table_path, "lineage.jsonl")
+        path = os.path.join(self.cfg.table_path, "lineage.jsonl")
         rec = {**asdict(stats), "ts_ms": int(time.time() * 1000)}
         with open(path, "a") as f:
             f.write(json.dumps(rec) + "\n")
@@ -1751,7 +1517,7 @@ class _TypedSource:
         reader = job.spark.read.schema(CHANGE_EVENT_SCHEMA)
         self.df = (
             reader.json(list(paths))
-            if job.source_format == "jsonl"
+            if job.cfg.source_format == "jsonl"
             else reader.parquet(*paths)
         )
         k0, k1 = job.key_cols
@@ -1773,8 +1539,8 @@ class _TypedSource:
         from pyspark.sql import Observation
 
         job = self.job
-        target = (F.col("schema_name") == job.schema_name) & (
-            F.col("table_name") == job.table_name
+        target = (F.col("schema_name") == job.cfg.schema_name) & (
+            F.col("table_name") == job.cfg.table_name
         )
         applied_dml = (
             F.col("op").isin("INSERT", "UPDATE", "DELETE") & target & _past_fence(wm)
@@ -1825,7 +1591,7 @@ class _TypedSource:
             # discard DML at or before the truncate (it was wiped)
             df = after_watermark(df, *trunc_fp)
         job = self.job
-        return dml_for_table(job._stream_filters(df), job.schema_name, job.table_name)
+        return dml_for_table(job._stream_filters(df), job.cfg.schema_name, job.cfg.table_name)
 
 
 class _WireSource:
@@ -1892,7 +1658,7 @@ class _WireSource:
         # target-DML row test without per-row splits: values never
         # contain the separator bytes (framing invariant), so the
         # schema/table fields match iff the signature substring occurs
-        sig = f"{FIELD_SEP}{job.schema_name}{FIELD_SEP}{job.table_name}{FIELD_SEP}"
+        sig = f"{FIELD_SEP}{job.cfg.schema_name}{FIELD_SEP}{job.cfg.table_name}{FIELD_SEP}"
         is_dml_row = lambda r: r.contains(sig) & (  # noqa: E731
             r.startswith("INSERT" + FIELD_SEP)
             | r.startswith("UPDATE" + FIELD_SEP)
@@ -2043,8 +1809,8 @@ class _WireSource:
         dd = dd[
             dd["is_ddl"]
             & dd["crc_ok"]
-            & (dd["schema_name"] == job.schema_name)
-            & (dd["table_name"] == job.table_name)
+            & (dd["schema_name"] == job.cfg.schema_name)
+            & (dd["table_name"] == job.cfg.table_name)
         ]
         if wm[0] is not None:
             dd = dd[dd.apply(lambda d: (d["file"], d["pos"]) > wm, axis=1)]
@@ -2074,7 +1840,7 @@ class _WireSource:
         if trunc_fp is not None:
             # discard DML at or before the truncate (it was wiped)
             raw_f = after_watermark(raw_f, *trunc_fp)
-        if job.quarantine_dir is not None:
+        if job.cfg.quarantine_dir is not None:
             stats.frames_quarantined = job._quarantine(raw_f, stats.batch_id)
         # F4 pre-decode gate, faithful to the reference's decoder
         # BitSet (LogDecoder.java:108-134): only row-event frames
@@ -2086,8 +1852,8 @@ class _WireSource:
         )
         dml = dml_for_table(
             job._stream_filters(decode_frames_kv(raw_dml)),
-            job.schema_name,
-            job.table_name,
+            job.cfg.schema_name,
+            job.cfg.table_name,
         )
         # GTID-set fencing (wire twin of after_gtid_set; identity when
         # no fence is configured)
@@ -2166,11 +1932,11 @@ class MultiApplyJob:
         for key, job in self.jobs.items():
             if job.table is not None:
                 tables[key] = job.table
-            elif LakeTable.exists(job.table_path):
-                tables[key] = LakeTable.load(job.table_path)
+            elif LakeTable.exists(job.cfg.table_path):
+                tables[key] = LakeTable.load(job.cfg.table_path)
             else:
                 raise ConsistencyError(
-                    f"target {key} has no table at {job.table_path} "
+                    f"target {key} has no table at {job.cfg.table_path} "
                     "(never prepared/run)"
                 )
         return consistent_read(spark, tables, txn_aligned=txn_aligned)

@@ -381,17 +381,13 @@ def main() -> None:
             file=sys.stderr,
         )
 
-    # ONE JobConfig for every path: the --config file (without one, the
-    # defaults and no position policy) with each flag passed on top;
-    # then one constructor call builds the job from it
+    # ONE JobConfig for every path: the --config file (or the
+    # defaults) with each flag passed on top; the batch and the
+    # streaming job are built from it the same way
     from mysql_tracker_spark.config import JobConfig
-    from mysql_tracker_spark.runner import CdcApplyJob, config_kwargs
+    from mysql_tracker_spark.runner import CdcApplyJob
 
-    cfg = (
-        JobConfig.load(args.config)
-        if args.config
-        else JobConfig(on_invalid_position=None)
-    )
+    cfg = JobConfig.load(args.config) if args.config else JobConfig()
     flags = {
         "input_dir": args.input,
         "table_path": args.table,
@@ -409,35 +405,34 @@ def main() -> None:
         if args.bloom_cols is not None
         else None,
         "auto_split_rows_per_bucket": args.auto_split_rows_per_bucket,
+        "branch": args.branch,
+        "expire_keep_last": args.expire_keep_last,
         "gtid_list": args.gtid_list,
         "gtid_set": args.gtid_set,
         "incident_policy": args.incident_policy,
     }
     cfg = dataclasses.replace(cfg, **{k: v for k, v in flags.items() if v is not None})
-    # options a JSON config cannot carry
-    extra = {"expire_keep_last": args.expire_keep_last, "branch": args.branch}
-    if expectations:
-        extra["expectations"] = expectations
+    # parsed --expect gates (built Expect objects, not JSON specs)
+    extra = {"expectations": expectations} if expectations else {}
 
     if args.streaming:
-        if args.branch is not None:
-            print("--branch is batch-mode only", file=sys.stderr)
+        if cfg.branch is not None:
+            print("branch is batch-mode only", file=sys.stderr)
             sys.exit(2)
         from mysql_tracker_spark.streaming import CdcStreamJob
 
-        # the streaming front-end wraps the SAME apply job — every
-        # operator-facing option must reach it (a --expect gate or a
-        # GTID fence silently not enforced would merge the wrong rows)
         stream = CdcStreamJob(
             spark,
             cfg.input_dir,
             cfg.table_path,
             checkpoint_dir=args.checkpoint or args.table + "_ckpt",
-            **{**config_kwargs(cfg), **extra},
+            source_format=cfg.source_format,
+            config=cfg,
+            **extra,
         )
         job = stream.job
     else:
-        job = CdcApplyJob.from_config(spark, cfg, **extra)
+        job = CdcApplyJob(spark, cfg.input_dir, cfg.table_path, cfg, **extra)
         if args.bootstrap_snapshot is not None:
             snap_dir, bfile, bpos = args.bootstrap_snapshot
             v = job.bootstrap_snapshot(

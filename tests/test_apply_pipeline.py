@@ -54,8 +54,8 @@ def test_typed_and_wire_share_one_chain(spark, tmp_path, mode):
 
 def test_job_config_every_field_roundtrips_into_the_job(tmp_path):
     """A JobConfig with every field off its default survives dump ->
-    load -> from_config: the job carries each value (no field is
-    silently dropped or re-defaulted on the way)."""
+    load -> from_config: the job's config is the loaded one (no field
+    is silently dropped or re-defaulted on the way)."""
     cfg = JobConfig(
         job_id="rt",
         input_dir="/in",
@@ -84,6 +84,8 @@ def test_job_config_every_field_roundtrips_into_the_job(tmp_path):
         auto_split_migrate_per_batch=4,
         gtid_list="0-1-100",
         gtid_set="3e11fa47-71ca-11e1-9e33-c80aa9429562:1-9",
+        branch="b",
+        expire_keep_last=5,
         incident_policy="record",
         transform="tests.test_apply_pipeline:_identity",
     )
@@ -98,27 +100,10 @@ def test_job_config_every_field_roundtrips_into_the_job(tmp_path):
     loaded = JobConfig.load(p)
     assert loaded == cfg
     job = CdcApplyJob.from_config(None, loaded)
-
-    renamed = {
-        "table_path": "table_path",
-        "on_invalid_position": "reset_policy",
-    }
-    derived = {
-        "reset_policy": "earliest",
-        "allowlist": [("s", "t")],
-        "transform": _identity,
-    }
-    for f in dataclasses.fields(JobConfig):
-        if f.name in ("job_id", "expectations", "table_expectations"):
-            continue
-        attr = renamed.get(f.name, f.name)
-        want = derived.get(attr, getattr(cfg, f.name))
-        assert getattr(job, attr) == want, f.name
-    assert [e.name for e in job.expectations] == ["nn"]
-    assert [e.name for e in job.table_expectations] == ["u"]
-    # constructor keywords override the config's
-    over = CdcApplyJob.from_config(None, loaded, n_buckets=11, branch="b")
-    assert (over.n_buckets, over.branch) == (11, "b")
+    assert job.cfg == loaded
+    # field keywords override the config's
+    over = CdcApplyJob.from_config(None, loaded, n_buckets=11, branch="c")
+    assert (over.cfg.n_buckets, over.cfg.branch) == (11, "c")
 
 
 def _identity(df):
@@ -247,7 +232,7 @@ def test_lineage_record_carries_every_apply_stats_field(wire_run):
     import os
 
     job, stats = wire_run
-    with open(os.path.join(job.table_path, "lineage.jsonl")) as f:
+    with open(os.path.join(job.cfg.table_path, "lineage.jsonl")) as f:
         recs = [json.loads(line) for line in f]
     assert [r["batch_id"] for r in recs] == [s.batch_id for s in stats if not s.skipped]
     names = {f.name for f in dataclasses.fields(ApplyStats)}

@@ -1,5 +1,8 @@
 """Lineage/metrics surface (M1-M5) and golden dump."""
 
+import json
+import os
+
 from mysql_tracker_spark.debug import entry_print, golden_dump
 from mysql_tracker_spark.metrics import (
     backlog,
@@ -22,6 +25,9 @@ def test_lineage_and_metrics(spark, tmp_path):
 
     ln = lineage_df(spark, tbl)
     assert ln.count() == len(stats) == 3
+    # the reader schema is every key the writer emits
+    with open(os.path.join(tbl, "lineage.jsonl")) as f:
+        assert set(ln.columns) == set(json.loads(f.readline()))
     row = throughput_summary(spark, tbl).collect()[0]
     assert row.events_total == sum(s.rows_in for s in stats)
     assert row.events_per_sec > 0

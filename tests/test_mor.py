@@ -422,8 +422,8 @@ def test_compact_sort_by_roundtrips_through_config(spark, tmp_path):
     p = str(tmp_path / "cfg.json")
     cfg.dump(p)
     job = CdcApplyJob.from_config(spark, JobConfig.load(p))
-    assert job.compact_sort_by == "ts"
-    assert job.compact_files_per_bucket == 4
+    assert job.cfg.compact_sort_by == "ts"
+    assert job.cfg.compact_files_per_bucket == 4
 
 
 def test_compact_zorder_prunes_on_both_columns(spark, tmp_path):

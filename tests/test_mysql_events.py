@@ -5,6 +5,7 @@ a control-event-laden MySQL wire stream through the full apply
 (reference enumeration mysql/dbsync/LogEvent.java:115-188, decoder
 dispatch LogDecoder.java:94-491)."""
 
+import dataclasses
 import struct
 import uuid as _uuid
 
@@ -458,16 +459,19 @@ def test_wire_gtid_carry_not_poisoned_by_failed_batch(spark, tmp_path):
     assert committed  # the spanning fenced group is carried
 
     # make batch 1 fail AFTER the fence ran (staged-table audit abort)
-    job.table_expectations = [
-        quality.predicate("always_fail", F.lit(False), blocking=True)
-    ]
+    job.cfg = dataclasses.replace(
+        job.cfg,
+        table_expectations=[
+            quality.predicate("always_fail", F.lit(False), blocking=True)
+        ],
+    )
     with pytest.raises(Exception, match="always_fail|expectation|audit"):
         job.run()
     assert str(job._gtid_fence_carry()) == committed, (
         "failed batch poisoned the in-memory carry cache"
     )
 
-    job.table_expectations = []
+    job.cfg = dataclasses.replace(job.cfg, table_expectations=[])
     job.run()
     keep = ev[(ev["xid"].isna()) | (ev["xid"].astype("Int64") > mid)]
     got = normalize(job.table.read(spark).toPandas())
@@ -520,7 +524,7 @@ def test_gtid_set_parser_contract():
     # empty set normalizes to None at the real constructor (the
     # constructor needs only plain args — no SparkSession touched)
     j = CdcApplyJob(None, "/tmp/x", "/tmp/y", gtid_set="")
-    assert j.gtid_set is None and not j._gtid_text_inside(f"{u}:1")
+    assert j.cfg.gtid_set is None and not j._gtid_text_inside(f"{u}:1")
     with pytest.raises(ValueError):
         CdcApplyJob(None, "/tmp/x", "/tmp/y", gtid_set="garbage")
     j2 = CdcApplyJob(None, "/tmp/x", "/tmp/y", gtid_set=f"{u}:1-3")

@@ -160,12 +160,12 @@ def test_from_config_invalid_position_policy_rejected(spark, tmp_path):
     disable the errno-1236 validation the operator configured."""
     from mysql_tracker_spark.config import JobConfig
 
-    cfg = JobConfig(
-        input_dir=str(tmp_path / "in"),
-        table_path=str(tmp_path / "t"),
-        on_invalid_position="reset-earliest",  # typo: underscore form
-    )
     with pytest.raises(ValueError, match="on_invalid_position"):
+        cfg = JobConfig(
+            input_dir=str(tmp_path / "in"),
+            table_path=str(tmp_path / "t"),
+            on_invalid_position="reset-earliest",  # typo: underscore form
+        )
         CdcApplyJob.from_config(spark, cfg)
 
 
