@@ -13,8 +13,9 @@ config is swapped in (``job.cfg = dataclasses.replace(job.cfg, ...)``).
 from __future__ import annotations
 
 import json
+import os
 import re
-from dataclasses import asdict, dataclass, field
+from dataclasses import asdict, dataclass, field, fields
 from typing import Callable
 
 
@@ -192,8 +193,30 @@ class JobConfig:
         return cls(**raw)
 
     def dump(self, path: str) -> None:
-        with open(path, "w") as f:
-            json.dump(asdict(self), f, indent=2)
+        """Write the config as the JSON :meth:`load` reads back, through
+        a temp file and ``os.replace``. A field holding what JSON cannot
+        carry (a callable ``transform``, a built ``quality.Expect``)
+        raises ``ValueError`` naming it before anything is written:
+        give its dotted path or spec dict instead."""
+        for f in fields(self):
+            if not _plain(getattr(self, f.name)):
+                raise ValueError(
+                    f"JobConfig.{f.name} holds a value JSON cannot carry; "
+                    "give a dotted path / spec dict to dump it"
+                )
+        tmp = f"{path}.tmp"
+        with open(tmp, "w") as fh:
+            json.dump(asdict(self), fh, indent=2)
+        os.replace(tmp, path)
+
+
+def _plain(v) -> bool:
+    """True iff ``v`` is built only of JSON's types."""
+    if isinstance(v, (list, tuple)):
+        return all(_plain(x) for x in v)
+    if isinstance(v, dict):
+        return all(isinstance(k, str) and _plain(x) for k, x in v.items())
+    return v is None or isinstance(v, (str, int, float, bool))
 
 
 def _resolve_transform(spec):

@@ -11,8 +11,9 @@ atomically after Xid batches (:601-609). Here:
   sequencer (``operators.parse.global_sequence`` — no single-task
   sort), offset by the committed ``next_seq`` so it is monotone across
   batches and replays;
-* the sink is a directory of parquet files governed by an
-  O_EXCL-committed snapshot manifest listing the files plus
+* the sink is a directory of parquet files governed by a snapshot
+  manifest chain (:mod:`.lakestore.snapshots`, the same atomic
+  torn-write-proof commit as the keyed table) listing the files plus
   ``(offset_file, offset_pos, next_seq)`` — watermark and data commit
   ATOMICALLY (same exactly-once upgrade the keyed lakestore makes over
   the reference's confirm-after-send window);
@@ -25,7 +26,6 @@ rewrite, no read of existing data; the manifest is one small JSON.
 
 from __future__ import annotations
 
-import json
 import os
 import time
 import uuid
@@ -33,6 +33,7 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from .lakestore import snapshots
 from .operators.parse import global_sequence
 from .schema import CHANGE_EVENT_SCHEMA, LOG_ORDER
 
@@ -127,38 +128,19 @@ class EventLogJob:
 
     # ----------------------------------------------------------- snapshots
 
-    def _current_version(self) -> int | None:
-        if not os.path.isdir(self.snap_dir):
-            return None
-        vs = [
-            int(f[1:-5])
-            for f in os.listdir(self.snap_dir)
-            if f.startswith("v") and f.endswith(".json")
-        ]
-        return max(vs) if vs else None
-
     def manifest(self) -> dict:
-        v = self._current_version()
+        v = snapshots.latest(self.snap_dir)
         if v is None:
             return {
                 "version": 0,
                 "files": [],
                 "properties": {"next_seq": "0"},
             }
-        with open(os.path.join(self.snap_dir, f"v{v:08d}.json")) as f:
-            return json.load(f)
+        return snapshots.load(self.snap_dir, v)
 
     def _commit(self, manifest: dict) -> int:
         os.makedirs(self.snap_dir, exist_ok=True)
-        v = manifest["version"]
-        target = os.path.join(self.snap_dir, f"v{v:08d}.json")
-        fd = os.open(target, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-        try:
-            os.write(fd, json.dumps(manifest, separators=(",", ":")).encode())
-            os.fsync(fd)
-        finally:
-            os.close(fd)
-        return v
+        return snapshots.commit(self.snap_dir, manifest)
 
     def watermark(self) -> tuple[str | None, int | None, int]:
         p = self.manifest()["properties"]
@@ -169,30 +151,11 @@ class EventLogJob:
     # --------------------------------------------------------------- input
 
     def batch_files(self) -> list[list[str]]:
-        """Pending input files grouped into micro-batches — same
-        authority rules as the keyed apply job: an input-side
-        ``_batches.json`` manifest, when present, governs membership
-        and order (object-store listings are slow/unordered/racy at
-        scale); otherwise a sorted directory listing (file names are
-        offset-ordered by construction)."""
-        from .runner import CdcApplyJob
+        """Pending input files grouped into micro-batches, by the keyed
+        apply job's rules (:func:`runner.batch_files`)."""
+        from .runner import batch_files
 
-        man = os.path.join(self.input_dir, CdcApplyJob.INPUT_MANIFEST)
-        ext = {"jsonl": ".jsonl", "typed": ".parquet", "wire": ".parquet"}[
-            self.source_format
-        ]
-        if os.path.exists(man):
-            with open(man) as f:
-                names = json.load(f)["files"]
-            files = [os.path.join(self.input_dir, p) for p in names]
-        else:
-            files = sorted(
-                os.path.join(self.input_dir, f)
-                for f in os.listdir(self.input_dir)
-                if f.endswith(ext)
-            )
-        k = self.files_per_batch
-        return [files[i : i + k] for i in range(0, len(files), k)]
+        return batch_files(self.input_dir, self.source_format, self.files_per_batch)
 
     def _read_batch(self, paths: list[str]) -> DataFrame:
         if self.source_format == "wire":
@@ -208,19 +171,8 @@ class EventLogJob:
     # ----------------------------------------------------------------- run
 
     def run(self, max_batches: int | None = None) -> list[EventLogStats]:
-        out = []
-        for i, group in enumerate(self.batch_files()):
-            if max_batches is not None and len(out) >= max_batches:
-                break
-            st = self.apply_batch(i, group)
-            if (
-                self.compact_threshold is not None
-                and not st.skipped
-                and self.compact(max_segments=self.compact_threshold) is not None
-            ):
-                st.extra["compacted"] = True
-            out.append(st)
-        return out
+        groups = self.batch_files()[:max_batches]
+        return [self.apply_batch(i, group) for i, group in enumerate(groups)]
 
     def apply_batch(self, batch_id: int, paths: list[str]) -> EventLogStats:
         from .operators.parse import after_watermark
@@ -317,6 +269,13 @@ class EventLogJob:
         self._commit(new)
         stats.rows_appended = appended
         stats.seq_start, stats.seq_end = next_seq, next_seq + appended - 1
+        # auto-compaction rides the batch (as the keyed job's does), so
+        # the replay loop and the streaming drain share it
+        if (
+            self.compact_threshold is not None
+            and self.compact(max_segments=self.compact_threshold) is not None
+        ):
+            stats.extra["compacted"] = True
         stats.wall_ms = int((time.time() - t0) * 1000)
         return stats
 
@@ -376,8 +335,7 @@ class EventLogJob:
                 "ts_ms": int(time.time() * 1000),
             },
         }
-        self._commit(new)
-        return new["version"]
+        return self._commit(new)
 
     # ------------------------------------------------------------ retention
 
@@ -392,58 +350,33 @@ class EventLogJob:
         superseded *copies*, not data). Returns expired version count."""
         import shutil
 
-        if not os.path.isdir(self.snap_dir):
+        # reap exactly (dropped - surviving) refs: a directory walk
+        # would race a concurrent appender's written-but-not-yet-
+        # committed segment dir (it appears in no manifest yet and must
+        # NOT be treated as garbage)
+        dropped = snapshots.expire(self.snap_dir, keep_last)
+        if not dropped:
             return 0
-        versions = sorted(
-            int(f[1:-5])
-            for f in os.listdir(self.snap_dir)
-            if f.startswith("v") and f.endswith(".json")
-        )
-        to_drop = versions[:-keep_last] if keep_last > 0 else []
-        if not to_drop:
-            return 0
-        # collect the DROPPED manifests' segment refs BEFORE deleting
-        # them, and reap exactly (dropped - surviving): a directory
-        # walk here would race a concurrent appender's written-but-
-        # not-yet-committed segment dir (it appears in no manifest yet
-        # and must NOT be treated as garbage)
-        dropped_refs: set[str] = set()
-        for v in to_drop:
-            with open(os.path.join(self.snap_dir, f"v{v:08d}.json")) as f:
-                dropped_refs.update(json.load(f)["files"])
-        for v in to_drop:
-            os.remove(os.path.join(self.snap_dir, f"v{v:08d}.json"))
-        live: set[str] = set()
-        for fn in os.listdir(self.snap_dir):
-            if fn.startswith("v") and fn.endswith(".json"):
-                with open(os.path.join(self.snap_dir, fn)) as f:
-                    live.update(json.load(f)["files"])
+        dropped_refs = {f for m in dropped for f in m["files"]}
+        live = {f for m in snapshots.docs(self.snap_dir) for f in m["files"]}
         for sub in dropped_refs - live:
             shutil.rmtree(os.path.join(self.data_dir, sub), ignore_errors=True)
-        return len(to_drop)
+        return len(dropped)
 
     def gc_orphans(self, min_age_s: float = 600.0) -> int:
-        """Delete segment dirs referenced by NO surviving manifest —
-        crash debris cleanup. ``min_age_s`` guards the race with a
-        concurrent appender whose segment dir exists but whose commit
-        has not landed yet: only dirs untouched for that long are
-        reaped (an in-flight write is always younger; real debris is
-        not)."""
+        """Delete segment dirs referenced by NO surviving manifest, and
+        commit temps a crash stranded in ``snapshots/`` — crash debris
+        cleanup. ``min_age_s`` guards the race with a concurrent
+        appender whose segment dir or temp exists but whose commit has
+        not landed yet: only debris untouched for that long is reaped
+        (an in-flight write is always younger; real debris is not).
+        Returns the number of dirs and temps removed."""
         import shutil
 
-        live: set[str] = set()
-        if not os.path.isdir(self.snap_dir):
-            # data-dir debris can exist before the FIRST commit ever
-            # lands (a killed first append): nothing is live yet, and
-            # the listing below must not crash the cleanup
-            os.makedirs(self.snap_dir, exist_ok=True)
-        for fn in os.listdir(self.snap_dir):
-            if fn.startswith("v") and fn.endswith(".json"):
-                with open(os.path.join(self.snap_dir, fn)) as f:
-                    live.update(json.load(f)["files"])
-        removed = 0
+        live = {f for m in snapshots.docs(self.snap_dir) for f in m["files"]}
+        removed = snapshots.reap_temps(self.snap_dir, min_age_s)
         if not os.path.isdir(self.data_dir):
-            return 0
+            return removed
         now = time.time()
         for sub in os.listdir(self.data_dir):
             p = os.path.join(self.data_dir, sub)

@@ -68,23 +68,9 @@ from pyspark.sql.datasource import (
 )
 
 from .spark_hash import pmod_bucket_array
-from .table import _current_name, _source_map
+from .table import LakeTable, _current_name, _source_map
 
 _TOMBSTONE = "__delete"
-
-
-def _manifest(path: str, version: int) -> dict:
-    with open(os.path.join(path, "snapshots", f"v{version:08d}.json")) as f:
-        return json.load(f)
-
-
-def _current_version(path: str) -> int:
-    snap = os.path.join(path, "snapshots")
-    return max(
-        int(f[1:-5])
-        for f in os.listdir(snap)
-        if f.startswith("v") and f.endswith(".json")
-    )
 
 
 def _bucket_state(path: str, entries: list[dict], meta: dict):
@@ -197,18 +183,19 @@ class LakeChangesStreamReader(DataSourceStreamReader):
         v = (
             self.start_version
             if self.start_version is not None
-            else _current_version(self.path)
+            else LakeTable(self.path).current_version()
         )
         return {"version": v}
 
     def latestOffset(self) -> dict:
-        return {"version": _current_version(self.path)}
+        return {"version": LakeTable(self.path).current_version()}
 
     def partitions(self, start: dict, end: dict):
         v0, v1 = start["version"], end["version"]
         if v1 <= v0:
             return []
-        mf, mt = _manifest(self.path, v0), _manifest(self.path, v1)
+        t = LakeTable(self.path)
+        mf, mt = t.manifest(v0), t.manifest(v1)
         sch = json.loads(self._schema_json)
         target_fields = [f for f in sch["fields"] if f["name"] != "op"]
         bucket_by = mt["bucket_by"]
@@ -426,8 +413,7 @@ class LakeChangesDataSource(DataSource):
         return "lakestore_changes"
 
     def schema(self) -> str:
-        path = self.options["path"]
-        m = _manifest(path, _current_version(path))
+        m = LakeTable(self.options["path"]).manifest()
         tbl = T.StructType.fromJson(m["schemas"][str(m["schema_id"])])
         return T.StructType(
             [T.StructField("op", T.StringType())] + list(tbl.fields)

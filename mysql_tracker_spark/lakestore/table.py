@@ -8,9 +8,9 @@ the CDC engine needs, from scratch, with public APIs only:
 
 * **snapshots** — JSON manifests ``snapshots/v{n}.json`` listing the
   table's parquet files per hash bucket plus arbitrary string
-  properties; commit = exclusive-create (``O_EXCL``) of the next
-  version file, which is atomic on POSIX → optimistic concurrency,
-  readers always see a complete snapshot.
+  properties; commit = exclusive, torn-write-proof create of the next
+  version file (:mod:`.snapshots`, the chain format's one owner) →
+  optimistic concurrency, readers always see a complete snapshot.
 * **hash bucketing** — rows are bucketed by Spark's Murmur3
   ``hash(key) % B`` (see ``_bucket_expr`` for why that exact
   function). The hash function is STAMPED in the manifest
@@ -50,6 +50,7 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
+from . import snapshots
 from .spark_hash import BUCKET_KEY_TYPES, pmod_bucket
 
 _BUCKET_COL = "__bucket"
@@ -388,44 +389,15 @@ def _bucket_rows(new_files: dict[int, list[dict]]) -> dict[str, int]:
     }
 
 
+def _refs(manifests) -> set[str]:
+    """Data files referenced by the given snapshot manifests."""
+    return {
+        fe["path"] for m in manifests for files in m["buckets"].values() for fe in files
+    }
+
+
 def _has_delta(entries: list[dict]) -> bool:
     return any(fe.get("delta") for fe in entries)
-
-
-def _write_file_atomic(path: str, payload: bytes) -> None:
-    """Torn-write-proof exclusive file create: the payload is FULLY
-    written (os.write may return short — loop until drained) and
-    fsynced to a sideways dot-temp, then hard-LINKed to the target name
-    and the directory entry fsynced. link(2) is atomic and raises
-    ``FileExistsError`` when a concurrent writer claimed the name (the
-    same loser-detection contract as ``O_CREAT|O_EXCL``), but unlike
-    create-then-write a crash at ANY instruction leaves either no
-    target file or a COMPLETE one — never a truncated JSON squatting on
-    a name every subsequent reader would choke on. Crash-stranded
-    temps (dot-prefixed, invisible to name scans) are reclaimed by
-    :meth:`LakeTable.gc_orphans`."""
-    d = os.path.dirname(path)
-    tmp = os.path.join(
-        d, f".tmp-{os.path.basename(path)}-{uuid.uuid4().hex[:12]}"
-    )
-    fd = os.open(tmp, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-    try:
-        mv = memoryview(payload)
-        while mv:
-            written = os.write(fd, mv)
-            mv = mv[written:]
-        os.fsync(fd)
-    finally:
-        os.close(fd)
-    try:
-        os.link(tmp, path)  # atomic exclusive claim of the name
-    finally:
-        os.unlink(tmp)
-    dfd = os.open(d, os.O_RDONLY)
-    try:
-        os.fsync(dfd)
-    finally:
-        os.close(dfd)
 
 
 def _residual_key(fe: dict) -> tuple | None:
@@ -593,52 +565,26 @@ class LakeTable:
 
     @staticmethod
     def exists(path: str) -> bool:
-        """True iff the path holds at least one COMMITTED snapshot —
-        the same ``v*.json`` filter as :meth:`current_version`, so a
-        crash-stranded ``.tmp-*`` commit temp never makes exists()
+        """True iff the path holds at least one COMMITTED snapshot, so
+        a crash-stranded ``.tmp-*`` commit temp never makes exists()
         claim a table that :meth:`load` would then fail to open."""
-        snap = os.path.join(path, "snapshots")
-        return os.path.isdir(snap) and any(
-            f.startswith("v") and f.endswith(".json")
-            for f in os.listdir(snap)
-        )
+        return bool(snapshots.versions(os.path.join(path, "snapshots")))
 
     # ------------------------------------------------------------- snapshots
 
     def current_version(self) -> int | None:
-        if not os.path.isdir(self.snap_dir):
-            return None
-        versions = [
-            int(f[1:-5]) for f in os.listdir(self.snap_dir) if f.startswith("v") and f.endswith(".json")
-        ]
-        return max(versions) if versions else None
+        return snapshots.latest(self.snap_dir)
 
     def manifest(self, version: int | None = None) -> dict:
         v = version if version is not None else self.current_version()
-        with open(os.path.join(self.snap_dir, f"v{v:08d}.json")) as f:
-            return json.load(f)
+        return snapshots.load(self.snap_dir, v)
 
     def _commit(self, manifest: dict) -> int:
-        """Atomic optimistic commit, torn-write-proof: the manifest is
-        fully written and fsynced to a sideways temp file first, then
-        hard-LINKed to the next version name. link(2) is atomic and
-        fails with EEXIST when a concurrent writer claimed the version
-        (same loser-detection contract as the previous O_EXCL create —
-        callers catch ``FileExistsError``), but unlike create-then-
-        write a crash at ANY instruction leaves either no v-file or a
-        COMPLETE one — never a truncated manifest squatting on the
-        table head that every subsequent reader would choke on.
-        Crash-stranded temps (dot-prefixed, invisible to the version
-        scan) are reclaimed by :meth:`gc_orphans`."""
-        v = manifest["version"]
-        target = os.path.join(self.snap_dir, f"v{v:08d}.json")
-        payload = json.dumps(manifest, indent=None, separators=(",", ":"))
-        # the directory fsync also persists the entry itself: without
-        # it a power loss after return could roll back a commit the
-        # caller already acted on (e.g. publish_staged deletes its
-        # stage file next)
-        _write_file_atomic(target, payload.encode())
-        return v
+        """Atomic optimistic commit of the next version
+        (:func:`snapshots.commit`): raises ``FileExistsError`` when a
+        concurrent writer claimed the version; a crash leaves either no
+        v-file or a complete one."""
+        return snapshots.commit(self.snap_dir, manifest)
 
     def properties(self, version: int | None = None) -> dict:
         return self.manifest(version)["properties"]
@@ -902,19 +848,6 @@ class LakeTable:
         m = self.manifest(version)
         return self._read_state(spark, m)
 
-    def _iter_snapshot_manifests(self):
-        """Yield each retained snapshot's manifest dict, oldest first —
-        THE one home of the snapshot-dir iteration idiom (version_at,
-        history, watermark_history all derive from it). Driver-side
-        json reads; a manifest carries the full bucket→file lists, so a
-        full-history walk is O(retained snapshots × manifest size) —
-        keep retention bounded (expire_snapshots) on hot tables."""
-        for fn in sorted(os.listdir(self.snap_dir)):
-            if not (fn.startswith("v") and fn.endswith(".json")):
-                continue
-            with open(os.path.join(self.snap_dir, fn)) as f:
-                yield json.load(f)
-
     def version_at(self, ts) -> int:
         """Largest retained version committed at or before ``ts`` (the
         Iceberg/Delta ``FOR TIMESTAMP AS OF`` resolution): ``ts`` is a
@@ -932,7 +865,7 @@ class LakeTable:
             probe = int(ts)
         best = None
         last_ts = None
-        for m in self._iter_snapshot_manifests():
+        for m in snapshots.docs(self.snap_dir):
             t = m.get("summary", {}).get("ts_ms", last_ts)
             last_ts = t
             if t is not None and t <= probe:
@@ -956,12 +889,12 @@ class LakeTable:
         txn_end_pos}`` (positions ``None`` where the snapshot carries no
         checkpoint — the create commit, or a C5-cleared checkpoint).
         Driver-side manifest reads only (cost note on
-        :meth:`_iter_snapshot_manifests`); the cross-table
+        :func:`snapshots.docs`); the cross-table
         consistent-read fence
         (:func:`mysql_tracker_spark.runner.consistent_read`) is
         derived from this."""
         out = []
-        for m in self._iter_snapshot_manifests():
+        for m in snapshots.docs(self.snap_dir):
             p = m.get("properties", {})
             out.append(
                 {
@@ -1801,27 +1734,7 @@ class LakeTable:
         new_files = self._write_buckets(
             ch, schema, extra_cols=[_TOMBSTONE], base_manifest=m
         )
-        if stage_as is not None:
-            staged = {
-                "parent": m["version"],
-                "wap": {
-                    "id": stage_as,
-                    "mode": "delta",
-                    "n_buckets": nb,
-                    "delta_files": {str(b): fs for b, fs in new_files.items()},
-                    "properties": dict(properties or {}),
-                },
-                "summary": {
-                    "operation": "merge-mor",
-                    "wap_id": stage_as,
-                    "staged_ts_ms": int(time.time() * 1000),
-                    "affected_buckets": len(new_files),
-                    "bucket_rows": _bucket_rows(new_files),
-                },
-            }
-            self._stage_write(staged, stage_as)
-            return None, staged["summary"]
-        return self._commit_delta(new_files, properties, base_n_buckets=nb)
+        return self._stage_or_commit_delta(m, nb, new_files, properties, stage_as)
 
     def adopt_delta(
         self,
@@ -1863,27 +1776,40 @@ class LakeTable:
         new_files = self._collect_staged_entries(
             dest_dir, os.path.join("data", dest), m["schema_id"], stat_cols
         )
-        if stage_as is not None:
-            staged = {
-                "parent": m["version"],
-                "wap": {
-                    "id": stage_as,
-                    "mode": "delta",
-                    "n_buckets": nb,
-                    "delta_files": {str(b): fs for b, fs in new_files.items()},
-                    "properties": dict(properties or {}),
-                },
-                "summary": {
-                    "operation": "merge-mor",
-                    "wap_id": stage_as,
-                    "staged_ts_ms": int(time.time() * 1000),
-                    "affected_buckets": len(new_files),
-                    "bucket_rows": _bucket_rows(new_files),
-                },
-            }
-            self._stage_write(staged, stage_as)
-            return None, staged["summary"]
-        return self._commit_delta(new_files, properties, base_n_buckets=nb)
+        return self._stage_or_commit_delta(m, nb, new_files, properties, stage_as)
+
+    def _stage_or_commit_delta(
+        self,
+        m: dict,
+        nb: int,
+        new_files: dict[int, list[dict]],
+        properties: dict[str, str] | None,
+        stage_as: str | None,
+    ) -> tuple[int | None, dict]:
+        """Commit delta entries written under ``m``'s head and ``nb``
+        buckets (:meth:`_commit_delta`), or, with ``stage_as``, stage
+        them as a write-audit-publish delta bound to that parent."""
+        if stage_as is None:
+            return self._commit_delta(new_files, properties, base_n_buckets=nb)
+        staged = {
+            "parent": m["version"],
+            "wap": {
+                "id": stage_as,
+                "mode": "delta",
+                "n_buckets": nb,
+                "delta_files": {str(b): fs for b, fs in new_files.items()},
+                "properties": dict(properties or {}),
+            },
+            "summary": {
+                "operation": "merge-mor",
+                "wap_id": stage_as,
+                "staged_ts_ms": int(time.time() * 1000),
+                "affected_buckets": len(new_files),
+                "bucket_rows": _bucket_rows(new_files),
+            },
+        }
+        self._stage_write(staged, stage_as)
+        return None, staged["summary"]
 
     def _commit_delta(
         self,
@@ -2390,7 +2316,7 @@ class LakeTable:
         # truncated tag (tags() would raise, breaking expiry) or lose
         # the pin a caller was just promised (the snapshot would lose
         # its expiry protection)
-        _write_file_atomic(os.path.join(tags_dir, f"{name}.json"), payload.encode())
+        snapshots.write_file_atomic(os.path.join(tags_dir, f"{name}.json"), payload.encode())
         return v
 
     def tags(self) -> dict[str, int]:
@@ -2436,7 +2362,7 @@ class LakeTable:
         path = self._staged_path(wap_id)
         os.makedirs(os.path.dirname(path), exist_ok=True)
         payload = json.dumps(manifest, indent=None, separators=(",", ":"))
-        _write_file_atomic(path, payload.encode())
+        snapshots.write_file_atomic(path, payload.encode())
 
     def staged(self) -> list[str]:
         """Ids of pending staged snapshots."""
@@ -2468,14 +2394,7 @@ class LakeTable:
 
     def _committed_refs(self) -> set[str]:
         """Data files referenced by any retained committed snapshot."""
-        out: set[str] = set()
-        for fn in os.listdir(self.snap_dir):
-            if fn.startswith("v") and fn.endswith(".json"):
-                with open(os.path.join(self.snap_dir, fn)) as f:
-                    man = json.load(f)
-                for files in man["buckets"].values():
-                    out.update(fe["path"] for fe in files)
-        return out
+        return _refs(snapshots.docs(self.snap_dir))
 
     def read_staged(self, spark: SparkSession, wap_id: str) -> DataFrame:
         """The table state a staged snapshot WOULD produce — the audit
@@ -2586,10 +2505,7 @@ class LakeTable:
         return sorted(
             n for n in os.listdir(d)
             if os.path.isdir(os.path.join(d, n))
-            and any(
-                f.startswith("v") and f.endswith(".json")
-                for f in os.listdir(os.path.join(d, n))
-            )
+            and snapshots.versions(os.path.join(d, n))
         )
 
     def branch(self, name: str, from_version: int | None = None) -> "_BranchTable":
@@ -2614,10 +2530,7 @@ class LakeTable:
             # one without is debris from a crashed create — adopt it
             # (the seed commit below is the create-once race arbiter:
             # two adopters collide on the O_EXCL seed file)
-            if any(
-                f.startswith("v") and f.endswith(".json")
-                for f in os.listdir(bdir)
-            ):
+            if snapshots.versions(bdir):
                 raise ValueError(f"branch {name!r} already exists") from None
         br = _BranchTable(self, name)
         # seed: a verbatim copy of the fork manifest — the branch
@@ -2775,7 +2688,7 @@ class LakeTable:
         it carried — the audit surface for "which batch produced which
         snapshot". Driver-side manifest reads only; no data touched."""
         rows = []
-        for m in self._iter_snapshot_manifests():
+        for m in snapshots.docs(self.snap_dir):
             s, p = m.get("summary", {}), m.get("properties", {})
             rows.append(
                 (
@@ -3029,28 +2942,12 @@ class LakeTable:
         bounded to the retained window; the current snapshot (and its
         replay watermark properties) is always kept. Returns the number
         of expired snapshot versions."""
-        versions = sorted(
-            int(f[1:-5])
-            for f in os.listdir(self.snap_dir)
-            if f.startswith("v") and f.endswith(".json")
+        # tagged snapshots survive expiry
+        dropped = snapshots.expire(
+            self.snap_dir, keep_last, protected=set(self.tags().values())
         )
-        protected = set(self.tags().values())
-        to_drop = [
-            v for v in (versions[:-keep_last] if keep_last > 0 else [])
-            if v not in protected  # tagged snapshots survive expiry
-        ]
-        if not to_drop:
+        if not dropped:
             return 0
-        # reap exactly (dropped manifests' refs - surviving refs),
-        # collected BEFORE deletion: a directory walk here would race a
-        # concurrent writer's staged-but-not-yet-committed files (they
-        # appear in no manifest yet and must NOT be treated as garbage)
-        dropped_refs: set[str] = set()
-        for v in to_drop:
-            for files in self.manifest(v)["buckets"].values():
-                dropped_refs.update(fe["path"] for fe in files)
-        for v in to_drop:
-            os.remove(os.path.join(self.snap_dir, f"v{v:08d}.json"))
         # pending WAP stages protect their refs too (a staged COW
         # manifest carries its parent's untouched buckets forward),
         # and so do live branches — a branch forked at an expired
@@ -3058,12 +2955,12 @@ class LakeTable:
         live: set[str] = (
             self._committed_refs() | self._staged_refs() | self._branch_refs()
         )
-        for rel in dropped_refs - live:
+        for rel in _refs(dropped) - live:
             try:
                 os.remove(os.path.join(self.path, rel))
             except FileNotFoundError:
                 pass
-        return len(to_drop)
+        return len(dropped)
 
     def gc_orphans(self, min_age_s: float = 600.0) -> int:
         """Delete data files not referenced by any snapshot — crash
@@ -3088,10 +2985,8 @@ class LakeTable:
                 ):
                     os.remove(full)
                     removed += 1
-        # crash-stranded atomic-write temps (written-but-never-linked,
-        # or the unlink after a successful/lost link never ran) — same
-        # age guard covers an in-flight writer. Snapshots, WAP stages
-        # and tags all write through _write_file_atomic.
+        # crash-stranded atomic-write temps: snapshots, WAP stages and
+        # tags all write through snapshots.write_file_atomic
         branch_dirs = [
             os.path.join(self._branches_dir(), n) for n in self.branch_names()
         ]
@@ -3102,15 +2997,7 @@ class LakeTable:
             *branch_dirs,
             *[os.path.join(b, "staged") for b in branch_dirs],
         ):
-            if not os.path.isdir(d):
-                continue
-            for fn in os.listdir(d):
-                if not fn.startswith(".tmp-"):
-                    continue
-                full = os.path.join(d, fn)
-                if now - os.path.getmtime(full) >= min_age_s:
-                    os.remove(full)
-                    removed += 1
+            removed += snapshots.reap_temps(d, min_age_s)
         return removed
 
 
@@ -3136,12 +3023,7 @@ class _BranchTable(LakeTable):
     def fork_version(self) -> int:
         """The main version this branch forked from — the seed copy is
         the chain's minimum version by construction."""
-        versions = [
-            int(f[1:-5])
-            for f in os.listdir(self.snap_dir)
-            if f.startswith("v") and f.endswith(".json")
-        ]
-        return min(versions)
+        return snapshots.versions(self.snap_dir)[0]
 
     def _main_only(self, op: str):
         raise RuntimeError(

@@ -46,9 +46,52 @@ from .operators.parse import after_watermark, typed_from_map
 from .schema import CHANGE_EVENT_SCHEMA, LOG_ORDER, TRANSCRIPTS_BASE_SCHEMA
 
 
+INPUT_MANIFEST = "_batches.json"
+
+
+def batch_files(
+    input_dir: str, source_format: str, files_per_batch: int
+) -> list[list[str]]:
+    """Pending input files in log order, grouped into micro-batches of
+    ``files_per_batch`` — the one listing both the keyed apply job and
+    the event log consume.
+
+    If the input dir carries a ``_batches.json`` manifest (written
+    by the producer via :func:`write_input_manifest` or an upstream
+    committer), it is the AUTHORITY: membership and order come from
+    it, and files not (yet) referenced are invisible — the input-
+    side analogue of Iceberg manifests. At real scale this is the
+    right interface: object-store directory listings are slow,
+    unordered, and racy against still-arriving files, while a
+    manifest is one small read and a producer-controlled commit
+    point. Without a manifest, falls back to a sorted local
+    directory listing (file names are offset-ordered by
+    construction). Either way only files of ``source_format``'s
+    extension are batches."""
+    man = os.path.join(input_dir, INPUT_MANIFEST)
+    ext = ".jsonl" if source_format == "jsonl" else ".parquet"
+    if os.path.exists(man):
+        with open(man) as f:
+            names = json.load(f)["files"]
+        # the manifest may span formats (write_input_manifest(
+        # files=None) snapshots both batch extensions so a mixed
+        # producer dir round-trips); a job consumes only its own — a
+        # foreign entry would crash the parquet reader on jsonl or
+        # silently null out parquet under the json reader
+        files = [os.path.join(input_dir, p) for p in names if p.endswith(ext)]
+    else:
+        files = sorted(
+            os.path.join(input_dir, f)
+            for f in os.listdir(input_dir)
+            if f.endswith(ext)
+        )
+    n = files_per_batch
+    return [files[i : i + n] for i in range(0, len(files), n)]
+
+
 def write_input_manifest(input_dir: str, files: list[str] | None = None) -> str:
     """Commit an input manifest (``_batches.json``) naming the files —
-    in log order — that :meth:`CdcApplyJob.batch_files` may consume.
+    in log order — that :func:`batch_files` may consume.
     ``files=None`` snapshots the current ``*.parquet`` listing. The
     write is atomic (temp + rename), so a producer can extend the
     manifest while a replay job runs: files beyond the manifest stay
@@ -64,7 +107,7 @@ def write_input_manifest(input_dir: str, files: list[str] | None = None) -> str:
             if f.endswith((".parquet", ".jsonl"))
         )
     names = [os.path.basename(f) for f in files]
-    target = os.path.join(input_dir, CdcApplyJob.INPUT_MANIFEST)
+    target = os.path.join(input_dir, INPUT_MANIFEST)
     tmp = target + ".tmp"
     with open(tmp, "w") as f:
         json.dump({"files": names}, f)
@@ -913,45 +956,12 @@ class CdcApplyJob:
                     return True
         return False
 
-    INPUT_MANIFEST = "_batches.json"
-
     def batch_files(self) -> list[list[str]]:
-        """Pending input files in log order, grouped into micro-batches.
-
-        If the input dir carries a ``_batches.json`` manifest (written
-        by the producer via :func:`write_input_manifest` or an upstream
-        committer), it is the AUTHORITY: membership and order come from
-        it, and files not (yet) referenced are invisible — the input-
-        side analogue of Iceberg manifests. At real scale this is the
-        right interface: object-store directory listings are slow,
-        unordered, and racy against still-arriving files, while a
-        manifest is one small read and a producer-controlled commit
-        point. Without a manifest, falls back to a sorted local
-        directory listing (file names are offset-ordered by
-        construction)."""
-        man = os.path.join(self.cfg.input_dir, self.INPUT_MANIFEST)
-        ext = ".jsonl" if self.cfg.source_format == "jsonl" else ".parquet"
-        if os.path.exists(man):
-            with open(man) as f:
-                names = json.load(f)["files"]
-            # the manifest may span formats (write_input_manifest(
-            # files=None) snapshots both batch extensions so a mixed
-            # producer dir round-trips); this job consumes only its own
-            # — a foreign entry would crash the parquet reader on jsonl
-            # or silently null out parquet under the json reader
-            files = [
-                os.path.join(self.cfg.input_dir, p)
-                for p in names
-                if p.endswith(ext)
-            ]
-        else:
-            files = sorted(
-                os.path.join(self.cfg.input_dir, f)
-                for f in os.listdir(self.cfg.input_dir)
-                if f.endswith(ext)
-            )
-        k = self.cfg.files_per_batch
-        return [files[i : i + k] for i in range(0, len(files), k)]
+        """Pending input files in log order, grouped into micro-batches
+        (:func:`batch_files`)."""
+        return batch_files(
+            self.cfg.input_dir, self.cfg.source_format, self.cfg.files_per_batch
+        )
 
     def run(self, max_batches: int | None = None) -> list[ApplyStats]:
         """O1 run loop: apply every pending micro-batch in order, one

@@ -272,15 +272,7 @@ class EventLogStreamJob(_DirDrainStreamJob):
         return self.job.manifest()["properties"].get("input_file_end", "")
 
     def _apply_group(self, batch_id: int, group: list[str]) -> None:
-        st = self.job.apply_batch(batch_id, group)
-        if (
-            self.job.compact_threshold is not None
-            and not st.skipped
-            and self.job.compact(max_segments=self.job.compact_threshold)
-            is not None
-        ):
-            st.extra["compacted"] = True
-        self.stats.append(st)
+        self.stats.append(self.job.apply_batch(batch_id, group))
 
 
 class Heartbeat:

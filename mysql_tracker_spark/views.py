@@ -16,9 +16,11 @@ engine keeps it current from the table's CHANGELOG instead:
 
 ``sync`` is idempotent and crash-safe the same way the table is:
 view data lands in a versioned directory first, then a tiny meta JSON
-is committed with ``O_EXCL`` — the commit IS the rename point; a
-killed sync leaves only an orphan data directory that the next sync
-garbage-collects, and two racing syncs resolve by first-commit-wins.
+is committed to the view's ``meta/`` snapshot chain
+(:mod:`.lakestore.snapshots`, exclusive and torn-write-proof) — the
+commit IS the rename point; a killed sync leaves only an orphan data
+directory that the next sync garbage-collects, and two racing syncs
+resolve by first-commit-wins.
 Re-syncing at an unchanged table version is a no-op (never recomputes),
 so calling ``sync`` after every micro-batch costs one version check
 when nothing changed and one WORKING-SET-sized refresh when something
@@ -39,8 +41,7 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .lakestore import LakeTable
-from .lakestore.table import _write_file_atomic
+from .lakestore import LakeTable, snapshots
 
 
 class MaterializedView:
@@ -66,16 +67,10 @@ class MaterializedView:
 
     def synced_version(self) -> int | None:
         """Table snapshot version the view currently reflects."""
-        vs = [
-            int(f[1:-5])
-            for f in os.listdir(self.meta_dir)
-            if f.startswith("v") and f.endswith(".json")
-        ]
-        return max(vs) if vs else None
+        return snapshots.latest(self.meta_dir)
 
     def _meta(self, version: int) -> dict:
-        with open(os.path.join(self.meta_dir, f"v{version:08d}.json")) as f:
-            return json.load(f)
+        return snapshots.load(self.meta_dir, version)
 
     def read(self, spark: SparkSession, version: int | None = None) -> DataFrame:
         v = version if version is not None else self.synced_version()
@@ -126,7 +121,7 @@ class MaterializedView:
     def _append_lineage(self, rec: dict) -> None:
         """Per-sync lineage row (the view-side twin of the apply job's
         ``lineage.jsonl``): which table versions the sync spanned, what
-        work ran, how long it took. Observability only — the ``O_EXCL``
+        work ran, how long it took. Observability only — the exclusive
         meta commit is the correctness-bearing record."""
         import time
 
@@ -147,9 +142,8 @@ class MaterializedView:
         final = os.path.join(self.view_dir, data_name)
         os.rename(tmp, final)
         meta = {"table_version": cur, "data": data_name, **(extra_meta or {})}
-        target = os.path.join(self.meta_dir, f"v{cur:08d}.json")
         try:
-            _write_file_atomic(target, json.dumps(meta).encode())
+            snapshots.commit(self.meta_dir, meta, cur, separators=None)
         except FileExistsError:
             # a racing sync committed this version first; ours is the orphan
             shutil.rmtree(final, ignore_errors=True)
@@ -165,19 +159,13 @@ class MaterializedView:
 
     def _gc(self) -> None:
         """Drop metas/data beyond keep_last, plus stranded tmp dirs
-        (age-guarded — see TMP_GC_AGE_S)."""
+        and meta commit temps (age-guarded — see TMP_GC_AGE_S)."""
         import time
 
-        vs = sorted(
-            int(f[1:-5])
-            for f in os.listdir(self.meta_dir)
-            if f.startswith("v") and f.endswith(".json")
-        )
-        keep = set(vs[-self.keep_last :])
-        live = {self._meta(v)["data"] for v in keep}
-        for v in vs:
-            if v not in keep:
-                os.unlink(os.path.join(self.meta_dir, f"v{v:08d}.json"))
+        snapshots.expire(self.meta_dir, self.keep_last)
+        snapshots.reap_temps(self.meta_dir, self.TMP_GC_AGE_S)
+        vs = snapshots.versions(self.meta_dir)
+        live = {self._meta(v)["data"] for v in vs}
         now = time.time()
         latest = max(vs) if vs else -1
 
@@ -237,7 +225,7 @@ class BucketedMaterializedView(MaterializedView):
     is therefore derived, not user-supplied: a changed bucket is
     re-bootstrapped from the current table slice, so deletes fall out
     naturally. Crash-safety/first-commit-wins/no-op-at-unchanged-
-    version are inherited (same tmp dir + ``O_EXCL`` meta commit;
+    version are inherited (same tmp dir + exclusive meta commit;
     hardlinks keep old versions readable until GC unlinks their
     names)."""
 

@@ -3,6 +3,7 @@ option checks and its frozenness — all checked without a SparkSession."""
 
 import dataclasses
 import json
+import os
 
 import pytest
 
@@ -94,3 +95,30 @@ def test_job_config_is_frozen_and_keywords_reach_it():
         CdcApplyJob(None, "/in", "/tbl", n_bucket=8)
     # an empty GTID set is no fence
     assert JobConfig(gtid_set="", gtid_list="").gtid_set is None
+
+
+def test_refused_dump_names_the_field_and_writes_nothing(tmp_path):
+    from mysql_tracker_spark import quality
+
+    for cfg, field in (
+        (JobConfig(transform=len), "transform"),
+        (JobConfig(expectations=[quality.not_null("n", "text")]), "expectations"),
+    ):
+        p = tmp_path / "job.json"
+        with pytest.raises(ValueError, match=field):
+            cfg.dump(str(p))
+        assert list(tmp_path.iterdir()) == []
+
+
+def test_spec_config_dump_load_round_trips(tmp_path):
+    cfg = JobConfig(
+        n_buckets=8,
+        write_mode="mor",
+        expectations=[{"name": "t", "kind": "not_null", "col": "text"}],
+        transform="os.path:basename",
+        allowlist=[["chat", "transcripts"]],
+    )
+    p = str(tmp_path / "job.json")
+    cfg.dump(p)
+    assert JobConfig.load(p) == cfg
+    assert os.listdir(tmp_path) == ["job.json"]

@@ -362,3 +362,26 @@ def test_eventlog_streaming_tail_dense_seq_across_restart(spark, tmp_path):
     a = log.select("seq", "file", "pos", "row_idx").orderBy("seq")
     b = batch_job.read().select("seq", "file", "pos", "row_idx").orderBy("seq")
     assert [tuple(r) for r in a.collect()] == [tuple(r) for r in b.collect()]
+
+
+def test_eventlog_batches_only_its_own_format_from_mixed_manifest(tmp_path):
+    """The event log lists its input like the keyed job: an input
+    manifest spanning both extensions yields only the job's own
+    format's files (a jsonl log must not be fed a parquet file). No
+    SparkSession needed."""
+    import os as _os
+
+    from mysql_tracker_spark.runner import write_input_manifest
+
+    d = tmp_path / "in"
+    d.mkdir()
+    (d / "b00001.parquet").write_bytes(b"")
+    (d / "b00002.jsonl").write_text("")
+    write_input_manifest(str(d))
+    for fmt, want in (
+        ("jsonl", "b00002.jsonl"),
+        ("typed", "b00001.parquet"),
+        ("wire", "b00001.parquet"),
+    ):
+        job = EventLogJob(None, str(d), str(tmp_path / "log"), source_format=fmt)
+        assert [[_os.path.basename(p) for p in g] for g in job.batch_files()] == [[want]]
