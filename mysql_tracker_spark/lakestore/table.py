@@ -463,6 +463,41 @@ def _residual_pred(rk: tuple, renames: list | None):
     return _bucket_expr(_current_name(col, sid, renames), n) == F.lit(child)
 
 
+def _data_rel(path: str) -> str:
+    """A manifest entry's path below the table's ``data/`` dir — the
+    key :func:`_scan_rel` yields for rows of that file."""
+    return path.split("/", 1)[1]
+
+
+def _scan_rel(df: DataFrame) -> F.Column:
+    """Path below the table's data dir of the file each row of the
+    parquet scan ``df`` came from, matching :func:`_data_rel`. Read
+    through ``metadataColumn`` so a user column named ``_metadata``
+    cannot shadow the file metadata. The table's data dir is the LAST
+    ``/data/`` of the URI, so a root containing ``/data/`` does not
+    shift the match; only the stripped root can hold percent-encoded
+    characters (entry paths are ``<stage>/__bucket=N/part-….parquet``)."""
+    return F.substring_index(
+        df.metadataColumn("_metadata").getField("file_path"), "/data/", -1
+    )
+
+
+def _seq_expr(df: DataFrame, entries: list[dict]) -> F.Column:
+    """Commit seq of each row of ``df`` (a scan of ``entries``): its
+    delta file's stamped seq, 0 for base files. The file -> seq map is
+    built as ONE SQL literal, so it costs one JVM call however many
+    delta files the scan covers."""
+    pairs = [
+        f"'{_data_rel(fe['path'])}', {int(fe.get('seq', 0))}L"
+        for fe in entries
+        if fe.get("delta")
+    ]
+    if not pairs:
+        return F.lit(0).cast("long")
+    seq_of = F.expr(f"map({', '.join(pairs)})")
+    return F.coalesce(F.element_at(seq_of, _scan_rel(df)), F.lit(0).cast("long"))
+
+
 def _bucket_expr(key_col: str | F.Column, n_buckets: int):
     """Bucket id of a key — DELIBERATELY Spark's own Murmur3 ``hash()``
     (seed 42) mod n_buckets: ``HashPartitioning`` places a row of
@@ -723,9 +758,11 @@ class LakeTable:
         aligned base read — byte-identical plan to the pure-COW table,
         so tables that never use MOR pay nothing.
 
-        Resolution shape at scale: one scan per live (schema_id, seq)
-        file group — the group count is the number of UNCOMPACTED delta
-        commits, which the compaction threshold bounds — then ONE
+        Resolution shape at scale: ONE scan per schema id (and per
+        residual filter of shared post-split entries) over the base and
+        delta files together — each row's commit seq is looked up from
+        its own file path (:func:`_seq_expr`), so planning cost does not
+        grow with the number of uncompacted delta commits — then ONE
         aggregation on the key with ``max_by(payload_struct, seq)``.
         max_by is a declarative aggregate, so hot keys collapse
         map-side before the shuffle, and the shuffle moves only the
@@ -766,40 +803,32 @@ class LakeTable:
                 renames=renames, cur_sid=cur_sid,
             )
 
-        # group files by (schema_id, seq, residual): every file in a
-        # group shares one parquet schema, one commit precedence level,
-        # and (for shared post-split entries) one row-ownership filter.
+        # ONE scan per (schema_id, residual): base and delta files of a
+        # schema share one parquet read schema (base files lack the
+        # tombstone column, which reads NULL), and each row takes its
+        # commit seq from its own file through one literal map lookup,
+        # so the plan's relation count does not grow with delta depth.
         # Complete sibling sets collapse to one unfiltered scan first —
         # same as the clean path — so a post-split MOR read doesn't pay
         # k passes over each shared base file
-        groups: dict[tuple, list[str]] = {}
+        groups: dict[tuple, list[dict]] = {}
         for fe in _collapse_shared(delta_entries):
-            k = (
-                fe["schema_id"],
-                fe.get("seq", 0),
-                bool(fe.get("delta")),
-                _residual_key(fe),
-            )
-            groups.setdefault(k, []).append(os.path.join(self.path, fe["path"]))
+            groups.setdefault((fe["schema_id"], _residual_key(fe)), []).append(fe)
         parts = []
-        for (sid, seq, is_delta, rk), paths in sorted(
-            groups.items(), key=lambda kv: (kv[0][0], kv[0][1], kv[0][2], kv[0][3] or ())
+        for (sid, rk), fes in sorted(
+            groups.items(), key=lambda kv: (kv[0][0], kv[0][1] or ())
         ):
             old = T.StructType.fromJson(schemas[str(sid)])
-            extra = (
-                [T.StructField(_TOMBSTONE, T.BooleanType())] if is_delta else None
-            )
             df, cols = self._aligned_scan(
-                spark, paths, old, target, extra,
+                spark,
+                [os.path.join(self.path, fe["path"]) for fe in fes],
+                old, target, [T.StructField(_TOMBSTONE, T.BooleanType())],
                 sid=sid, renames=renames, schemas=schemas, cur_sid=cur_sid,
             )
-            tomb = (
-                F.coalesce(F.col(_TOMBSTONE), F.lit(False))
-                if is_delta
-                else F.lit(False)
-            )
             part = df.select(
-                *cols, tomb.alias("__is_del"), F.lit(seq).alias("__seq")
+                *cols,
+                F.coalesce(F.col(_TOMBSTONE), F.lit(False)).alias("__is_del"),
+                _seq_expr(df, fes).alias("__seq"),
             )
             if rk is not None:
                 part = part.filter(_residual_pred(rk, renames))
@@ -946,10 +975,14 @@ class LakeTable:
         hash with the historical ``n_buckets``, or it opens buckets
         that did not exist (and silently misses the row). Null keys
         own no row (key columns are non-null) and place nowhere."""
-        m = self.manifest(version)
+        return self._place_keys(self.manifest(version), keys)
+
+    @classmethod
+    def _place_keys(cls, m: dict, keys: list) -> list[int]:
+        """:meth:`buckets_for_keys` under the layout of manifest ``m``."""
         ktype = next(
             f.dataType.typeName()
-            for f in self._schema_of(m).fields
+            for f in cls._schema_of(m).fields
             if f.name == m["bucket_by"]
         )
         return sorted(
@@ -971,9 +1004,11 @@ class LakeTable:
         actually touched the key (skipping is LWW-sound: a skipped file
         provably holds no row of these keys). The residual ``isin``
         filter is pushed to the parquet scan (hash collisions share a
-        bucket)."""
+        bucket). Keys are placed under the SAME manifest the scan
+        reads: a second read could land after a rescale/split commit and
+        place keys under a bucket count the scanned snapshot lacks."""
         m = self.manifest(version)
-        bks = self.buckets_for_keys(spark, keys, version=version)
+        bks = self._place_keys(m, keys)
         col = m["bucket_by"]
         klist = list(keys)
         df = self._read_state(
@@ -1355,7 +1390,7 @@ class LakeTable:
         bdf = spark.read.schema(bloom_schema).parquet(stage_dir)
         rows = (
             bdf.select(
-                F.input_file_name().alias("f"),
+                _scan_rel(bdf).alias("f"),
                 F.explode(
                     F.array(
                         *[
@@ -1370,17 +1405,9 @@ class LakeTable:
             .agg(F.collect_set("cp.p").alias("ps"))
             .collect()
         )
-        by_rel = {
-            fe["path"].split("/", 1)[1]: fe  # strip leading "data/"
-            for fes in out.values()
-            for fe in fes
-        }
+        by_rel = {_data_rel(fe["path"]): fe for fes in out.values() for fe in fes}
         for r in rows:
-            # rsplit: the TABLE's data dir is the last "/data/" in the
-            # URI — a table rooted under a path that itself contains
-            # "/data/" must not shift the match
-            rel = r["f"].rsplit("/data/", 1)[-1]
-            fe = by_rel.get(rel)
+            fe = by_rel.get(r["f"])
             if fe is not None:
                 fe.setdefault("bloom", {})[bloom_cols[r["c"]]] = _bloom_hex(
                     r["ps"]
@@ -2892,13 +2919,12 @@ class LakeTable:
                     issues.append(f"bloom column {c!r} in no schema")
                     continue
                 paths = [os.path.join(self.path, fe["path"]) for fe in fes]
+                bdf = spark.read.schema(
+                    T.StructType([T.StructField(c, ftype)])
+                ).parquet(*paths)
                 rows = (
-                    spark.read.schema(
-                        T.StructType([T.StructField(c, ftype)])
-                    )
-                    .parquet(*paths)
-                    .select(
-                        F.input_file_name().alias("f"),
+                    bdf.select(
+                        _scan_rel(bdf).alias("f"),
                         F.explode(
                             F.array(*_bloom_position_exprs(F.col(c)))
                         ).alias("p"),
@@ -2907,9 +2933,9 @@ class LakeTable:
                     .agg(F.collect_set("p").alias("ps"))
                     .collect()
                 )
-                by_rel = {fe["path"].split("/", 1)[1]: fe for fe in fes}
+                by_rel = {_data_rel(fe["path"]): fe for fe in fes}
                 for r in rows:
-                    fe = by_rel.get(r["f"].rsplit("/data/", 1)[-1])
+                    fe = by_rel.get(r["f"])
                     if fe is not None and not _bloom_contains(
                         fe["bloom"][c], r["ps"]
                     ):

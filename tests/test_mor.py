@@ -10,6 +10,7 @@ compaction, and the exactly-once/evolution invariants under MOR.
 """
 
 import os
+import re
 
 import pandas as pd
 import pytest
@@ -518,3 +519,134 @@ def test_read_where_all_conjunction_prunes_harder_than_either(spark, tmp_path):
     n_ts = len(t.read_where(spark, "ts", lo=lo_ts, hi=hi_ts).inputFiles())
     n_s = len(t.read_where(spark, "score", lo=lo_s, hi=hi_s).inputFiles())
     assert 0 < n_both <= min(n_ts, n_s) < len(t.live_files())
+
+
+# ---------------------------------------------------------------- one-scan
+# merge-on-read resolution: base and delta files of a schema id are read
+# by ONE parquet relation, each row's commit seq looked up from its file
+
+
+def _oracle(*batches):
+    """Sequential LWW oracle of change batches ``(k, i, v, __delete)``."""
+    live = {}
+    for b in batches:
+        for k, i, v, d in b:
+            if d:
+                live.pop((k, i), None)
+            else:
+                live[(k, i)] = v
+    return sorted((k, i, v) for (k, i), v in live.items())
+
+
+def _parquet_relations(df) -> int:
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    return len(re.findall(r"Relation \[[^\]]*\] parquet", plan))
+
+
+def test_mor_tombstone_beats_base_and_later_delta_resurrects(spark, tmp_path):
+    t = _mk(tmp_path / "t")
+    t.merge(spark, spark.createDataFrame(B1, CH_SCHEMA))
+    kill = [("a", 1, None, True)]
+    back = [("a", 1, "back", False)]
+    t.merge_mor(spark, spark.createDataFrame(kill, CH_SCHEMA))
+    v_dead = t.current_version()
+    t.merge_mor(spark, spark.createDataFrame(back, CH_SCHEMA))
+    assert _state(spark, t, version=v_dead) == _oracle(B1, kill)
+    assert _state(spark, t) == _oracle(B1, kill, back)
+    got = sorted(map(tuple, t.read_for_keys(spark, ["a"]).collect()))
+    assert got == [r for r in _oracle(B1, kill, back) if r[0] == "a"]
+
+
+def test_mor_one_scan_across_add_and_rename_column(spark, tmp_path):
+    """Deltas on both sides of an ADD COLUMN and a RENAME COLUMN: every
+    schema id's base and delta files resolve together, equal to the
+    COW twin."""
+    cow, mor = _mk(tmp_path / "cow"), _mk(tmp_path / "mor")
+    s2 = T.StructType(list(SCHEMA.fields) + [T.StructField("w", T.LongType())])
+    ch2 = T.StructType(list(s2.fields) + [CH_SCHEMA["__delete"]])
+    s3 = T.StructType([*SCHEMA.fields[:2], T.StructField("v2", T.StringType()), s2["w"]])
+    ch3 = T.StructType(list(s3.fields) + [CH_SCHEMA["__delete"]])
+    b2 = [("a", 1, "x3", 7, False), ("e", 4, "n", 8, False), ("b", 1, None, None, True)]
+    b3 = [("a", 2, "y3", 9, False), ("e", 4, None, None, True), ("f", 6, "f", 1, False)]
+    for t in (cow, mor):
+        t.merge(spark, spark.createDataFrame(B1, CH_SCHEMA))
+        write = t.merge if t is cow else t.merge_mor
+        write(spark, spark.createDataFrame(B2, CH_SCHEMA))
+        t.update_schema(s2)
+        write(spark, spark.createDataFrame(b2, ch2))
+        t.rename_column("v", "v2")
+        write(spark, spark.createDataFrame(b3, ch3))
+    assert len(mor.manifest()["schemas"]) == 3
+    assert _state(spark, mor) == _state(spark, cow)
+    keys = ["a", "e", "f"]
+    assert sorted(map(tuple, mor.read_for_keys(spark, keys).collect())) == sorted(
+        map(tuple, cow.read_for_keys(spark, keys).collect())
+    )
+
+
+def test_mor_deltas_over_post_split_shared_entries(spark, tmp_path):
+    t = _mk(tmp_path / "t")
+    t.merge(spark, spark.createDataFrame(B1 + [("z", 7, "q", False)], CH_SCHEMA))
+    t.split_buckets(2)
+    assert t.shared_buckets()
+    t.merge_mor(spark, spark.createDataFrame(B2, CH_SCHEMA))
+    t.merge_mor(spark, spark.createDataFrame(B3, CH_SCHEMA))
+    want = _oracle(B1 + [("z", 7, "q", False)], B2, B3)
+    assert _state(spark, t) == want
+    # a point read opens a partial sibling set: residual filters engage
+    for key in ("a", "z"):
+        got = sorted(map(tuple, t.read_for_keys(spark, [key]).collect()))
+        assert got == [r for r in want if r[0] == key]
+
+
+def test_mor_one_scan_under_encoded_table_root(spark, tmp_path):
+    """File URIs are percent-encoded: a root holding '/data/', a space
+    and '%' must still map every scanned row to its manifest entry (the
+    seq lookup and the bloom stamping share that mapping)."""
+    t = LakeTable.create(
+        str(tmp_path / "data" / "a b%25c" / "t"), SCHEMA, ["k", "i"], "k",
+        n_buckets=2, bloom_cols=["v"],
+    )
+    t.merge(spark, spark.createDataFrame(B1, CH_SCHEMA))
+    for b in (B2, B3):
+        t.merge_mor(spark, spark.createDataFrame(b, CH_SCHEMA))
+    assert _state(spark, t) == _oracle(B1, B2, B3)
+    entries = [fe for fs in t.manifest()["buckets"].values() for fe in fs]
+    assert all("v" in fe.get("bloom", {}) for fe in entries)
+    assert t.validate(spark, deep=True)["ok"]
+
+
+def test_mor_user_column_named_metadata(spark, tmp_path):
+    s = T.StructType([*SCHEMA.fields[:2], T.StructField("_metadata", T.StringType())])
+    ch = T.StructType(list(s.fields) + [CH_SCHEMA["__delete"]])
+    cow, mor = (
+        LakeTable.create(str(tmp_path / n), s, ["k", "i"], "k", n_buckets=2)
+        for n in ("cow", "mor")
+    )
+    for b in (B1, B2, B3):
+        cow.merge(spark, spark.createDataFrame(b, ch))
+        mor.merge_mor(spark, spark.createDataFrame(b, ch))
+    assert _state(spark, mor) == _state(spark, cow) == _oracle(B1, B2, B3)
+
+
+def test_mor_read_plans_one_relation_per_schema_id(spark, tmp_path):
+    """Plan shape next to the pure-COW one: a resolution scope plans one
+    parquet relation per schema id, however many delta commits it
+    holds."""
+    t = LakeTable.create(str(tmp_path / "t"), SCHEMA, ["k", "i"], "k", n_buckets=1)
+    t.merge(spark, spark.createDataFrame(B1, CH_SCHEMA))
+    for n_deltas, b in enumerate((B2, B3, [("a", 1, "x4", False)]), start=1):
+        t.merge_mor(spark, spark.createDataFrame(b, CH_SCHEMA))
+        if n_deltas in (1, 3):
+            assert t.delta_counts() == {0: n_deltas}
+            assert _parquet_relations(t.read(spark)) == 1
+            assert _parquet_relations(t.read_for_keys(spark, ["a"])) == 1
+    t.update_schema(T.StructType(list(SCHEMA.fields) + [T.StructField("w", T.LongType())]))
+    t.merge_mor(
+        spark,
+        spark.createDataFrame(
+            [("d", 9, "d2", 1, False)], "k string, i int, v string, w long, __delete boolean"
+        ),
+    )
+    assert _parquet_relations(t.read(spark)) == 2
+    assert _parquet_relations(t.read_for_keys(spark, ["d"])) == 2

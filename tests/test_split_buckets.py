@@ -443,3 +443,37 @@ def test_point_read_opens_only_the_parent_file_post_split(spark, tmp_path):
         for fe in t.manifest()["buckets"][str(b)]
     }
     assert opened <= manifest_paths
+
+
+def test_read_for_keys_places_keys_under_the_scanned_manifest(spark, tmp_path):
+    """A rescale committing between the point read's manifest read and
+    its key placement must not re-place keys under the new bucket count
+    while the old snapshot's buckets are scanned (rows would go missing
+    silently): keys are placed from the one manifest the scan reads."""
+    t, base = _mk(spark, tmp_path / "t", n_buckets=4)
+    head = t.manifest()
+    real = t.manifest
+    t.rescale_buckets(spark, 7)
+    calls = {"n": 0}
+
+    def advancing(version=None):
+        calls["n"] += 1
+        return head if calls["n"] == 1 else real(version)
+
+    # a key whose bucket moves: placed under 7 buckets, it would be
+    # looked for in a bucket of the 4-bucket snapshot that lacks it
+    key = next(
+        k
+        for k in sorted({k for k, _ in base})
+        if t.buckets_for_keys(spark, [k]) != t.buckets_for_keys(spark, [k], head["version"])
+    )
+    t.manifest = advancing
+    try:
+        got = {
+            (r["conv_id"], r["turn_idx"]): r["text"]
+            for r in t.read_for_keys(spark, [key]).collect()
+        }
+    finally:
+        t.manifest = real
+    assert calls["n"] >= 1
+    assert got == {kt: v for kt, v in base.items() if kt[0] == key} != {}

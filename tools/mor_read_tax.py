@@ -5,8 +5,9 @@ Builds one table (uniform keys), then holds TABLE CONTENT FIXED while
 varying how many uncompacted delta commits the current snapshot
 carries (0 = fully compacted base, then k ∈ {4, 8, 16} delta layers,
 each produced by re-applying update batches without compaction).
-Measures the wall of a full `read()` (LWW resolution: one union of
-per-(schema,seq) scans + one max_by key agg) and of a bucket-pruned
+Measures the wall of a full `read()` (LWW resolution: one parquet
+scan per schema id over base and delta files, each row's commit seq
+looked up from its file, + one max_by key agg) and of a bucket-pruned
 `read_for_keys` point lookup at each delta depth, interleaved with a
 compacted-baseline read per depth to cancel host drift. Digest
 equality across depths is asserted (same live rows whatever the
