@@ -57,13 +57,6 @@ class JobConfig:
     # "raise" = operator decision (default), "ignore" = skip like the
     # reference (it only invalidates its meta cache)
     on_destructive_ddl: str = "raise"
-    # hot-key handling: 0 = packed-argmax LWW (map-side combine) with
-    # auto skew escalation; N>0 = explicit two-phase salted LWW (local
-    # max per (key, salt) -> global max per key) with N salts, for a
-    # single hot conversation flooding input partitions faster than
-    # map-side partial aggregation collapses it (semantics identical,
-    # see operators/dedup.py)
-    n_salts: int = 0
     # dead-letter audit (wire source only): when set, each batch
     # persists its corrupt frames (truncated / bad_crc / malformed,
     # verbatim payload + reason) here instead of only dropping them;

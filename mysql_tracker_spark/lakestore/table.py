@@ -703,9 +703,10 @@ class LakeTable:
         old: T.StructType,
         target: T.StructType,
         extra_fields: list[T.StructField] | None = None,
+        *,
+        schemas: dict,
         sid: int = 0,
         renames: list | None = None,
-        schemas: dict | None = None,
         cur_sid: int | None = None,
     ):
         """One schema-group parquet scan plus the column list aligning
@@ -723,11 +724,8 @@ class LakeTable:
         )
         df = spark.read.schema(read_schema).parquet(*paths)
         old_names = {f.name for f in old.fields}
-        if schemas is not None:
-            cs = cur_sid if cur_sid is not None else max(int(s) for s in schemas)
-            src = _source_map(target, sid, cs, schemas, renames)
-        else:
-            src = {f.name: _source_name(f.name, sid, renames) for f in target.fields}
+        cs = cur_sid if cur_sid is not None else max(int(s) for s in schemas)
+        src = _source_map(target, sid, cs, schemas, renames)
         cols = [
             F.col(src[f.name]).cast(f.dataType).alias(f.name)
             if src[f.name] is not None and src[f.name] in old_names

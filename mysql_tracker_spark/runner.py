@@ -235,15 +235,15 @@ class CdcApplyJob:
     OWNER_HEARTBEAT_S = 60.0
     OWNER_STALE_S = 900.0
 
-    # Auto skew escalation (n_salts=0 only): when a batch's collapse
-    # ratio (applied rows / LWW winners) crosses AUTO_SALT_RATIO, the
-    # NEXT batch switches to the explicit two-phase salted LWW with
-    # AUTO_SALTS salts (measured ~1.5x faster under a single-key
-    # flood); it drops back when the ratio does. The ratio costs
-    # nothing: rows_applied comes from the manifest pass, winners from
-    # the delta files' parquet footers (driver-side metadata reads, no
-    # job). Normal workloads sit at ratio ~1-5, floods at 10^2-10^3+,
-    # so the regimes are far apart and no hysteresis is needed.
+    # Auto skew escalation: when a batch's collapse ratio (applied
+    # rows / LWW winners) crosses AUTO_SALT_RATIO, the NEXT batch
+    # switches to the explicit two-phase salted LWW with AUTO_SALTS
+    # salts (measured ~1.5x faster under a single-key flood); it drops
+    # back when the ratio does. The ratio costs nothing: rows_applied
+    # comes from the manifest pass, winners from the delta files'
+    # parquet footers (driver-side metadata reads, no job). Normal
+    # workloads sit at ratio ~1-5, floods at 10^2-10^3+, so the
+    # regimes are far apart and no hysteresis is needed.
     AUTO_SALT_RATIO = 32.0
     AUTO_SALTS = 16
 
@@ -568,12 +568,12 @@ class CdcApplyJob:
         checkpoint and reloads from the live head
         (``HandlerMagpieKafka.java:584-594``). Here: the committed
         watermark must fall inside the retained input's (file,pos)
-        range. If it does not:
+        range. If it does not, ``reset_policy`` (the
+        ``JobConfig.on_invalid_position`` values) decides:
 
         * ``"fail"`` (default): raise — an operator must
           decide, because resetting silently breaks at-least-once.
-        * ``"earliest"`` (or ``"reset_earliest"``, the
-          ``on_invalid_position`` spelling): clear the watermark and replay
+        * ``"reset_earliest"``: clear the watermark and replay
           everything retained (the reference's delete-checkpoint path;
           idempotent MERGE makes the replay safe, so unlike the
           reference this loses nothing that is still retained).
@@ -589,6 +589,10 @@ class CdcApplyJob:
 
         Returns {valid, wm, lo, hi, action}.
         """
+        if reset_policy not in ("fail", "reset_earliest"):
+            raise ValueError(
+                f"reset_policy must be 'fail' or 'reset_earliest', got {reset_policy!r}"
+            )
         if self.table is None:
             self.prepare()
         wm_file, wm_pos, _ = self.watermark()
@@ -630,14 +634,14 @@ class CdcApplyJob:
         if valid:
             return {"valid": True, "wm": wm, "lo": lo, "hi": hi, "action": "none",
                     "probe_files": n_probe}
-        if reset_policy in ("earliest", "reset_earliest"):
+        if reset_policy == "reset_earliest":
             self.table.set_properties({"offset_file": "", "offset_pos": ""})
             # empty strings read back as no watermark
             return {"valid": False, "wm": wm, "lo": lo, "hi": hi, "action": "reset",
                     "probe_files": n_probe}
         raise ValueError(
             f"committed watermark {wm} outside retained input range [{lo}, {hi}] "
-            "(reference errno-1236 analogue); the 'earliest' policy would "
+            "(reference errno-1236 analogue); the 'reset_earliest' policy would "
             "clear the checkpoint and replay retained input"
         )
 
@@ -1049,7 +1053,7 @@ class CdcApplyJob:
         # metadata reads, no Spark job) -> collapse ratio -> auto skew
         # escalation decision for the NEXT batch (see AUTO_SALT_RATIO)
         stats.rows_winners = _parquet_dir_rows(delta_dir)
-        if self.cfg.n_salts == 0 and stats.rows_winners:
+        if stats.rows_winners:
             self._escalated = m.n_dml / stats.rows_winners >= self.AUTO_SALT_RATIO
 
         props = {
@@ -1168,19 +1172,18 @@ class CdcApplyJob:
         """LWW dedup: one row per key, the payload of the event latest
         in log order; records the variant that ran."""
         cols = ["op", payload]
-        if self.cfg.n_salts > 0 or self._escalated:
-            # explicit two-phase salted LWW: configured (n_salts), or
-            # AUTO skew escalation — the previous batch's collapse ratio
-            # crossed AUTO_SALT_RATIO, a single-key flood regime where
-            # it measures ~1.5x faster than the default kernels (BENCH/
+        if self._escalated:
+            # explicit two-phase salted LWW under AUTO skew escalation:
+            # the previous batch's collapse ratio crossed
+            # AUTO_SALT_RATIO, a single-key flood regime where it
+            # measures ~1.5x faster than the default kernels (BENCH/
             # BASELINE.md hot-key section). Semantics identical
             # (property-tested); de-escalates as soon as a batch's ratio
             # drops back under the threshold.
             from .operators.dedup import lww_latest_salted
 
-            n = self.cfg.n_salts or self.AUTO_SALTS
-            stats.lww_variant = f"salted{n}" if self.cfg.n_salts else f"auto_salted{n}"
-            return lww_latest_salted(keyed, self.key_cols, cols, n)
+            stats.lww_variant = f"auto_salted{self.AUTO_SALTS}"
+            return lww_latest_salted(keyed, self.key_cols, cols, self.AUTO_SALTS)
         if payload == "after_kv":
             # packed kv string: packed-argmax partial+final aggregation,
             # hot keys collapse map-side instead of flooding one shuffle

@@ -71,7 +71,6 @@ def test_job_config_every_field_roundtrips_into_the_job(tmp_path):
         start_pos=42,
         on_invalid_position="reset_earliest",
         on_destructive_ddl="ignore",
-        n_salts=5,
         quarantine_dir="/q",
         write_mode="mor",
         mor_compact_threshold=3,

