@@ -281,6 +281,8 @@ class CdcApplyJob:
         # auto skew escalation state (see AUTO_SALT_RATIO)
         self._escalated = False
         self.table: LakeTable | None = None
+        # the last startup probe's result (see probe_position)
+        self.position_probe: dict | None = None
 
     @classmethod
     def from_config(cls, spark: SparkSession, cfg: JobConfig, **changes) -> "CdcApplyJob":
@@ -645,6 +647,16 @@ class CdcApplyJob:
             "clear the checkpoint and replay retained input"
         )
 
+    def probe_position(self) -> None:
+        """The startup position probe the batch :meth:`run` and the
+        streaming front-end share: :meth:`validate_position` under
+        ``cfg.on_invalid_position``, skipped when that is ``None``. The
+        result ({valid, wm, lo, hi, action}) is kept on
+        ``self.position_probe``, so a ``reset_earliest`` replay stays
+        visible after the run."""
+        if self.cfg.on_invalid_position is not None:
+            self.position_probe = self.validate_position(self.cfg.on_invalid_position)
+
     def _handle_ddl(self, ddl_rows) -> tuple[str, int] | None:
         """Apply a batch's DDL rows (already sorted in log order) with
         the full reference event-class vocabulary
@@ -974,8 +986,7 @@ class CdcApplyJob:
         mid-stream (O2 replay)."""
         if self.table is None:
             self.prepare()
-        if self.cfg.on_invalid_position is not None:
-            self.validate_position(self.cfg.on_invalid_position)
+        self.probe_position()
         groups = self.batch_files()[:max_batches]
         return [self.apply_batch(i, group) for i, group in enumerate(groups)]
 

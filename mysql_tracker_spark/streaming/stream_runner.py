@@ -218,6 +218,9 @@ class CdcStreamJob(_DirDrainStreamJob):
 
     def _prepare(self) -> None:
         self.job.prepare()
+        # the same on_invalid_position probe as the batch run(), before
+        # the backlog drain reads the watermark
+        self.job.probe_position()
 
     def _cursor(self) -> str:
         # durable cursor: the table's input_file_end property,

@@ -298,6 +298,7 @@ def main(argv=None) -> None:
             config=cfg,
         )
         stats = stream.run_available()
+        job = stream.job
     else:
         job = CdcApplyJob.from_config(spark, cfg)
         if args.bootstrap_snapshot is not None:
@@ -305,6 +306,8 @@ def main(argv=None) -> None:
             v = job.bootstrap_snapshot(spark.read.parquet(snap_dir), bfile, int(bpos))
             _log(bootstrap_version=v, fence=[bfile, int(bpos)])
         stats = job.run(max_batches=args.max_batches)
+    if job.position_probe is not None:
+        _log(position_probe=job.position_probe)
 
     total = 0
     for s in stats:

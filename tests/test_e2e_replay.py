@@ -298,9 +298,21 @@ def test_invalid_position_detect_and_reset(spark, stream, tmp_path):
     assert probe_fail and "outside retained" in probe_fail
     with pytest.raises(ValueError, match="reset_policy"):
         stale.validate_position(reset_policy="earliest")  # one spelling only
-    res = stale.validate_position(reset_policy="reset_earliest")
-    assert res["action"] == "reset"
-    assert stale.watermark()[0] is None  # checkpoint cleared
+    # the streaming front-end runs the configured probe before it
+    # drains anything, as the batch run() does
+    from mysql_tracker_spark.streaming import CdcStreamJob
+
+    tail = CdcStreamJob(
+        spark, d2, p2, str(tmp_path / "ckpt"), n_buckets=8, on_invalid_position="fail"
+    )
+    with pytest.raises(ValueError, match="outside retained"):
+        tail.run_available()
+    assert stale.watermark() == wm  # nothing applied
+    # the configured reset keeps its probe result on the job
+    reset = CdcApplyJob(spark, d2, p2, n_buckets=8, on_invalid_position="reset_earliest")
+    reset.probe_position()
+    assert reset.position_probe["action"] == "reset"
+    assert reset.watermark()[0] is None  # checkpoint cleared
 
 
 def test_schema_evolved_mid_stream(spark, stream, tmp_path):

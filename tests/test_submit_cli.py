@@ -439,10 +439,11 @@ def test_spark_submit_streaming_gtid_set_fence_carries_across_batches(tmp_path):
 
 def _submit_gtid_fence_with_incident(tmp_path, seed: int, streaming: bool):
     """Apply a 2-batch MySQL-flavored wire stream through spark-submit
-    under --gtid-set and --incident-policy record, and check the result
-    against the suffix oracle. The fence is the median transaction,
-    or under ``streaming`` the one whose rows straddle the batch cut.
-    Returns the table path and the fence's last transaction."""
+    under --gtid-set, --incident-policy record and --on-invalid-position
+    fail, and check the result against the suffix oracle. The fence is
+    the median transaction, or under ``streaming`` the one whose rows
+    straddle the batch cut. Returns the table path and the fence's last
+    transaction."""
     import pyarrow.parquet as pq
 
     from mysql_tracker_spark.sources.binlog_gen import (
@@ -476,11 +477,20 @@ def _submit_gtid_fence_with_incident(tmp_path, seed: int, streaming: bool):
          "--input-dir", in_dir, "--table-path", tbl, "--source-format", "wire",
          "--n-buckets", "4",
          "--gtid-set", f"{SERVER_UUID}:1-{mid}",
-         "--incident-policy", "record"]
+         "--incident-policy", "record", "--on-invalid-position", "fail"]
         + (["--streaming", "--checkpoint", str(tmp_path / "ckpt")] if streaming else []),
         cwd=str(tmp_path),
     )
     assert res.returncode == 0, res.stderr[-4000:]
+    # the position probe runs (and is logged) in batch and streaming
+    # mode alike; a fresh table has no watermark to invalidate.
+    # spark-submit relays the driver's stderr on its stdout
+    probes = [
+        json.loads(l)["position_probe"]
+        for l in res.stdout.splitlines()
+        if l.startswith('{"position_probe"')
+    ]
+    assert probes == [{"valid": True, "wm": None, "action": "none"}], res.stdout[-4000:]
 
     import duckdb
     import pandas as pd
